@@ -193,13 +193,12 @@ object Bench {
       .groupBy("s").count().count())
     // A failing query must be reported as failed, not counted as ~0 s.
     var failed = List.empty[String]
-    // Dev-only subset filter (comma-separated names); unset for the
-    // driver's full run.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
-    only.foreach { o =>
+    // Alphabetical run order with last-consumer release points
+    // (VERDICT r12 ask #2): executor storage returns to baseline between
+    // resource groups instead of ratcheting across the roster.
+    val schedule = Queries.runSchedule()
+    val selected = schedule.entries
+    schedule.only.foreach { o =>
       val unknown = o -- selected.map(_._1).toSet
       if (unknown.nonEmpty)
         System.err.println(s"[bench] SPARK_GRAFT_ONLY names match no query: " +
@@ -207,15 +206,6 @@ object Bench {
       if (selected.isEmpty)
         System.err.println("[bench] SPARK_GRAFT_ONLY selected ZERO queries")
     }
-    // Last-consumer release schedule (VERDICT r12 ask #2): the run
-    // order is alphabetical, so each shared resource is released right
-    // after its last SELECTED consumer finishes — executor storage
-    // returns to baseline between resource groups instead of
-    // ratcheting across 251 entries.
-    val releaseAfter: Map[String, Seq[String]] =
-      Queries.sharedConsumers.toSeq.flatMap { case (res, consumers) =>
-        selected.map(_._1).filter(consumers).lastOption.map(_ -> res)
-      }.groupBy(_._1).map { case (k, v) => k -> v.map(_._2) }
     // min-of-N mode (SPARK_GRAFT_BENCH_REPEATS=N). Default 2 since r17
     // (VERDICT r15 #7 / r16 #6: the full-roster repeat, carried two
     // rounds): a single-run bench makes round-over-round grading
@@ -241,54 +231,37 @@ object Bench {
     // build failure falls through to the consumer, which rebuilds
     // inline and reports the failure as its own.
     var buildTimes = Seq.empty[(String, Double)]
-    // Transitive closure over the declared build prerequisites, so a
-    // triggered resource's upstream rebuilds get their OWN `_build_`
-    // lines instead of being absorbed into the downstream line
-    // (ADVICE r14 #5: under a subset run, ensureShared("dedup_cc")
-    // after doc_shingles' release point silently re-paid the shingle
-    // build inside `_build_dedup_cc`). In the full alphabetical roster
-    // the transitive consumer sets make this a no-op; it matters for
-    // SPARK_GRAFT_ONLY subsets and any future non-transitive resource.
-    def prereqClosure(r: String): Set[String] = {
-      val direct = Queries.sharedPrereqs.getOrElse(r, Nil).toSet
-      direct ++ direct.flatMap(prereqClosure)
-    }
-    def ensureBuildsFor(name: String): Unit = {
-      val triggered = Queries.sharedBuildOrder
-        .filter(r => Queries.sharedConsumers(r)(name) &&
-          !Queries.isSharedBuilt(r, spark, sfDir)).toSet
-      Queries.sharedBuildOrder
-        .filter(r => (triggered(r) ||
-            triggered.exists(t => prereqClosure(t)(r))) &&
-          !Queries.isSharedBuilt(r, spark, sfDir))
-        .foreach { r =>
-          val bStart = System.currentTimeMillis() / 1000.0
-          val bLoad = load1()
-          val bSh = (mShRead.get, mShWrite.get, mSpill.get)
-          val bSt = mStages.get
-          val t0 = System.nanoTime()
-          try {
-            Queries.ensureShared(r, spark, sfDir)
-            val t = (System.nanoTime() - t0) / 1e9
-            settle()
-            buildTimes :+= (s"_build_$r" -> t)
-            telemetry += s"_build_$r" -> Telemetry(bStart, bLoad,
-              (mShRead.get - bSh._1) / 1048576.0,
-              (mShWrite.get - bSh._2) / 1048576.0,
-              (mSpill.get - bSh._3) / 1048576.0,
-              mStages.get - bSt,
-              storageBytes() / 1048576.0)
-          } catch {
-            // NonFatal only (ADVICE r14 #4): an OutOfMemoryError here
-            // means a possibly-corrupted JVM — let it propagate and
-            // fail the bench loudly rather than re-surface later as a
-            // confusing consumer-side rebuild failure.
-            case scala.util.control.NonFatal(e) => System.err.println(
-              s"[bench] _build_$r failed (consumer $name rebuilds " +
-                s"inline): ${e.getMessage}")
-          }
+    // Every unbuilt resource the entry needs, upstream first, so an
+    // upstream rebuild gets its OWN `_build_` line instead of being
+    // absorbed into the downstream one (ADVICE r14 #5).
+    def ensureBuildsFor(name: String): Unit =
+      Queries.unbuiltSharedFor(name, spark, sfDir).foreach { r =>
+        val bStart = System.currentTimeMillis() / 1000.0
+        val bLoad = load1()
+        val bSh = (mShRead.get, mShWrite.get, mSpill.get)
+        val bSt = mStages.get
+        val t0 = System.nanoTime()
+        try {
+          Queries.ensureShared(r, spark, sfDir)
+          val t = (System.nanoTime() - t0) / 1e9
+          settle()
+          buildTimes :+= (s"_build_$r" -> t)
+          telemetry += s"_build_$r" -> Telemetry(bStart, bLoad,
+            (mShRead.get - bSh._1) / 1048576.0,
+            (mShWrite.get - bSh._2) / 1048576.0,
+            (mSpill.get - bSh._3) / 1048576.0,
+            mStages.get - bSt,
+            storageBytes() / 1048576.0)
+        } catch {
+          // NonFatal only (ADVICE r14 #4): an OutOfMemoryError here
+          // means a possibly-corrupted JVM — let it propagate and
+          // fail the bench loudly rather than re-surface later as a
+          // confusing consumer-side rebuild failure.
+          case scala.util.control.NonFatal(e) => System.err.println(
+            s"[bench] _build_$r failed (consumer $name rebuilds " +
+              s"inline): ${e.getMessage}")
         }
-    }
+      }
     // Per-entry repeat-time vectors (VERDICT r18 #7): min-of-N stays
     // the contract "value"/"queries" series, but single totals proved
     // noise-hostage on this box (six identical r18 runs spanned
@@ -310,8 +283,8 @@ object Bench {
     // so every build appears exactly once in the charged total.
     def drainSetupBuilds(): Seq[(String, Double)] = {
       var out = List.empty[(String, Double)]
-      var e = Queries.setupBuildLog.poll()
-      while (e != null) { out ::= e; e = Queries.setupBuildLog.poll() }
+      var e = KeyedCache.setupBuildLog.poll()
+      while (e != null) { out ::= e; e = KeyedCache.setupBuildLog.poll() }
       out.reverse
     }
     drainSetupBuilds() // discard anything from warmup
@@ -365,8 +338,7 @@ object Bench {
       }
       // Release every shared resource whose last selected consumer is
       // this entry — AFTER all repeats, so a repeat never rebuilds.
-      releaseAfter.getOrElse(name, Nil)
-        .foreach(Queries.releaseShared(_, spark, sfDir))
+      schedule.releaseAfter(name, spark, sfDir)
       settle()
       telemetry += name -> Telemetry(entryStart, loadAtStart,
         (mShRead.get - sh0._1) / 1048576.0,
@@ -413,9 +385,7 @@ object Bench {
         // r13's q_jaccard_prefix rerun (9.2 s > its 7.6 s first shot)
         // showed an inline shingle rebuild muddying exactly the
         // signal the pass exists to produce.
-        try Queries.sharedBuildOrder
-          .filter(r => Queries.sharedConsumers(r)(name) &&
-            !Queries.isSharedBuilt(r, spark, sfDir))
+        try Queries.unbuiltSharedFor(name, spark, sfDir)
           .foreach(Queries.ensureShared(_, spark, sfDir))
         catch { case scala.util.control.NonFatal(e) => System.err.println(
           s"[bench] rerun prebuild for $name failed (rerun rebuilds " +
@@ -449,8 +419,7 @@ object Bench {
               s"stages=${mStages.get - rrSt0}")
         } catch { case scala.util.control.NonFatal(e) => System.err.println(
           s"[bench] $name rerun failed (first-shot stands): ${e.getMessage}") }
-        releaseAfter.getOrElse(name, Nil)
-          .foreach(Queries.releaseShared(_, spark, sfDir))
+        schedule.releaseAfter(name, spark, sfDir)
       }
     }
     Queries.releaseAllShared(spark, sfDir)

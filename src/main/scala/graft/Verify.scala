@@ -21,30 +21,17 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // Dev-only subset filter (comma-separated names), mirroring Bench;
-    // unset for the driver's full run. Filters the oracle dump too, so
-    // check.py over the subset outDir stays consistent.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    def keep(name: String): Boolean = only.forall(_.contains(name))
-    // Alphabetical like Bench (a Map's iteration order is arbitrary):
-    // deterministic run order is what lets the last-consumer release
-    // schedule below free each shared materialization's executor
-    // storage as soon as its final selected consumer has written.
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter(e => keep(e._1))
-    val releaseAfter: Map[String, Seq[String]] =
-      Queries.sharedConsumers.toSeq.flatMap { case (res, consumers) =>
-        selected.map(_._1).filter(consumers).lastOption.map(_ -> res)
-      }.groupBy(_._1).map { case (k, v) => k -> v.map(_._2) }
-    selected.foreach { case (name, fn) =>
+    // The same schedule as Bench; its SPARK_GRAFT_ONLY subset filters
+    // the oracle dump too, so check.py over a subset outDir stays
+    // consistent.
+    val schedule = Queries.runSchedule()
+    schedule.entries.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      releaseAfter.getOrElse(name, Nil)
-        .foreach(Queries.releaseShared(_, spark, sfDir))
+      schedule.releaseAfter(name, spark, sfDir)
     }
     Queries.releaseAllShared(spark, sfDir)
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -59,7 +46,7 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql.filter(e => keep(e._1))
+    val json = SparkEntry.oracleSql.filter(e => schedule.keep(e._1))
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
