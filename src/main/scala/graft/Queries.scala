@@ -13530,10 +13530,10 @@ ORDER BY mode""")),
         // next #5): queries fan out in parallel exactly like the
         // ensemble row below — per-query seeded samplers keep the row
         // deterministic under any schedule, and concurrent inference on
-        // one Transformer is safe because forward outputs never read
-        // the layer caches (xCache/xhat/attnCache are written for
-        // backward, which inference never calls) and each sampler owns
-        // its input buffer and rng. Estimates differ from the r20
+        // one Transformer is safe: forwardEncoded writes no model field
+        // (only the training forward keeps backward caches), whatever
+        // the callers' batch sizes, and each sampler owns its input
+        // buffer and rng. Estimates differ from the r20
         // sequential-shared-rng row only in which seeded draws each
         // query consumes (within estimator variance; no-oracle entry).
         val (tModel, tMeta) = lineitemTransformer(s, d)

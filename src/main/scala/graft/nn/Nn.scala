@@ -48,17 +48,34 @@ final class Adam(params: Seq[Param], var lr: Float = 2e-4f,
 
 private[nn] object Nn {
   private val cores = Runtime.getRuntime.availableProcessors()
-  /** Parallelism for a [batch] x [work-per-row] dense op: only worth
-    * forking when there's real work (≥ ~1M MACs) to amortize it.
-    * (A work-scaled chunk count — one chunk per ~2M MACs — was measured
-    * 25-30% SLOWER on the transformer train loop: the common-pool forks
-    * are cheap enough that core-count chunks win once past the
-    * threshold.) */
+  /** What one `math.exp`/`math.tanh` call costs, counted in MACs, for
+    * callers whose per-row work is mostly transcendental calls (GeLU,
+    * softmax): ~30-60 ns a call vs ~1.2 ns a scalar MAC. */
+  val TranscendentalMacs = 32
+  /** Parallelism for an op over `batch` independent rows, where
+    * `workPerRow` is one row's cost in MACs: dIn·dOut for a dense layer,
+    * ~8·d for a LayerNorm row, `TranscendentalMacs` per GeLU element,
+    * and for attention one sequence's scores, softmax `exp`s and context.
+    * Only worth forking when there's real work (≥ ~1M MACs) to amortize
+    * it. (A work-scaled chunk count — one chunk per ~2M MACs — was
+    * measured 25-30% SLOWER on the transformer train loop: the
+    * common-pool forks are cheap enough that core-count chunks win once
+    * past the threshold.) */
   def chunks(batch: Int, workPerRow: Int): Int = {
     val totalWork = batch.toLong * workPerRow
     if (totalWork < (1L << 20) || batch < 64) 1
     else math.min(math.min(cores, 16), batch / 32).max(1)
   }
+
+  /** Runs `body(c, r0, r1)` for each of `chunks` disjoint row ranges
+    * `[r0, r1)` that together cover `[0, n)` — in parallel on the common
+    * pool when `chunks > 1`, inline otherwise. `c` is the chunk index,
+    * for callers that keep per-chunk buffers. */
+  def forRows(n: Int, chunks: Int)(body: (Int, Int, Int) => Unit): Unit =
+    if (chunks <= 1) body(0, 0, n)
+    else java.util.stream.IntStream.range(0, chunks).parallel().forEach { c =>
+      body(c, n * c / chunks, n * (c + 1) / chunks)
+    }
 }
 
 /** The train-loop surface shared by both model families (MADE and the

@@ -75,34 +75,67 @@ final class Transformer(
     val b = new Param(new Array[Float](dOut))
     private var xCache: Array[Float] = null
 
-    private def forwardRange(x: Array[Float], out: Array[Float],
-        r0: Int, r1: Int): Unit = {
-      var r = r0
-      while (r < r1) {
-        val xo = r * dIn; val oo = r * dOut
-        var o = 0
-        while (o < dOut) { out(oo + o) = b.data(o); o += 1 }
+    /** Rows `ra` and `rb` (`rb == ra` for an odd last row), register-tiled:
+      * 2 rows × 8 outputs stay in 16 local accumulators for the whole walk
+      * over `i`, so each weight load feeds two MACs and no partial sum
+      * goes back to memory. Every output is still
+      * `b_o + x_0·w_0o + x_1·w_1o + …` added in ascending `i`, the order
+      * of a one-row axpy loop, so the bits are the same as that loop's.
+      * Zero inputs need no skip branch: adding x·w = ±0 leaves a partial
+      * sum unchanged, since one that starts at the bias is never −0. */
+    private def forwardRows(x: Array[Float], out: Array[Float],
+        ra: Int, rb: Int): Unit = {
+      val wd = w.data; val bd = b.data
+      val xa = ra * dIn; val xb = rb * dIn
+      val oa = ra * dOut; val ob = rb * dOut
+      var o = 0
+      while (o + 8 <= dOut) {
+        var a0 = bd(o); var a1 = bd(o + 1); var a2 = bd(o + 2); var a3 = bd(o + 3)
+        var a4 = bd(o + 4); var a5 = bd(o + 5); var a6 = bd(o + 6); var a7 = bd(o + 7)
+        var c0 = a0; var c1 = a1; var c2 = a2; var c3 = a3
+        var c4 = a4; var c5 = a5; var c6 = a6; var c7 = a7
         var i = 0
+        var wi = o
         while (i < dIn) {
-          val xv = x(xo + i)
-          if (xv != 0f) {
-            val wo = i * dOut
-            o = 0
-            while (o < dOut) { out(oo + o) += xv * w.data(wo + o); o += 1 }
-          }
+          val u = x(xa + i); val v = x(xb + i)
+          val w0 = wd(wi); val w1 = wd(wi + 1); val w2 = wd(wi + 2); val w3 = wd(wi + 3)
+          val w4 = wd(wi + 4); val w5 = wd(wi + 5); val w6 = wd(wi + 6); val w7 = wd(wi + 7)
+          a0 += u * w0; a1 += u * w1; a2 += u * w2; a3 += u * w3
+          a4 += u * w4; a5 += u * w5; a6 += u * w6; a7 += u * w7
+          c0 += v * w0; c1 += v * w1; c2 += v * w2; c3 += v * w3
+          c4 += v * w4; c5 += v * w5; c6 += v * w6; c7 += v * w7
+          wi += dOut
           i += 1
         }
-        r += 1
+        out(oa + o) = a0; out(oa + o + 1) = a1; out(oa + o + 2) = a2; out(oa + o + 3) = a3
+        out(oa + o + 4) = a4; out(oa + o + 5) = a5; out(oa + o + 6) = a6; out(oa + o + 7) = a7
+        out(ob + o) = c0; out(ob + o + 1) = c1; out(ob + o + 2) = c2; out(ob + o + 3) = c3
+        out(ob + o + 4) = c4; out(ob + o + 5) = c5; out(ob + o + 6) = c6; out(ob + o + 7) = c7
+        o += 8
+      }
+      while (o < dOut) { // output tail: 2 rows × 1 output
+        var a = bd(o); var c = a
+        var i = 0
+        var wi = o
+        while (i < dIn) {
+          val wv = wd(wi)
+          a += x(xa + i) * wv; c += x(xb + i) * wv
+          wi += dOut
+          i += 1
+        }
+        out(oa + o) = a; out(ob + o) = c
+        o += 1
       }
     }
 
-    def forward(x: Array[Float], n: Int): Array[Float] = {
-      xCache = x
+    /** `cache` keeps `x` for backward (training only). */
+    def forward(x: Array[Float], n: Int, cache: Boolean): Array[Float] = {
+      if (cache) xCache = x
       val out = new Array[Float](n * dOut)
-      val chunks = Nn.chunks(n, dIn * dOut)
-      if (chunks <= 1) forwardRange(x, out, 0, n)
-      else java.util.stream.IntStream.range(0, chunks).parallel().forEach { c =>
-        forwardRange(x, out, n * c / chunks, n * (c + 1) / chunks)
+      Nn.forRows(n, Nn.chunks(n, dIn * dOut)) { (_, r0, r1) =>
+        var r = r0
+        while (r + 1 < r1) { forwardRows(x, out, r, r + 1); r += 2 }
+        if (r < r1) forwardRows(x, out, r, r)
       }
       out
     }
@@ -141,9 +174,8 @@ final class Transformer(
         // Disjoint rows per chunk; local grad buffers merged after.
         val localGw = Array.fill(chunks)(new Array[Float](w.grad.length))
         val localGb = Array.fill(chunks)(new Array[Float](b.grad.length))
-        java.util.stream.IntStream.range(0, chunks).parallel().forEach { c =>
-          backwardRange(g, gx, localGw(c), localGb(c),
-            n * c / chunks, n * (c + 1) / chunks)
+        Nn.forRows(n, chunks) { (c, r0, r1) =>
+          backwardRange(g, gx, localGw(c), localGb(c), r0, r1)
         }
         var c = 0
         while (c < chunks) {
@@ -166,32 +198,36 @@ final class Transformer(
     val shift = new Param(new Array[Float](d))
     private var xhat: Array[Float] = null
     private var invStd: Array[Float] = null
-    def forward(x: Array[Float], n: Int): Array[Float] = {
+    /** `cache` keeps x̂ and 1/σ for backward (training only). */
+    def forward(x: Array[Float], n: Int, cache: Boolean): Array[Float] = {
       val out = new Array[Float](n * d)
-      xhat = new Array[Float](n * d)
-      invStd = new Array[Float](n)
-      var r = 0
-      while (r < n) {
-        val o = r * d
-        var mean = 0f
-        var i = 0
-        while (i < d) { mean += x(o + i); i += 1 }
-        mean /= d
-        var v = 0f
-        i = 0
-        while (i < d) { val c = x(o + i) - mean; v += c * c; i += 1 }
-        v /= d
-        val is = (1.0 / math.sqrt(v + eps)).toFloat
-        invStd(r) = is
-        i = 0
-        while (i < d) {
-          val xh = (x(o + i) - mean) * is
-          xhat(o + i) = xh
-          out(o + i) = scale.data(i) * xh + shift.data(i)
-          i += 1
+      val xh = if (cache) new Array[Float](n * d) else null
+      val inv = if (cache) new Array[Float](n) else null
+      Nn.forRows(n, Nn.chunks(n, 8 * d)) { (_, r0, r1) =>
+        var r = r0
+        while (r < r1) {
+          val o = r * d
+          var mean = 0f
+          var i = 0
+          while (i < d) { mean += x(o + i); i += 1 }
+          mean /= d
+          var v = 0f
+          i = 0
+          while (i < d) { val c = x(o + i) - mean; v += c * c; i += 1 }
+          v /= d
+          val is = (1.0 / math.sqrt(v + eps)).toFloat
+          if (inv != null) inv(r) = is
+          i = 0
+          while (i < d) {
+            val h = (x(o + i) - mean) * is
+            if (xh != null) xh(o + i) = h
+            out(o + i) = scale.data(i) * h + shift.data(i)
+            i += 1
+          }
+          r += 1
         }
-        r += 1
       }
+      if (cache) { xhat = xh; invStd = inv }
       out
     }
     def backward(g: Array[Float], n: Int): Array[Float] = {
@@ -227,16 +263,23 @@ final class Transformer(
   /** tanh-approx GeLU (transformer.py:211-218). */
   private final class TGelu extends Serializable {
     private var xCache: Array[Float] = null
+    private var tanhCache: Array[Double] = null
     private val c = math.sqrt(2.0 / math.Pi)
-    def forward(x: Array[Float]): Array[Float] = {
-      xCache = x
+    /** `cache` keeps `x` and its tanh term for backward (training only). */
+    def forward(x: Array[Float], cache: Boolean): Array[Float] = {
       val out = new Array[Float](x.length)
-      var i = 0
-      while (i < x.length) {
-        val v = x(i)
-        out(i) = (0.5 * v * (1 + math.tanh(c * (v + 0.044715 * v * v * v)))).toFloat
-        i += 1
+      val th = if (cache) new Array[Double](x.length) else null
+      Nn.forRows(x.length, Nn.chunks(x.length, Nn.TranscendentalMacs)) { (_, i0, i1) =>
+        var i = i0
+        while (i < i1) {
+          val v = x(i)
+          val t = math.tanh(c * (v + 0.044715 * v * v * v))
+          if (th != null) th(i) = t
+          out(i) = (0.5 * v * (1 + t)).toFloat
+          i += 1
+        }
       }
+      if (cache) { xCache = x; tanhCache = th }
       out
     }
     def backward(g: Array[Float]): Array[Float] = {
@@ -244,8 +287,7 @@ final class Transformer(
       var i = 0
       while (i < g.length) {
         val v = xCache(i)
-        val u = c * (v + 0.044715 * v * v * v)
-        val t = math.tanh(u)
+        val t = tanhCache(i)
         val du = c * (1 + 3 * 0.044715 * v * v)
         gx(i) = (g(i) * (0.5 * (1 + t) + 0.5 * v * (1 - t * t) * du)).toFloat
         i += 1
@@ -260,23 +302,36 @@ final class Transformer(
     val out = new TDense(dModel, dModel)
     private var qkvCache: Array[Float] = null
     private var attnCache: Array[Float] = null // [bs, h, seq, seq]
-    private var bsCache = 0
 
-    def forward(x: Array[Float], bs: Int): Array[Float] = {
-      bsCache = bs
+    /** One sequence's work in MACs: its causal (i, j ≤ i) pairs over all
+      * heads, times the cost of one pair. */
+    private def seqCost(pairMacs: Int): Int =
+      numHeads * seqLen * (seqLen + 1) / 2 * pairMacs
+
+    /** `cache` keeps q/k/v and the attention weights for backward
+      * (training only); otherwise each chunk softmaxes in a seqLen
+      * scratch row. */
+    def forward(x: Array[Float], bs: Int, cache: Boolean): Array[Float] = {
       val n = bs * seqLen
-      val h3 = 3 * dModel
-      val q = qkv.forward(x, n)
-      qkvCache = q
-      val attn = new Array[Float](bs * numHeads * seqLen * seqLen)
+      val q = qkv.forward(x, n, cache)
+      val attn = if (cache) new Array[Float](bs * numHeads * seqLen * seqLen) else null
       val ctx = new Array[Float](n * dModel)
+      // Per-batch-element state is disjoint -> parallel over b. A pair
+      // costs a score and a context row (dState MACs each) and one exp.
+      Nn.forRows(bs, Nn.chunks(bs, seqCost(2 * dState + Nn.TranscendentalMacs))) {
+        (_, b0, b1) => attend(q, attn, ctx, b0, b1)
+      }
+      if (cache) { qkvCache = q; attnCache = attn }
+      out.forward(ctx, n, cache)
+    }
+
+    private def attend(q: Array[Float], attn: Array[Float], ctx: Array[Float],
+        b0: Int, b1: Int): Unit = {
+      val h3 = 3 * dModel
       val scale = (1.0 / math.sqrt(dState)).toFloat
-      // Per-batch-element state is disjoint -> parallel over b.
-      val fchunks = Nn.chunks(bs, numHeads * seqLen * seqLen * dState)
-      java.util.stream.IntStream.range(0, fchunks).parallel().forEach { fc =>
-      var b = bs * fc / fchunks
-      val bEnd = bs * (fc + 1) / fchunks
-      while (b < bEnd) {
+      val p = if (attn != null) attn else new Array[Float](seqLen)
+      var b = b0
+      while (b < b1) {
         var h = 0
         while (h < numHeads) {
           val qOff = h * dState
@@ -284,7 +339,7 @@ final class Transformer(
           val vOff = 2 * dModel + h * dState
           var i = 0
           while (i < seqLen) {
-            val aOff = ((b * numHeads + h) * seqLen + i) * seqLen
+            val aOff = if (attn != null) ((b * numHeads + h) * seqLen + i) * seqLen else 0
             val qRow = (b * seqLen + i) * h3 + qOff
             // causal: position i attends to j <= i (mask(n), transformer.py:48-55)
             var mx = Float.NegativeInfinity
@@ -295,26 +350,25 @@ final class Transformer(
               var t = 0
               while (t < dState) { s += q(qRow + t) * q(kRow + t); t += 1 }
               s *= scale
-              attn(aOff + j) = s
+              p(aOff + j) = s
               if (s > mx) mx = s
               j += 1
             }
             var sum = 0.0
             j = 0
             while (j <= i) {
-              val e = math.exp(attn(aOff + j) - mx)
-              attn(aOff + j) = e.toFloat
+              val e = math.exp(p(aOff + j) - mx)
+              p(aOff + j) = e.toFloat
               sum += e
               j += 1
             }
             j = 0
-            while (j <= i) { attn(aOff + j) = (attn(aOff + j) / sum).toFloat; j += 1 }
-            while (j < seqLen) { attn(aOff + j) = 0f; j += 1 }
+            while (j <= i) { p(aOff + j) = (p(aOff + j) / sum).toFloat; j += 1 }
             // ctx_i = sum_j attn_ij v_j
             val cRow = (b * seqLen + i) * dModel + h * dState
             j = 0
             while (j <= i) {
-              val a = attn(aOff + j)
+              val a = p(aOff + j)
               val vRow = (b * seqLen + j) * h3 + vOff
               var t = 0
               while (t < dState) { ctx(cRow + t) += a * q(vRow + t); t += 1 }
@@ -326,9 +380,6 @@ final class Transformer(
         }
         b += 1
       }
-      }
-      attnCache = attn
-      out.forward(ctx, n)
     }
 
     def backward(g: Array[Float], bs: Int): Array[Float] = {
@@ -339,12 +390,12 @@ final class Transformer(
       val attn = attnCache
       val gQkv = new Array[Float](n * h3)
       val scale = (1.0 / math.sqrt(dState)).toFloat
-      // gQkv rows are per-batch-element -> disjoint, parallel over b.
-      val bchunks = Nn.chunks(bs, numHeads * seqLen * seqLen * dState)
-      java.util.stream.IntStream.range(0, bchunks).parallel().forEach { bc =>
-      var b = bs * bc / bchunks
-      val bEnd = bs * (bc + 1) / bchunks
-      while (b < bEnd) {
+      // gQkv rows are per-batch-element -> disjoint, parallel over b. A
+      // pair costs four dState-long loops.
+      Nn.forRows(bs, Nn.chunks(bs, seqCost(4 * dState))) { (_, b0, b1) =>
+      val dAttn = new Array[Float](seqLen)
+      var b = b0
+      while (b < b1) {
         var h = 0
         while (h < numHeads) {
           val qOff = h * dState
@@ -355,7 +406,6 @@ final class Transformer(
             val aOff = ((b * numHeads + h) * seqLen + i) * seqLen
             val cRow = (b * seqLen + i) * dModel + h * dState
             // dAttn_ij = gCtx_i . v_j ; dV_j += attn_ij gCtx_i
-            val dAttn = new Array[Float](i + 1)
             var j = 0
             while (j <= i) {
               val vRow = (b * seqLen + j) * h3 + vOff
@@ -406,13 +456,14 @@ final class Transformer(
     val fc1 = new TDense(dModel, dFf)
     val act = new TGelu
     val fc2 = new TDense(dFf, dModel)
-    def forward(x: Array[Float], bs: Int): Array[Float] = {
+    def forward(x: Array[Float], bs: Int, cache: Boolean): Array[Float] = {
       val n = bs * seqLen
-      val a = attn.forward(norm1.forward(x, n), bs)
+      val a = attn.forward(norm1.forward(x, n, cache), bs, cache)
       val x1 = new Array[Float](x.length)
       var i = 0
       while (i < x.length) { x1(i) = x(i) + a(i); i += 1 }
-      val m = fc2.forward(act.forward(fc1.forward(norm2.forward(x1, n), n)), n)
+      val f = fc1.forward(norm2.forward(x1, n, cache), n, cache)
+      val m = fc2.forward(act.forward(f, cache), n, cache)
       val x2 = new Array[Float](x.length)
       i = 0
       while (i < x.length) { x2(i) = x1(i) + m(i); i += 1 }
@@ -525,10 +576,20 @@ final class Transformer(
     out
   }
 
-  /** Forward from an encoded buffer. Overwrites position 0 with SOS
-    * (pos emb 0) — it never depends on query state. Returns hidden states
-    * [bs, seq, d]; use logitsForCol for per-column logits. */
-  def forwardEncoded(inp: Array[Float], batch: Int): Array[Float] = {
+  /** Inference forward from an encoded buffer. Overwrites position 0
+    * with SOS (pos emb 0) — it never depends on query state. Returns
+    * hidden states [bs, seq, d]; use logitsForCol for per-column logits.
+    * Writes no field of the model (all scratch is local to the call), so
+    * any number of threads may call it at once, with any batch sizes. */
+  def forwardEncoded(inp: Array[Float], batch: Int): Array[Float] =
+    run(inp, batch, cache = false)
+
+  /** Training forward: like forwardEncoded, but every layer also keeps
+    * what `backward` needs. */
+  def forward(data: Array[Array[Int]], train: Boolean): Array[Float] =
+    run(encodeInput(data, train), data.length, cache = true)
+
+  private def run(inp: Array[Float], batch: Int, cache: Boolean): Array[Float] = {
     var r = 0
     while (r < batch) {
       System.arraycopy(posEmbeddings.data, 0, inp, r * seqLen * dModel, dModel)
@@ -536,12 +597,9 @@ final class Transformer(
     }
     var h = inp
     var i = 0
-    while (i < numBlocks) { h = blocks(i).forward(h, batch); i += 1 }
-    finalNorm.forward(h, batch * seqLen)
+    while (i < numBlocks) { h = blocks(i).forward(h, batch, cache); i += 1 }
+    finalNorm.forward(h, batch * seqLen, cache)
   }
-
-  def forward(data: Array[Array[Int]], train: Boolean): Array[Float] =
-    forwardEncoded(encodeInput(data, train), data.length)
 
   /** Backward from dL/dHidden; routes gradients into block params,
     * embeddings, pos embeddings, and unk embeddings. */
