@@ -417,39 +417,34 @@ final class Made(
 
   // ---- forward / backward ----
 
-  private var inpCache: Array[Float] = null
+  /** Inference forward from an encoded input buffer (made.py:637-643).
+    * Keeps no backward cache (a multi-mask model only rewrites its
+    * per-call masked-weight scratch, with identical values), so any
+    * number of threads may call it at once, with any batch sizes. */
+  def forwardEncoded(inp: Array[Float], batch: Int): Array[Float] =
+    run(inp, batch, cache = false)
 
-  /** Forward from an encoded input buffer (made.py:637-643). */
-  def forwardEncoded(inp: Array[Float], batch: Int): Array[Float] = {
+  /** Training forward: encode + net (made.py:614-635); every layer also
+    * keeps what `backward` needs. */
+  def forward(data: Array[Array[Int]], train: Boolean): Array[Float] =
+    run(encodeInput(data, train), data.length, cache = true)
+
+  private[nn] def run(inp: Array[Float], batch: Int, cache: Boolean): Array[Float] = {
     var h = inp
     var i = 0
-    while (i < layers.length) { h = layers(i).forward(h, batch); i += 1 }
+    while (i < layers.length) { h = layers(i).forward(h, batch, cache); i += 1 }
     if (directIoLayer != null) {
-      val res = directIoLayer.forward(inp, batch)
+      val res = directIoLayer.forward(inp, batch, cache)
       var k = 0
       while (k < h.length) { h(k) += res(k); k += 1 }
     }
     h
   }
 
-  /** Training forward: encode + net (made.py:614-635). */
-  def forward(data: Array[Array[Int]], train: Boolean): Array[Float] = {
-    val inp = encodeInput(data, train)
-    inpCache = inp
-    forwardEncoded(inp, data.length)
-  }
-
   /** Backward from dL/dLogits; accumulates all param grads including the
     * unk embeddings touched by column masking. */
   def backward(gradLogits: Array[Float], batch: Int): Unit = {
-    var g = gradLogits
-    var i = layers.length - 1
-    while (i >= 0) { g = layers(i).backward(g, batch); i -= 1 }
-    if (directIoLayer != null) {
-      val gDirect = directIoLayer.backward(gradLogits, batch)
-      var k = 0
-      while (k < g.length) { g(k) += gDirect(k); k += 1 }
-    }
+    val g = backwardToInput(gradLogits, batch)
     // g = dL/dEncodedInput; route dropped slices into unk embedding
     // grads and non-dropped embed-encoded slices into the input
     // embeddings (made.py:448-449 backprop path).
@@ -477,8 +472,10 @@ final class Made(
     }
   }
 
-  /** Gradient wrt the (encoded) input — used by the autoregressiveness
-    * check (made.py:710-752). Must be called right after forward. */
+  /** Gradient wrt the (encoded) input, accumulating the layers' param
+    * grads on the way — also the autoregressiveness check's probe
+    * (made.py:710-752). Must follow a caching forward (`forward`, or
+    * `run` with `cache = true`). */
   def backwardToInput(gradLogits: Array[Float], batch: Int): Array[Float] = {
     var g = gradLogits
     var i = layers.length - 1
@@ -610,26 +607,8 @@ final class Made(
   }
 
   /** Mean NLL only (no grad) — evaluation path. */
-  def nll(logits: Array[Float], data: Array[Array[Int]], batch: Int): Double = {
-    var total = 0.0
-    for (c <- 0 until nin) {
-      val colLogits = logitsForCol(c, logits, batch)
-      val dom = inputBins(c)
-      var r = 0
-      while (r < batch) {
-        val base = r * dom
-        var mx = Float.NegativeInfinity
-        var j = 0
-        while (j < dom) { if (colLogits(base + j) > mx) mx = colLogits(base + j); j += 1 }
-        var sum = 0.0
-        j = 0
-        while (j < dom) { sum += math.exp(colLogits(base + j) - mx); j += 1 }
-        total += mx + math.log(sum) - colLogits(base + data(r)(c))
-        r += 1
-      }
-    }
-    total / batch
-  }
+  def nll(logits: Array[Float], data: Array[Array[Int]], batch: Int): Double =
+    Nn.meanNll(this, logits, data, batch)
 
   /** Ancestral sampling of `num` tuples (made.py:696-707). */
   def sample(num: Int, sampleRng: java.util.Random): Array[Array[Int]] = {

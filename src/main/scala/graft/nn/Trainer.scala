@@ -257,7 +257,12 @@ object Trainer {
       .headOption
   }
 
+  /** Version 1 ("GRFT") stored MADE's dense weights as [nOut, nIn]; a
+    * square layer would pass every size check and load transposed, so
+    * such a file is refused rather than read. */
   private val MagicV1 = 0x47524654 // "GRFT"
+  /** Version 2: every dense weight and mask is [nIn, nOut]. */
+  private val MagicV2 = 0x47524632 // "GRF2"
 
   def save(model: Trainable, path: String): Unit = {
     val f = new java.io.File(path)
@@ -265,7 +270,7 @@ object Trainer {
     val out = new java.io.DataOutputStream(new java.io.BufferedOutputStream(
       new java.io.FileOutputStream(f)))
     try {
-      out.writeInt(MagicV1)
+      out.writeInt(MagicV2)
       val ps = model.params
       out.writeInt(ps.length)
       ps.foreach { p =>
@@ -280,7 +285,10 @@ object Trainer {
     val in = new java.io.DataInputStream(new java.io.BufferedInputStream(
       new java.io.FileInputStream(path)))
     try {
-      require(in.readInt() == MagicV1, s"bad checkpoint magic in $path")
+      val magic = in.readInt()
+      require(magic != MagicV1, s"$path is a version-1 checkpoint, whose dense " +
+        "weights are laid out [nOut, nIn]; this build reads version 2 ([nIn, nOut]): retrain the model")
+      require(magic == MagicV2, s"bad checkpoint magic in $path")
       val n = in.readInt()
       val ps = model.params
       require(n == ps.length, s"param count $n != ${ps.length}")

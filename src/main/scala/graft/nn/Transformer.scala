@@ -68,128 +68,12 @@ final class Transformer(
     if (columnMasking) Array.fill(nin)(new Param(new Array[Float](dModel)))
     else null
 
-  /** Linear y = xW + b with W [dIn, dOut] (reference Conv1d,
-    * transformer.py:121-137). */
-  private final class TDense(dIn: Int, dOut: Int) extends Serializable {
-    val w = new Param(gaussian(dIn * dOut, 0.02))
-    val b = new Param(new Array[Float](dOut))
-    private var xCache: Array[Float] = null
-
-    /** Rows `ra` and `rb` (`rb == ra` for an odd last row), register-tiled:
-      * 2 rows × 8 outputs stay in 16 local accumulators for the whole walk
-      * over `i`, so each weight load feeds two MACs and no partial sum
-      * goes back to memory. Every output is still
-      * `b_o + x_0·w_0o + x_1·w_1o + …` added in ascending `i`, the order
-      * of a one-row axpy loop, so the bits are the same as that loop's.
-      * Zero inputs need no skip branch: adding x·w = ±0 leaves a partial
-      * sum unchanged, since one that starts at the bias is never −0. */
-    private def forwardRows(x: Array[Float], out: Array[Float],
-        ra: Int, rb: Int): Unit = {
-      val wd = w.data; val bd = b.data
-      val xa = ra * dIn; val xb = rb * dIn
-      val oa = ra * dOut; val ob = rb * dOut
-      var o = 0
-      while (o + 8 <= dOut) {
-        var a0 = bd(o); var a1 = bd(o + 1); var a2 = bd(o + 2); var a3 = bd(o + 3)
-        var a4 = bd(o + 4); var a5 = bd(o + 5); var a6 = bd(o + 6); var a7 = bd(o + 7)
-        var c0 = a0; var c1 = a1; var c2 = a2; var c3 = a3
-        var c4 = a4; var c5 = a5; var c6 = a6; var c7 = a7
-        var i = 0
-        var wi = o
-        while (i < dIn) {
-          val u = x(xa + i); val v = x(xb + i)
-          val w0 = wd(wi); val w1 = wd(wi + 1); val w2 = wd(wi + 2); val w3 = wd(wi + 3)
-          val w4 = wd(wi + 4); val w5 = wd(wi + 5); val w6 = wd(wi + 6); val w7 = wd(wi + 7)
-          a0 += u * w0; a1 += u * w1; a2 += u * w2; a3 += u * w3
-          a4 += u * w4; a5 += u * w5; a6 += u * w6; a7 += u * w7
-          c0 += v * w0; c1 += v * w1; c2 += v * w2; c3 += v * w3
-          c4 += v * w4; c5 += v * w5; c6 += v * w6; c7 += v * w7
-          wi += dOut
-          i += 1
-        }
-        out(oa + o) = a0; out(oa + o + 1) = a1; out(oa + o + 2) = a2; out(oa + o + 3) = a3
-        out(oa + o + 4) = a4; out(oa + o + 5) = a5; out(oa + o + 6) = a6; out(oa + o + 7) = a7
-        out(ob + o) = c0; out(ob + o + 1) = c1; out(ob + o + 2) = c2; out(ob + o + 3) = c3
-        out(ob + o + 4) = c4; out(ob + o + 5) = c5; out(ob + o + 6) = c6; out(ob + o + 7) = c7
-        o += 8
-      }
-      while (o < dOut) { // output tail: 2 rows × 1 output
-        var a = bd(o); var c = a
-        var i = 0
-        var wi = o
-        while (i < dIn) {
-          val wv = wd(wi)
-          a += x(xa + i) * wv; c += x(xb + i) * wv
-          wi += dOut
-          i += 1
-        }
-        out(oa + o) = a; out(ob + o) = c
-        o += 1
-      }
-    }
-
-    /** `cache` keeps `x` for backward (training only). */
-    def forward(x: Array[Float], n: Int, cache: Boolean): Array[Float] = {
-      if (cache) xCache = x
-      val out = new Array[Float](n * dOut)
-      Nn.forRows(n, Nn.chunks(n, dIn * dOut)) { (_, r0, r1) =>
-        var r = r0
-        while (r + 1 < r1) { forwardRows(x, out, r, r + 1); r += 2 }
-        if (r < r1) forwardRows(x, out, r, r)
-      }
-      out
-    }
-
-    private def backwardRange(g: Array[Float], gx: Array[Float],
-        gw: Array[Float], gb: Array[Float], r0: Int, r1: Int): Unit = {
-      var r = r0
-      while (r < r1) {
-        val xo = r * dIn; val oo = r * dOut
-        var o = 0
-        while (o < dOut) { gb(o) += g(oo + o); o += 1 }
-        var i = 0
-        while (i < dIn) {
-          val wo = i * dOut
-          val xv = xCache(xo + i)
-          var acc = 0f
-          o = 0
-          while (o < dOut) {
-            val gv = g(oo + o)
-            gw(wo + o) += gv * xv
-            acc += gv * w.data(wo + o)
-            o += 1
-          }
-          gx(xo + i) = acc
-          i += 1
-        }
-        r += 1
-      }
-    }
-
-    def backward(g: Array[Float], n: Int): Array[Float] = {
-      val gx = new Array[Float](n * dIn)
-      val chunks = Nn.chunks(n, dIn * dOut)
-      if (chunks <= 1) backwardRange(g, gx, w.grad, b.grad, 0, n)
-      else {
-        // Disjoint rows per chunk; local grad buffers merged after.
-        val localGw = Array.fill(chunks)(new Array[Float](w.grad.length))
-        val localGb = Array.fill(chunks)(new Array[Float](b.grad.length))
-        Nn.forRows(n, chunks) { (c, r0, r1) =>
-          backwardRange(g, gx, localGw(c), localGb(c), r0, r1)
-        }
-        var c = 0
-        while (c < chunks) {
-          val lw = localGw(c); val lb = localGb(c)
-          var k = 0
-          while (k < w.grad.length) { w.grad(k) += lw(k); k += 1 }
-          k = 0
-          while (k < b.grad.length) { b.grad(k) += lb(k); k += 1 }
-          c += 1
-        }
-      }
-      gx
-    }
-    def params: Seq[Param] = Seq(w, b)
+  /** A dense layer y = xW + b, W [dIn, dOut] (reference Conv1d,
+    * transformer.py:121-137), filled from the model rng at construction. */
+  private def dense(dIn: Int, dOut: Int): MaskedLinear = {
+    val l = new MaskedLinear(dIn, dOut)
+    gaussian(dIn * dOut, 0.02).copyToArray(l.weight.data)
+    l
   }
 
   /** LayerNorm over the last dim (transformer.py:105-118). */
@@ -298,8 +182,8 @@ final class Transformer(
 
   /** Multi-head causal self-attention (transformer.py:140-208). */
   private final class TAttention extends Serializable {
-    val qkv = new TDense(dModel, 3 * dModel)
-    val out = new TDense(dModel, dModel)
+    val qkv = dense(dModel, 3 * dModel)
+    val out = dense(dModel, dModel)
     private var qkvCache: Array[Float] = null
     private var attnCache: Array[Float] = null // [bs, h, seq, seq]
 
@@ -453,9 +337,9 @@ final class Transformer(
     val norm1 = new TNorm(dModel)
     val norm2 = new TNorm(dModel)
     val attn = new TAttention
-    val fc1 = new TDense(dModel, dFf)
+    val fc1 = dense(dModel, dFf)
     val act = new TGelu
-    val fc2 = new TDense(dFf, dModel)
+    val fc2 = dense(dFf, dModel)
     def forward(x: Array[Float], bs: Int, cache: Boolean): Array[Float] = {
       val n = bs * seqLen
       val a = attn.forward(norm1.forward(x, n, cache), bs, cache)
@@ -705,24 +589,6 @@ final class Transformer(
     (total / batch, gradH)
   }
 
-  def nll(hidden: Array[Float], data: Array[Array[Int]], batch: Int): Double = {
-    var total = 0.0
-    for (c <- 0 until nin) {
-      val dom = inputBins(c)
-      val logits = logitsForCol(c, hidden, batch)
-      var r = 0
-      while (r < batch) {
-        val base = r * dom
-        var mx = Float.NegativeInfinity
-        var j = 0
-        while (j < dom) { if (logits(base + j) > mx) mx = logits(base + j); j += 1 }
-        var sum = 0.0
-        j = 0
-        while (j < dom) { sum += math.exp(logits(base + j) - mx); j += 1 }
-        total += mx + math.log(sum) - logits(base + data(r)(c))
-        r += 1
-      }
-    }
-    total / batch
-  }
+  def nll(hidden: Array[Float], data: Array[Array[Int]], batch: Int): Double =
+    Nn.meanNll(this, hidden, data, batch)
 }

@@ -241,5 +241,13 @@ class CoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     model.params.zip(copy.params).foreach { case (a, b) =>
       assert(java.util.Arrays.equals(a.data, b.data))
     }
+    // A version-1 file (MADE weights [nOut, nIn]) is refused, not loaded
+    // transposed: same bytes, old magic.
+    val v1 = path.stripSuffix(".gmdl") + "-v1.gmdl"
+    val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path))
+    java.nio.ByteBuffer.wrap(bytes).putInt(0x47524654) // "GRFT"
+    java.nio.file.Files.write(java.nio.file.Paths.get(v1), bytes)
+    val e = intercept[IllegalArgumentException](graft.nn.Trainer.load(copy, v1))
+    assert(e.getMessage.contains("version-1 checkpoint"), e.getMessage)
   }
 }

@@ -24,7 +24,7 @@ class MadeSpec extends AnyFunSuite {
 
   /** dLogits[k]/dInput via backprop, for a single random input row. */
   private def inputGrad(model: Made, k: Int, inp: Array[Float]): Array[Float] = {
-    model.forwardEncoded(inp.clone(), 1)
+    model.run(inp.clone(), 1, cache = true)
     val gradLogits = new Array[Float](model.totalOutputSize)
     gradLogits(k) = 1f
     model.backwardToInput(gradLogits, 1)

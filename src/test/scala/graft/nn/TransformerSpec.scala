@@ -109,30 +109,39 @@ class TransformerSpec extends AnyFunSuite {
   }
 
   test("forwardEncoded is safe under concurrent callers with mixed batch sizes") {
-    val model = new Transformer(5, Array(3, 7, 4, 11, 6), dModel = 16,
-      dFf = 32, numHeads = 2, numBlocks = 2, seed = 21)
-    val sizes = Array(1, 7, 250, 2000)
-    val rng = new java.util.Random(4)
-    val inputs = sizes.map(b =>
-      Array.fill(b * model.totalInputSize)((rng.nextGaussian() * 0.1).toFloat))
-    val serial = sizes.indices.map(s => model.forwardEncoded(inputs(s).clone(), sizes(s)))
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
-    try {
-      val calls = (0 until 8).map { t =>
-        pool.submit(new java.util.concurrent.Callable[Int] {
-          def call(): Int = (0 until 200).count { k =>
-            val s = (t + k) % sizes.length
-            !java.util.Arrays.equals(
-              model.forwardEncoded(inputs(s).clone(), sizes(s)), serial(s))
-          }
-        })
-      }
-      val outcomes = calls.map(c => scala.util.Try(c.get()))
-      val thrown = outcomes.collect { case scala.util.Failure(e) => e.getCause }
-      assert(thrown.isEmpty, s"${thrown.size} of 8 threads threw: ${thrown.headOption}")
-      val differing = outcomes.map(_.get).sum
-      assert(differing == 0, s"$differing of 1600 concurrent results differ from the serial ones")
-    } finally pool.shutdownNow()
+    // Both families: the Transformer, and a single-mask ResMADE shaped
+    // like the benchmark's (one-hot, residual, direct-io).
+    val models = Seq[graft.est.ArModel](
+      new Transformer(5, Array(3, 7, 4, 11, 6), dModel = 16,
+        dFf = 32, numHeads = 2, numBlocks = 2, seed = 21),
+      new Made(5, Seq(64, 64), Array(4, 3, 51, 12, 10),
+        inputEncoding = "one_hot", residual = true, doDirectIo = true,
+        columnMasking = true, seed = 21))
+    for (model <- models) {
+      val name = model.getClass.getSimpleName
+      val sizes = Array(1, 7, 250, 2000)
+      val rng = new java.util.Random(4)
+      val inputs = sizes.map(b =>
+        Array.fill(b * model.totalInputSize)((rng.nextGaussian() * 0.1).toFloat))
+      val serial = sizes.indices.map(s => model.forwardEncoded(inputs(s).clone(), sizes(s)))
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+      try {
+        val calls = (0 until 8).map { t =>
+          pool.submit(new java.util.concurrent.Callable[Int] {
+            def call(): Int = (0 until 200).count { k =>
+              val s = (t + k) % sizes.length
+              !java.util.Arrays.equals(
+                model.forwardEncoded(inputs(s).clone(), sizes(s)), serial(s))
+            }
+          })
+        }
+        val outcomes = calls.map(c => scala.util.Try(c.get()))
+        val thrown = outcomes.collect { case scala.util.Failure(e) => e.getCause }
+        assert(thrown.isEmpty, s"$name: ${thrown.size} of 8 threads threw: ${thrown.headOption}")
+        val differing = outcomes.map(_.get).sum
+        assert(differing == 0, s"$name: $differing of 1600 concurrent results differ from the serial ones")
+      } finally pool.shutdownNow()
+    }
   }
 
   test("ProgressiveSampling drives the Transformer via ArModel") {
