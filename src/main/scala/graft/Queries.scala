@@ -13417,19 +13417,17 @@ ORDER BY mode""")),
       None),
     // Distributed batch evaluation (the RunNParallel analog,
     // eval_model.py:303-375): broadcast the trained model, partition the
-    // workload, per-partition estimator replicas. Rows-only (per-
-    // partition RNG streams depend on the partitioning).
+    // workload, one estimator replica per partition seeded by its index.
+    // Rows-only (the RNG streams depend on the partitioning).
     Entry("q_psample_distributed",
       (s, d) => {
         import s.implicits._
         val (model, meta) = lineitemModel(s, d)
         val qs = lineitemWorkload(s, d, meta, 16)
         val truths = Workload.trueCards(li(s, d), qs)
-        val est: Seq[Pred] => Long = {
-          val ps = new ProgressiveSampling(model, meta, numSamples = 200,
-            shortcircuit = true)
-          ps.query
-        }
+        val est: Int => (Seq[Pred] => Long) = p =>
+          new ProgressiveSampling(model, meta, numSamples = 200,
+            shortcircuit = true, seed = 1234L + p).query
         val rows = Workload.runDistributed(s, est, qs, truths, parallelism = 4)
         rows.toSeq.toDF("query_id", "est_card", "q_error")
           .select(col("query_id"), col("est_card"))
@@ -13524,18 +13522,18 @@ ORDER BY mode""")),
         val ps = new ProgressiveSampling(model, meta, numSamples = 500,
           shortcircuit = true)
         val psEsts = trace("psample")(qs.map(q => ps.query(q).toDouble))
-        // The transformer's forward is ~10x a MADE step: a 250-sample
-        // budget keeps its report row at MADE-row cost with quantiles
-        // well inside the estimator's own variance. r21 (VERDICT r20
-        // next #5): queries fan out in parallel exactly like the
-        // ensemble row below — per-query seeded samplers keep the row
-        // deterministic under any schedule, and concurrent inference on
-        // one Transformer is safe: forwardEncoded writes no model field
+        // The transformer row samples 250 paths, with quantiles well
+        // inside the estimator's own variance. r21 (VERDICT r20 next
+        // #5): queries fan out in parallel exactly like the ensemble row
+        // below — per-query seeded samplers keep the row deterministic
+        // under any schedule, and concurrent inference on one
+        // Transformer is safe: forwardEncoded writes no model field
         // (only the training forward keeps backward caches), whatever
-        // the callers' batch sizes, and each sampler owns its input
-        // buffer and rng. Estimates differ from the r20
-        // sequential-shared-rng row only in which seeded draws each
-        // query consumes (within estimator variance; no-oracle entry).
+        // the callers' batch sizes, a sampler's per-query buffers are
+        // local to the call, and its rng is its only state. Estimates
+        // differ from the r20 sequential-shared-rng row only in which
+        // seeded draws each query consumes (within estimator variance;
+        // no-oracle entry).
         val (tModel, tMeta) = lineitemTransformer(s, d)
         val tpsEsts = trace("transformer") {
           val acc = new Array[Double](qs.length)
@@ -13573,9 +13571,10 @@ ORDER BY mode""")),
         // parallelism, so the parallelism goes over queries instead.
         // Per-(mask, query) seeded samplers keep the result
         // deterministic under any schedule; concurrent inference on one
-        // model is safe because each sampler owns its buffers and the
-        // layer caches written by forward are read only by backward,
-        // which inference never calls.
+        // model is safe because a sampler's per-query buffers are local
+        // to the call, its rng is its only state, and inference writes
+        // no model field (only the training forward keeps backward
+        // caches).
         val ensEsts = trace("ensemble") {
           val ensModel = lineitemEnsemble(s, d)._1
           val acc = new Array[Double](qs.length)

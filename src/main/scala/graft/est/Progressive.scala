@@ -40,12 +40,20 @@ final class ProgressiveSampling(
     for (nat <- 0 until nin) inv(model.ordering(nat)) = nat
     inv
   }
-  // Reused input buffer across queries (estimators.py:190-197).
-  private val inp = new Array[Float](numSamples * model.totalInputSize)
+  // The sampler's only mutable state: one instance serves one caller at
+  // a time, while distinct samplers may share a model.
   private val rng = new java.util.Random(seed)
 
   /** Selectivity estimate in [0,1]: mean over samples of the product of
-    * per-queried-column surviving masses (estimators.py:206-363). */
+    * per-queried-column surviving masses (estimators.py:206-363).
+    *
+    * Paths that have sampled the same prefix have the same encoded input
+    * row, so they share a group: the forward, `logitsForCol`, the masked
+    * softmax and the surviving mass run once per group over a compact
+    * `[nGroups, totalInputSize]` buffer. Every inference kernel computes
+    * a row independently of its batch, so each group row has the bits
+    * its paths would have in a `numSamples`-row batch; masses, rng draws
+    * and the inverse-CDF walk stay per path, in path order. */
   def selectivity(preds: Seq[Pred]): Double = {
     val byCol = Pred.fillWildcards(meta, preds) // natural order; Nil = wildcard
     // Per-column float mask over the domain, AND of conjuncts
@@ -60,34 +68,39 @@ final class ProgressiveSampling(
       }
     }
 
-    java.util.Arrays.fill(inp, 0f)
+    val width = model.totalInputSize
+    // Before the first sample every path is the same: one group.
+    var nGroups = 1
+    val group = new Array[Int](numSamples) // path -> group id
+    var inp = new Array[Float](width)
     // Pre-encode wildcards with the [MASK] embedding (estimators.py:239-255);
     // the column LAST in the ordering feeds nothing, skip it entirely.
     if (shortcircuit) {
       for (nat <- 0 until nin)
         if (valid(nat) == null && model.ordering(nat) != nin - 1)
-          model.encodeColumn(nat, null, inp, numSamples)
+          model.encodeColumn(nat, null, inp, 1)
     }
 
-    // logits for the first queried step come from the all-zeros input
+    // logits for the first queried step come from the unsampled input
     // (estimators.py:166-168 init_logits, recomputed here per query since
     // shortcircuit pre-encoding changes the buffer).
     var logits: Array[Float] = null
     val masses = Array.fill(numSamples)(1.0)
-    val sampled = new Array[Int](numSamples)
 
     for (pos <- 0 until nin) {
       val nat = invOrdering(pos)
       val queried = valid(nat) != null
       if (!shortcircuit || queried) {
-        if (logits == null) logits = model.forwardEncoded(inp, numSamples)
-        val colLogits = model.logitsForCol(nat, logits, numSamples)
+        if (logits == null) logits = model.forwardEncoded(inp, nGroups)
+        val colLogits = model.logitsForCol(nat, logits, nGroups)
         val dom = model.inputBins(nat)
-        // softmax -> probs, masked by the predicate.
-        val probs = new Array[Double](numSamples * dom)
-        var r = 0
-        while (r < numSamples) {
-          val base = r * dom
+        // softmax -> probs, masked by the predicate, per group.
+        val probs = new Array[Double](nGroups * dom)
+        val groupMass = new Array[Double](nGroups)
+        val groupTot = new Array[Double](nGroups)
+        var g = 0
+        while (g < nGroups) {
+          val base = g * dom
           var mx = Float.NegativeInfinity
           var j = 0
           while (j < dom) { if (colLogits(base + j) > mx) mx = colLogits(base + j); j += 1 }
@@ -103,37 +116,55 @@ final class ProgressiveSampling(
             masked += pv
             j += 1
           }
-          if (queried) masses(r) *= masked
+          groupMass(g) = masked
           // Vanished path: give the row uniform mass so sampling proceeds
           // (estimators.py:277-279); its recorded mass stays ~0.
           if (masked <= 0.0) {
             j = 0
             while (j < dom) { probs(base + j) = 1.0; j += 1 }
           }
-          r += 1
+          var tot = 0.0
+          j = 0
+          while (j < dom) { tot += probs(base + j); j += 1 }
+          groupTot(g) = tot
+          g += 1
         }
-        // Sample x_nat for every path and encode it (estimators.py:292-337),
-        // unless this is the last position (nothing consumes it).
+        if (queried) {
+          var r = 0
+          while (r < numSamples) { masses(r) *= groupMass(group(r)); r += 1 }
+        }
+        // Sample x_nat for every path (estimators.py:292-337) and regroup
+        // by (old group, pick), unless this is the last position (nothing
+        // consumes it).
         if (pos < nin - 1) {
-          var rr = 0
-          while (rr < numSamples) {
-            val base = rr * dom
-            var tot = 0.0
-            var j = 0
-            while (j < dom) { tot += probs(base + j); j += 1 }
-            var u = rng.nextDouble() * tot
+          val ids = new PrefixIds(numSamples)
+          var r = 0
+          while (r < numSamples) {
+            val og = group(r)
+            val base = og * dom
+            var u = rng.nextDouble() * groupTot(og)
             var pick = dom - 1
-            j = 0
+            var j = 0
             var done = false
             while (j < dom && !done) {
               u -= probs(base + j)
               if (u <= 0) { pick = j; done = true }
               j += 1
             }
-            sampled(rr) = pick
-            rr += 1
+            group(r) = ids.idOf(og, pick, dom)
+            r += 1
           }
-          model.encodeColumn(nat, sampled, inp, numSamples)
+          // Each new group's row is its parent's row plus x_nat
+          // (estimators.py:337 encode).
+          val next = new Array[Float](ids.size * width)
+          var k = 0
+          while (k < ids.size) {
+            System.arraycopy(inp, ids.parent(k) * width, next, k * width, width)
+            k += 1
+          }
+          model.encodeColumn(nat, ids.pick, next, ids.size)
+          inp = next
+          nGroups = ids.size
         }
       }
       // Forward pass for the next step, skipped when the next column in
@@ -141,7 +172,7 @@ final class ProgressiveSampling(
       if (pos < nin - 1) {
         val nextNat = invOrdering(pos + 1)
         if (!shortcircuit || valid(nextNat) != null)
-          logits = model.forwardEncoded(inp, numSamples)
+          logits = model.forwardEncoded(inp, nGroups)
         else logits = null
       }
     }
@@ -154,6 +185,34 @@ final class ProgressiveSampling(
   /** Cardinality estimate: ceil(selectivity × N) (estimators.py:406-407). */
   def query(preds: Seq[Pred]): Long =
     math.ceil(selectivity(preds) * meta.cardinality).toLong
+}
+
+/** New group ids for one sampling step: (old group, pick) keys numbered
+  * in order of first appearance, in an open-addressing table sized by the
+  * path count rather than groups × domain. */
+private final class PrefixIds(numPaths: Int) {
+  // A power of two at least 2 × numPaths: probes stay short.
+  private val slots = Integer.highestOneBit(math.max(1, numPaths)) * 4
+  private val keys = Array.fill(slots)(-1L)
+  private val vals = new Array[Int](slots)
+  /** Per new id, its parent group and its sampled value. */
+  val parent = new Array[Int](numPaths)
+  val pick = new Array[Int](numPaths)
+  var size = 0
+
+  def idOf(group: Int, value: Int, dom: Int): Int = {
+    val key = group.toLong * dom + value
+    var i = ((key * 0x9E3779B97F4A7C15L) >>> 33).toInt & (slots - 1)
+    while (keys(i) != -1L && keys(i) != key) i = (i + 1) & (slots - 1)
+    if (keys(i) == -1L) {
+      keys(i) = key
+      vals(i) = size
+      parent(size) = group
+      pick(size) = value
+      size += 1
+    }
+    vals(i)
+  }
 }
 
 /** Multi-ordering ensemble (reference estimators.py:409-418 +

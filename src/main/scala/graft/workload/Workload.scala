@@ -206,18 +206,26 @@ object Workload {
 
   /** Distributed batch runner — the RunNParallel analog
     * (eval_model.py:303-375): partition the queries, broadcast the
-    * estimator (weights are MBs), run per-partition, collect per-query
-    * errors. `estimator` must be serializable.
+    * estimator factory (its closure carries the weights, which are MBs),
+    * build one estimator per partition with `newEstimator(partition
+    * index)`, run the partition's queries on it, collect per-query
+    * errors. No two tasks share an estimator, so the rows depend only on
+    * the factory and the partitioning. `newEstimator` must be
+    * serializable.
     */
-  def runDistributed(spark: SparkSession, estimator: Seq[Pred] => Long,
+  def runDistributed(spark: SparkSession,
+      newEstimator: Int => (Seq[Pred] => Long),
       queries: Seq[Seq[Pred]], truths: Array[Long],
       parallelism: Int = 8): Array[(Int, Long, Double)] = {
-    val bcEst = spark.sparkContext.broadcast(estimator)
+    val bcEst = spark.sparkContext.broadcast(newEstimator)
     val indexed = queries.zipWithIndex.map { case (q, i) => (i, q, truths(i)) }
     spark.sparkContext.parallelize(indexed, parallelism)
-      .map { case (i, q, truth) =>
-        val est = bcEst.value(q)
-        (i, est, qError(est.toDouble, truth.toDouble))
+      .mapPartitionsWithIndex { (p, part) =>
+        val est = bcEst.value(p)
+        part.map { case (i, q, truth) =>
+          val e = est(q)
+          (i, e, qError(e.toDouble, truth.toDouble))
+        }
       }
       .collect()
       .sortBy(_._1)

@@ -148,7 +148,7 @@ class CoreSpec extends AnyFunSuite with BeforeAndAfterAll {
       Seq(Pred("d", Op.Leq, 2.0)), Seq(Pred("d", Op.Geq, 1.0)),
       Seq(Pred("d", Op.Eq, 3.0)))
     val truths = Array(3L, 5L, 2L)
-    val est: Seq[Pred] => Long = _.length match { case _ => 4L }
+    val est: Int => (Seq[Pred] => Long) = _ => _ => 4L
     val res = Workload.runDistributed(spark, est, queries, truths,
       parallelism = 2)
     assert(res.length == 3)
@@ -156,6 +156,26 @@ class CoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(res.forall(_._2 == 4L))
     assert(math.abs(res(0)._3 - 4.0 / 3.0) < 1e-12)
     assert(math.abs(res(1)._3 - 5.0 / 4.0) < 1e-12)
+  }
+
+  test("distributed runner gives the same rows on every call") {
+    // A large cardinality, so ceil(selectivity × N) shows every draw.
+    val tm = Dictionary.tableMeta(df(rows, schema), "t")
+      .copy(cardinality = 1L << 40)
+    val model = new graft.nn.Made(2, Seq(16),
+      tm.columns.map(_.distributionSize).toArray, inputEncoding = "one_hot",
+      seed = 21)
+    val queries = for (v <- Seq(1.0, 2.0, 3.0); op <- Seq(Op.Leq, Op.Geq);
+        s <- Seq("a", "b")) yield Seq(Pred("d", op, v), Pred("s", Op.Geq, s))
+    val truths = Array.fill(queries.length)(3L)
+    // One sampler per partition, seeded by the partition index: the two
+    // tasks running at once in local[2] share no sampler state.
+    val est: Int => (Seq[Pred] => Long) = p =>
+      new graft.est.ProgressiveSampling(model, tm, numSamples = 2000,
+        seed = 1234L + p).query
+    val runs = Seq.fill(3)(
+      Workload.runDistributed(spark, est, queries, truths, parallelism = 2).toSeq)
+    assert(runs.distinct.size == 1, runs.mkString("\n"))
   }
 
   test("results sink and golden-card source round-trip") {

@@ -166,4 +166,92 @@ class ProgressiveSpec extends AnyFunSuite {
     val est = sm.query(preds).toDouble / meta.cardinality
     assert(math.abs(est - exact) <= 0.1 * exact + 0.01, s"est=$est exact=$exact")
   }
+
+  /** Test-only [[ArModel]] that forwards every call to `inner` and
+    * records each forward's batch and the number of distinct rows in its
+    * input. */
+  private final class CountingArModel(inner: ArModel) extends ArModel {
+    val batches = scala.collection.mutable.ArrayBuffer[Int]()
+    val distinctRows = scala.collection.mutable.ArrayBuffer[Int]()
+    def nin: Int = inner.nin
+    def inputBins: Array[Int] = inner.inputBins
+    def ordering: Array[Int] = inner.ordering
+    def columnMasking: Boolean = inner.columnMasking
+    def totalInputSize: Int = inner.totalInputSize
+    def encodeColumn(naturalIdx: Int, values: Array[Int], out: Array[Float],
+        batch: Int): Unit = inner.encodeColumn(naturalIdx, values, out, batch)
+    def forwardEncoded(inp: Array[Float], batch: Int): Array[Float] = {
+      val w = totalInputSize
+      batches += batch
+      distinctRows += (0 until batch)
+        .map(r => inp.slice(r * w, (r + 1) * w).toSeq).distinct.size
+      inner.forwardEncoded(inp, batch)
+    }
+    def logitsForCol(idx: Int, logits: Array[Float], batch: Int): Array[Float] =
+      inner.logitsForCol(idx, logits, batch)
+  }
+
+  test("the model runs once per distinct sampled prefix, with pinned estimates") {
+    val meta = mkMeta(100000L)
+    // b is a wildcard sampled from its full conditional (no shortcircuit).
+    val preds = Seq(Pred("a", Op.Leq, 1), Pred("c", Op.Geq, 2))
+    val counting = new CountingArModel(trainedModel())
+    val est = new ProgressiveSampling(counting, meta, numSamples = 2000,
+      seed = 7L).selectivity(preds)
+    assert(java.lang.Double.doubleToRawLongBits(est) == 4602466424728344142L,
+      s"est=$est")
+    assert(counting.batches.head == 1)
+    assert(counting.batches == counting.distinctRows,
+      s"batches=${counting.batches} distinct=${counting.distinctRows}")
+    assert(counting.batches.forall(_ <= 2000))
+  }
+
+  test("diverging paths grow the groups up to numSamples") {
+    // 400 × 250 leading domains: after two sampled columns nearly every
+    // path has its own prefix.
+    val wide = Array(400, 250, 6)
+    val model = new Made(3, Seq(16), wide, inputEncoding = "one_hot", seed = 4)
+    val meta = TableMeta("w", 100000L, Seq("a", "b", "c").zip(wide).map {
+      case (n, k) => ColumnMeta(n, IntegerType,
+        Array.tabulate(k)(identity).map(_.asInstanceOf[Any]), hasNull = false)
+    })
+    val counting = new CountingArModel(model)
+    new ProgressiveSampling(counting, meta, numSamples = 1000, seed = 5L)
+      .selectivity(Seq(Pred("a", Op.Geq, 10), Pred("c", Op.Leq, 3)))
+    assert(counting.batches.head == 1)
+    assert(counting.batches == counting.distinctRows)
+    assert(counting.batches.last > 900 && counting.batches.last <= 1000,
+      s"batches=${counting.batches}")
+  }
+
+  test("concurrent selectivity calls on one shared MADE and Transformer match serial") {
+    val meta = mkMeta(100000L)
+    val made = trainedModel(columnMasking = true)
+    val tf = new graft.nn.Transformer(3, bins, dModel = 12, dFf = 20,
+      numHeads = 3, numBlocks = 2, columnMasking = true, seed = 6)
+    val rng = new java.util.Random(5)
+    val data = Array.fill(192)(bins.map(rng.nextInt))
+    graft.nn.Trainer.train(tf, data, epochs = 1, batchSize = 64, seed = 3)
+    val qrng = new java.util.Random(9)
+    val ops = Array[Op](Op.Leq, Op.Geq, Op.Eq)
+    val qs = Seq.fill(12) {
+      Seq("a", "b", "c").zip(bins).filter(_ => qrng.nextBoolean())
+        .map { case (n, k) => Pred(n, ops(qrng.nextInt(3)), qrng.nextInt(k)) }
+    }
+    // (model, query, shortcircuit) jobs, each with its own seeded sampler.
+    val jobs = for {
+      m <- Seq[ArModel](made, tf); (q, i) <- qs.zipWithIndex
+      sc <- Seq(false, true)
+    } yield () => new ProgressiveSampling(m, meta, numSamples = 600,
+      shortcircuit = sc, seed = 100L + i).selectivity(q)
+    val serial = jobs.map(_())
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    try {
+      val futures = jobs.map(j => pool.submit(new java.util.concurrent.Callable[Double] {
+        def call(): Double = j()
+      }))
+      val concurrent = futures.map(_.get())
+      assert(concurrent == serial)
+    } finally pool.shutdown()
+  }
 }
