@@ -177,6 +177,13 @@ final class Made(
     if (doDirectIo) new MaskedLinear(totalInputSize, totalOutputSize, preserveW)
     else null
 
+  /** Every dense layer, in layer order, the direct-io layer last. */
+  private[nn] val linears: Array[MaskedLinear] = layers.flatMap {
+    case l: MaskedLinear => Seq(l)
+    case b: MaskedResidualBlock => Seq(b.l1, b.l2)
+    case _ => Nil
+  } ++ Option(directIoLayer)
+
   /** Learnable [MASK] representation per column (made.py:186-191). */
   val unkEmbeddings: Array[Param] =
     if (columnMasking) Array.tabulate(nin)(i => new Param(new Array[Float](inputBinsEncoded(i))))
@@ -302,12 +309,7 @@ final class Made(
 
   def initWeights(): Unit = {
     val wrng = new java.util.Random(seed ^ 0x5DEECE66DL)
-    layers.foreach {
-      case l: MaskedLinear => l.initXavier(wrng)
-      case b: MaskedResidualBlock => b.l1.initXavier(wrng); b.l2.initXavier(wrng)
-      case _ => ()
-    }
-    if (directIoLayer != null) directIoLayer.initXavier(wrng)
+    linears.foreach(_.initXavier(wrng))
   }
 
   // ---- input encoding (made.py:492-612) ----
@@ -318,7 +320,11 @@ final class Made(
     * progressive sampler's incremental buffer updates.
     */
   def encodeColumn(naturalIdx: Int, values: Array[Int], out: Array[Float],
-      batch: Int): Unit = {
+      batch: Int): Unit = encodeRows(naturalIdx, values, out, 0, batch)
+
+  /** Rows `[r0, r1)` of [[encodeColumn]]; `values(r)` is row r's bin. */
+  private def encodeRows(naturalIdx: Int, values: Array[Int], out: Array[Float],
+      r0: Int, r1: Int): Unit = {
     val off = if (naturalIdx == 0) 0 else inputBinsEncodedCumsum(naturalIdx - 1)
     val w = inputBinsEncoded(naturalIdx)
     val stride = totalInputSize
@@ -326,8 +332,8 @@ final class Made(
       require(unkEmbeddings != null,
         "wildcard encoding requires columnMasking=true")
       val unk = unkEmbeddings(naturalIdx).data
-      var r = 0
-      while (r < batch) {
+      var r = r0
+      while (r < r1) {
         System.arraycopy(unk, 0, out, r * stride + off, w)
         r += 1
       }
@@ -336,15 +342,15 @@ final class Made(
         val w = inputBinsEncoded(naturalIdx)
         if (usesEmbedding(naturalIdx)) {
           val e = embedWeights(naturalIdx).data
-          var r = 0
-          while (r < batch) {
+          var r = r0
+          while (r < r1) {
             System.arraycopy(e, values(r) * w, out, r * stride + off, w)
             r += 1
           }
         } else {
           // one-hot fallback for small domains (made.py:435-440)
-          var r = 0
-          while (r < batch) {
+          var r = r0
+          while (r < r1) {
             val base = r * stride + off
             java.util.Arrays.fill(out, base, base + w, 0f)
             out(base + values(r)) = 1f
@@ -352,16 +358,16 @@ final class Made(
           }
         }
       case "one_hot" =>
-        var r = 0
-        while (r < batch) {
+        var r = r0
+        while (r < r1) {
           val base = r * stride + off
           java.util.Arrays.fill(out, base, base + w, 0f)
           out(base + values(r)) = 1f
           r += 1
         }
       case "binary" =>
-        var r = 0
-        while (r < batch) {
+        var r = r0
+        while (r < r1) {
           val base = r * stride + off
           val v = values(r)
           var b = 0
@@ -369,8 +375,8 @@ final class Made(
           r += 1
         }
       case null =>
-        var r = 0
-        while (r < batch) { out(r * stride + off) = values(r).toFloat; r += 1 }
+        var r = r0
+        while (r < r1) { out(r * stride + off) = values(r).toFloat; r += 1 }
       case other => throw new IllegalArgumentException(other)
     }
   }
@@ -378,76 +384,111 @@ final class Made(
   /** Per-batch column-masking state for backprop into unk embeddings. */
   private var dropMask: Array[Array[Boolean]] = null
   private var dataCache: Array[Array[Int]] = null
-
-  /** Full-row encode of a training batch `data[r][c]` = bin id. With
-    * columnMasking and train=true, applies the reference's wildcard
-    * dropout (made.py:452-487): per column draw p ~ U{0..nin-1}/nin, then
-    * per row replace the encoding with the [MASK] embedding w.p. p.
-    */
-  def encodeInput(data: Array[Array[Int]], train: Boolean): Array[Float] = {
-    val batch = data.length
-    val out = new Array[Float](batch * totalInputSize)
-    val colBuf = new Array[Int](batch)
-    dataCache = data
-    dropMask = null
-    if (columnMasking && train) dropMask = new Array[Array[Boolean]](nin)
-    for (c <- 0 until nin) {
-      var r = 0
-      while (r < batch) { colBuf(r) = data(r)(c); r += 1 }
-      encodeColumn(c, colBuf, out, batch)
-      if (columnMasking && train) {
-        val p = rng.nextInt(nin).toDouble / nin
-        val drops = new Array[Boolean](batch)
-        val off = if (c == 0) 0 else inputBinsEncodedCumsum(c - 1)
-        val w = inputBinsEncoded(c)
-        val unk = unkEmbeddings(c).data
-        r = 0
-        while (r < batch) {
-          if (rng.nextDouble() < p) {
-            drops(r) = true
-            System.arraycopy(unk, 0, out, r * totalInputSize + off, w)
-          }
-          r += 1
-        }
-        dropMask(c) = drops
-      }
-    }
-    out
-  }
+  /** The last training forward's layer steps, for `backwardToInput`. */
+  @transient private var steps: Array[RowStep] = null
+  @transient private var directIoStep: RowStep = null
 
   // ---- forward / backward ----
 
-  /** Inference forward from an encoded input buffer (made.py:637-643).
-    * Keeps no backward cache (a multi-mask model only rewrites its
-    * per-call masked-weight scratch, with identical values), so any
-    * number of threads may call it at once, with any batch sizes. */
-  def forwardEncoded(inp: Array[Float], batch: Int): Array[Float] =
-    run(inp, batch, cache = false)
-
-  /** Training forward: encode + net (made.py:614-635); every layer also
-    * keeps what `backward` needs. */
-  def forward(data: Array[Array[Int]], train: Boolean): Array[Float] =
-    run(encodeInput(data, train), data.length, cache = true)
-
-  private[nn] def run(inp: Array[Float], batch: Int, cache: Boolean): Array[Float] = {
+  /** Inference forward from an encoded input buffer (made.py:637-643),
+    * one fork per layer. Keeps no backward cache (a multi-mask model only
+    * rewrites its per-call masked-weight scratch, with identical values),
+    * so any number of threads may call it at once, with any batch sizes. */
+  def forwardEncoded(inp: Array[Float], batch: Int): Array[Float] = {
     var h = inp
     var i = 0
-    while (i < layers.length) { h = layers(i).forward(h, batch, cache); i += 1 }
+    while (i < layers.length) { h = layers(i).forward(h, batch); i += 1 }
     if (directIoLayer != null) {
-      val res = directIoLayer.forward(inp, batch, cache)
+      val res = directIoLayer.forward(inp, batch)
       var k = 0
       while (k < h.length) { h(k) += res(k); k += 1 }
     }
     h
   }
 
+  /** Row ranges of a training step: the count `Nn.chunks` gives every
+    * layer that forks at this batch, 1 when none does. */
+  private def stepChunks(batch: Int): Int =
+    linears.map(l => Nn.chunks(batch, l.nIn * l.nOut)).max
+
+  /** Training forward: encode + net (made.py:614-635), keeping what
+    * `backward` needs. With columnMasking and train=true it applies the
+    * reference's wildcard dropout (made.py:452-487): per column draw
+    * p ~ U{0..nin-1}/nin, then per row replace the encoding with the
+    * [MASK] embedding w.p. p. The draws run here, in (column, row) order;
+    * the encoding runs in the step's row ranges. */
+  def forward(data: Array[Array[Int]], train: Boolean): Array[Float] = {
+    val batch = data.length
+    val drops =
+      if (columnMasking && train) Array.tabulate(nin) { _ =>
+        val p = rng.nextInt(nin).toDouble / nin
+        Array.fill(batch)(rng.nextDouble() < p)
+      } else null
+    dataCache = data
+    dropMask = drops
+    val inp = new Array[Float](batch * totalInputSize)
+    val values = Array.ofDim[Int](nin, batch)
+    trainForward(inp, batch) { (r0, r1) =>
+      var c = 0
+      while (c < nin) {
+        val v = values(c)
+        var r = r0
+        while (r < r1) { v(r) = data(r)(c); r += 1 }
+        encodeRows(c, v, inp, r0, r1)
+        if (drops != null) {
+          val off = if (c == 0) 0 else inputBinsEncodedCumsum(c - 1)
+          val unk = unkEmbeddings(c).data
+          r = r0
+          while (r < r1) {
+            if (drops(c)(r)) System.arraycopy(unk, 0, inp, r * totalInputSize + off, unk.length)
+            r += 1
+          }
+        }
+        c += 1
+      }
+    }
+  }
+
+  /** The training forward over `inp`, chunk-major: one fork whose row
+    * ranges each run `encode(r0, r1)`, which fills those rows of `inp`,
+    * then every layer and the direct-io add. Returns the logits; every
+    * layer's full-batch buffers stay for `backwardToInput`. */
+  private[nn] def trainForward(inp: Array[Float], batch: Int)(
+      encode: (Int, Int) => Unit): Array[Float] = {
+    val s = new Array[RowStep](layers.length)
+    var h = inp
+    var i = 0
+    while (i < layers.length) { s(i) = layers(i).step(h, batch); h = s(i).out; i += 1 }
+    val logits = h
+    val dio = if (directIoLayer != null) directIoLayer.step(inp, batch) else null
+    Nn.forRows(batch, stepChunks(batch)) { (_, r0, r1) =>
+      encode(r0, r1)
+      var i = 0
+      while (i < s.length) { s(i).forward(r0, r1); i += 1 }
+      if (dio != null) {
+        dio.forward(r0, r1)
+        var k = r0 * totalOutputSize
+        while (k < r1 * totalOutputSize) { logits(k) += dio.out(k); k += 1 }
+      }
+    }
+    steps = s
+    directIoStep = dio
+    logits
+  }
+
   /** Backward from dL/dLogits; accumulates all param grads including the
     * unk embeddings touched by column masking. */
   def backward(gradLogits: Array[Float], batch: Int): Unit = {
-    val g = backwardToInput(gradLogits, batch)
-    // g = dL/dEncodedInput; route dropped slices into unk embedding
-    // grads and non-dropped embed-encoded slices into the input
-    // embeddings (made.py:448-449 backprop path).
+    // Only the slices routed below need dL/dEncodedInput: dropped ones
+    // into the unk embeddings and non-dropped embed-encoded ones into the
+    // input embeddings (made.py:448-449 backprop path).
+    val need = new Array[Boolean](batch * totalInputSize)
+    for (c <- 0 until nin; r <- 0 until batch
+         if embedWeights(c) != null || (dropMask != null && dropMask(c)(r))) {
+      val base = r * totalInputSize + (if (c == 0) 0 else inputBinsEncodedCumsum(c - 1))
+      java.util.Arrays.fill(need, base, base + inputBinsEncoded(c), true)
+    }
+    val g = backwardInput(gradLogits, batch, need)
     if (dropMask != null || embedWeights.exists(_ != null)) {
       for (c <- 0 until nin) {
         val off = if (c == 0) 0 else inputBinsEncodedCumsum(c - 1)
@@ -474,18 +515,40 @@ final class Made(
 
   /** Gradient wrt the (encoded) input, accumulating the layers' param
     * grads on the way — also the autoregressiveness check's probe
-    * (made.py:710-752). Must follow a caching forward (`forward`, or
-    * `run` with `cache = true`). */
-  def backwardToInput(gradLogits: Array[Float], batch: Int): Array[Float] = {
+    * (made.py:710-752). Chunk-major like `trainForward`, which it must
+    * follow: one fork whose row ranges each run every layer's backward
+    * and the direct-io add; the layers complete their parameter
+    * gradients after the join. */
+  def backwardToInput(gradLogits: Array[Float], batch: Int): Array[Float] =
+    backwardInput(gradLogits, batch, null)
+
+  /** [[backwardToInput]], computing only the input gradients `need`
+    * marks (null = all); the others may be left 0. */
+  private def backwardInput(gradLogits: Array[Float], batch: Int,
+      need: Array[Boolean]): Array[Float] = {
+    val chunks = stepChunks(batch)
+    val gs = new Array[RowGrad](steps.length)
     var g = gradLogits
-    var i = layers.length - 1
-    while (i >= 0) { g = layers(i).backward(g, batch); i -= 1 }
-    if (directIoLayer != null) {
-      val gDirect = directIoLayer.backward(gradLogits, batch)
-      var k = 0
-      while (k < g.length) { g(k) += gDirect(k); k += 1 }
+    var i = steps.length - 1
+    while (i >= 0) {
+      gs(i) = steps(i).backward(g, chunks, if (i == 0) need else null)
+      g = gs(i).gx
+      i -= 1
     }
-    g
+    val gIn = g
+    val dio = if (directIoStep != null) directIoStep.backward(gradLogits, chunks, need) else null
+    Nn.forRows(batch, chunks) { (c, r0, r1) =>
+      var i = gs.length - 1
+      while (i >= 0) { gs(i).rows(c, r0, r1); i -= 1 }
+      if (dio != null) {
+        dio.rows(c, r0, r1)
+        var k = r0 * totalInputSize
+        while (k < r1 * totalInputSize) { gIn(k) += dio.gx(k); k += 1 }
+      }
+    }
+    gs.foreach(_.finish())
+    if (dio != null) dio.finish()
+    gIn
   }
 
   /** Full-domain logits for `log p(x_i | x_<i)` (made.py:645-674):
@@ -531,18 +594,23 @@ final class Made(
     * wrt the raw embedSize-wide head (dL/dhead = Σ_v dL/dlogit_v · E_v)
     * and the shared embedding rows accumulate dL/dE_v = dL/dlogit_v ·
     * head directly (made.py:660-674 tied backward).
+    *
+    * One fork over the training step's row ranges computes the one-hot
+    * heads' loss terms and gradients; the tied heads follow on the
+    * caller, since their shared embedding gradients add up over rows.
+    * The terms are summed there too, in (column, row) order.
     */
   def nllWithGrad(logits: Array[Float], data: Array[Array[Int]],
       batch: Int): (Double, Array[Float]) = {
     val grad = new Array[Float](logits.length)
-    var total = 0.0
+    val terms = new Array[Double](nin * batch) // column c's row r at c·batch + r
     val invB = 1f / batch
-    for (c <- 0 until nin) {
+    def rows(c: Int, r0: Int, r1: Int): Unit = {
       val l = if (c == 0) 0 else logitIndices(c - 1)
       val w = encodedOutBins(c)
       if (!tiedOutput(c)) {
-        var r = 0
-        while (r < batch) {
+        var r = r0
+        while (r < r1) {
           val base = r * totalOutputSize + l
           var mx = Float.NegativeInfinity
           var j = 0
@@ -552,7 +620,7 @@ final class Made(
           while (j < w) { sum += math.exp(logits(base + j) - mx); j += 1 }
           val logZ = mx + math.log(sum)
           val t = data(r)(c)
-          total += logZ - logits(base + t)
+          terms(c * batch + r) = logZ - logits(base + t)
           j = 0
           while (j < w) {
             grad(base + j) =
@@ -566,8 +634,8 @@ final class Made(
         val dom = inputBins(c)
         val e = embedWeights(c)
         val lg = new Array[Float](dom)
-        var r = 0
-        while (r < batch) {
+        var r = r0
+        while (r < r1) {
           val base = r * totalOutputSize + l
           var mx = Float.NegativeInfinity
           var v = 0
@@ -584,7 +652,7 @@ final class Made(
           while (v < dom) { sum += math.exp(lg(v) - mx); v += 1 }
           val logZ = mx + math.log(sum)
           val t = data(r)(c)
-          total += logZ - lg(t)
+          terms(c * batch + r) = logZ - lg(t)
           v = 0
           while (v < dom) {
             val gl = ((math.exp(lg(v) - logZ)).toFloat -
@@ -603,6 +671,13 @@ final class Made(
         }
       }
     }
+    Nn.forRows(batch, stepChunks(batch)) { (_, r0, r1) =>
+      for (c <- 0 until nin if !tiedOutput(c)) rows(c, r0, r1)
+    }
+    for (c <- 0 until nin if tiedOutput(c)) rows(c, 0, batch)
+    var total = 0.0
+    var k = 0
+    while (k < terms.length) { total += terms(k); k += 1 }
     (total / batch, grad)
   }
 

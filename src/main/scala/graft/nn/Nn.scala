@@ -13,7 +13,13 @@ package graft.nn
   * input index, so a seeded model's logits are the same bits on any core
   * count. A backward that forks sums gradients per chunk and merges the
   * chunks in order, so its bits depend on the chunk count (`Nn.chunks`)
-  * and never on scheduling.
+  * and never on scheduling. MADE's training step runs chunk-major: its
+  * forward, loss and backward fork once each, and every row range runs
+  * through all the layers in turn ([[RowStep]]). Each dense layer still
+  * sums its parameter gradients the way its own fork would — per range,
+  * merged in range order, when it forks at that batch; in row order
+  * when it does not — so the trained bits are those of a step that forks
+  * layer by layer.
   *
   * Scale posture: the 100 TB path never moves raw data to the driver —
   * only encoded minibatches (bounded) flow in and model weights (MBs)
@@ -114,18 +120,23 @@ private[nn] object Nn {
   /** max(x, 0) elementwise, into a fresh array. */
   def relu(x: Array[Float]): Array[Float] = {
     val out = new Array[Float](x.length)
-    var k = 0
-    while (k < x.length) { out(k) = if (x(k) > 0f) x(k) else 0f; k += 1 }
+    relu(x, out, 0, x.length)
     out
   }
 
-  /** ReLU's backward: `g` where the activation `a` (its input or its
-    * output: both are positive at the same places) is positive, else 0. */
-  def reluBackward(a: Array[Float], g: Array[Float]): Array[Float] = {
-    val out = new Array[Float](g.length)
-    var k = 0
-    while (k < g.length) { out(k) = if (a(k) > 0f) g(k) else 0f; k += 1 }
-    out
+  /** Elements `[k0, k1)` of max(x, 0) into `out` (`out` may be `x`). */
+  def relu(x: Array[Float], out: Array[Float], k0: Int, k1: Int): Unit = {
+    var k = k0
+    while (k < k1) { out(k) = if (x(k) > 0f) x(k) else 0f; k += 1 }
+  }
+
+  /** Elements `[k0, k1)` of ReLU's backward into `out` (`out` may be
+    * `g`): `g` where the activation `a` (its input or its output: both
+    * are positive at the same places) is positive, else 0. */
+  def reluBackward(a: Array[Float], g: Array[Float], out: Array[Float],
+      k0: Int, k1: Int): Unit = {
+    var k = k0
+    while (k < k1) { out(k) = if (a(k) > 0f) g(k) else 0f; k += 1 }
   }
 }
 
@@ -147,17 +158,37 @@ trait Trainable extends Serializable {
 }
 
 sealed trait Layer extends Serializable {
-  /** Forward over `batch` rows; returns [batch, nOut]. `cache` keeps
-    * what backward needs (training only); with `cache = false` the call
-    * keeps nothing, so any number of threads may run it at once, with any
-    * batch sizes. */
-  def forward(x: Array[Float], batch: Int, cache: Boolean): Array[Float]
-  /** Backward given dL/dOut after a caching forward; accumulates param
-    * grads, returns dL/dIn. */
-  def backward(gradOut: Array[Float], batch: Int): Array[Float]
+  /** Forward over `batch` rows; returns [batch, nOut]. Keeps nothing, so
+    * any number of threads may run it at once, with any batch sizes. */
+  def forward(x: Array[Float], batch: Int): Array[Float]
+  /** This layer's part of a training step over the `batch` rows of `x`
+    * (see [[RowStep]]). */
+  private[nn] def step(x: Array[Float], batch: Int): RowStep
   def params: Seq[Param]
   def nIn: Int
   def nOut: Int
+}
+
+/** One layer's part of a training step over full-batch buffers, whose
+  * rows the caller splits into ranges: `forward(r0, r1)` writes rows
+  * `[r0, r1)` of `out` from the same rows of the step's input. Rows are
+  * independent, so a caller may run a range through every layer in turn
+  * inside one fork (`Made.trainForward`). */
+private[nn] abstract class RowStep(val out: Array[Float]) {
+  def forward(r0: Int, r1: Int): Unit
+  /** The backward from dL/dout, its rows split into `chunks` ranges.
+    * `need`, when not null, marks the dL/dinput entries the caller will
+    * read, `[batch, nIn]`; a step may leave the others 0. */
+  def backward(gOut: Array[Float], chunks: Int, need: Array[Boolean] = null): RowGrad
+}
+
+/** A step's backward: `rows(c, r0, r1)` writes rows `[r0, r1)` of
+  * dL/dinput `gx` from the same rows of dL/dout (range `c` of the
+  * caller's `chunks`); `finish()`, after every range, completes the
+  * parameter gradients. */
+private[nn] abstract class RowGrad(val gx: Array[Float]) {
+  def rows(c: Int, r0: Int, r1: Int): Unit
+  def finish(): Unit = ()
 }
 
 /** `y = x (M ⊙ W) + b`, the one dense layer of both model families:
@@ -184,7 +215,8 @@ final class MaskedLinear(val nIn: Int, val nOut: Int,
   val bias = new Param(new Array[Float](nOut))
   /** null = dense. Layout [nIn, nOut], 1f = connected. */
   var mask: Array[Float] = null
-  private var xCache: Array[Float] = null
+  /** The step of the last caching `forward`, for `backward`. */
+  @transient private var cached: RowStep = null
   // Materialized M ⊙ W for the preserveWeights path: refreshed once per
   // forward/backward CALL (O(nIn·nOut), amortized over the O(batch·
   // nIn·nOut) loop it feeds) so the hot inner loops stay dense instead
@@ -305,95 +337,136 @@ final class MaskedLinear(val nIn: Int, val nOut: Int,
     }
   }
 
+  def forward(x: Array[Float], batch: Int): Array[Float] =
+    forward(x, batch, cache = false)
+
+  /** Forward forked over this layer's own row ranges; `cache` keeps the
+    * step for `backward` (the Transformer's layer-by-layer training). */
   def forward(x: Array[Float], batch: Int, cache: Boolean): Array[Float] = {
-    if (cache) xCache = x
-    val out = new Array[Float](batch * nOut)
+    val s = step(x, batch)
+    Nn.forRows(batch, Nn.chunks(batch, nIn * nOut))((_, r0, r1) => s.forward(r0, r1))
+    if (cache) cached = s
+    s.out
+  }
+
+  /** Backward given dL/dOut after a caching `forward`, forked like it;
+    * accumulates param grads, returns dL/dIn. */
+  def backward(gradOut: Array[Float], batch: Int): Array[Float] = {
+    val chunks = Nn.chunks(batch, nIn * nOut)
+    val g = cached.backward(gradOut, chunks)
+    Nn.forRows(batch, chunks)(g.rows)
+    g.finish()
+    g.gx
+  }
+
+  private[nn] def step(x: Array[Float], batch: Int): RowStep = {
     val w = effectiveW()
-    Nn.forRows(batch, Nn.chunks(batch, nIn * nOut)) { (_, r0, r1) =>
-      var r = r0
-      while (r + 1 < r1) { forwardRows(x, w, out, r, r + 1); r += 2 }
-      if (r < r1) forwardRows(x, w, out, r, r)
+    new RowStep(new Array[Float](batch * nOut)) {
+      def forward(r0: Int, r1: Int): Unit = {
+        var r = r0
+        while (r + 1 < r1) { forwardRows(x, w, out, r, r + 1); r += 2 }
+        if (r < r1) forwardRows(x, w, out, r, r)
+      }
+      def backward(gOut: Array[Float], chunks: Int, need: Array[Boolean]): RowGrad =
+        backwardStep(x, w, gOut, need, batch, chunks)
     }
-    out
+  }
+
+  /** The backward of a step over `batch` rows that the caller splits into
+    * `chunks` ranges. Parameter gradients keep the summation order of
+    * this layer's own fork (`Nn.chunks` at its size), whatever `chunks`
+    * is: a layer that forks sums each range into its own buffer and
+    * `finish` adds the buffers in range order; one that does not adds
+    * every row in row order, inside its one range or, when the caller
+    * splits the rows anyway, in `finish` from the full-batch buffers. */
+  private def backwardStep(x: Array[Float], w: Array[Float], g: Array[Float],
+      need: Array[Boolean], batch: Int, chunks: Int): RowGrad = {
+    val own = Nn.chunks(batch, nIn * nOut)
+    require(own == 1 || own == chunks, s"$own row ranges of a layer vs $chunks of its step")
+    val gws = if (own > 1) Array.fill(own)(new Array[Float](weight.grad.length)) else null
+    val gbs = if (own > 1) Array.fill(own)(new Array[Float](bias.grad.length)) else null
+    new RowGrad(new Array[Float](batch * nIn)) {
+      def rows(c: Int, r0: Int, r1: Int): Unit =
+        if (own > 1) backwardRange(x, g, w, gx, need, gws(c), gbs(c), r0, r1)
+        else if (chunks == 1) backwardRange(x, g, w, gx, need, weight.grad, bias.grad, r0, r1)
+        else backwardRange(x, g, w, gx, need, null, null, r0, r1)
+      override def finish(): Unit = {
+        val gw = weight.grad; val gb = bias.grad
+        if (own > 1) {
+          var c = 0
+          while (c < own) {
+            val lw = gws(c); val lb = gbs(c)
+            var k = 0
+            while (k < gw.length) { gw(k) += lw(k); k += 1 }
+            k = 0
+            while (k < gb.length) { gb(k) += lb(k); k += 1 }
+            c += 1
+          }
+        } else if (chunks > 1) backwardRange(x, g, w, null, null, gw, gb, 0, batch)
+        // Mask the weight gradient so Adam's moments never see masked
+        // entries (equivalent to differentiating through W_eff = M ⊙ W).
+        if (mask != null) {
+          var k = 0
+          while (k < gw.length) { if (mask(k) == 0f) gw(k) = 0f; k += 1 }
+        }
+      }
+    }
   }
 
   /** Rows `[r0, r1)`: bias and weight grads accumulate into `gb`/`gw` in
-    * row order; each input grad is `Σ_o g_o·w_io` in ascending `o`. */
+    * row order; each input grad is `Σ_o g_o·w_io` in ascending `o`.
+    * `gw == null` computes the input grads only, `gx == null` the
+    * parameter grads only, and `need` (null = all) limits the input
+    * grads to its entries. A zero input adds nothing to `gw`: a weight
+    * grad that starts at +0 is never −0, so adding x·g = ±0 (finite g)
+    * leaves its bits as they are. */
   private def backwardRange(x: Array[Float], g: Array[Float], w: Array[Float],
-      gx: Array[Float], gw: Array[Float], gb: Array[Float], r0: Int, r1: Int): Unit = {
+      gx: Array[Float], need: Array[Boolean], gw: Array[Float], gb: Array[Float],
+      r0: Int, r1: Int): Unit = {
     var r = r0
     while (r < r1) {
       val xo = r * nIn; val oo = r * nOut
       var o = 0
-      while (o < nOut) { gb(o) += g(oo + o); o += 1 }
+      if (gb != null) while (o < nOut) { gb(o) += g(oo + o); o += 1 }
       var i = 0
       while (i < nIn) {
         val wo = i * nOut
         val xv = x(xo + i)
-        var acc = 0f
+        val toX = gx != null && (need == null || need(xo + i))
+        val toW = gw != null && xv != 0f
         o = 0
-        while (o < nOut) {
-          val gv = g(oo + o)
-          gw(wo + o) += gv * xv
-          acc += gv * w(wo + o)
-          o += 1
-        }
-        gx(xo + i) = acc
+        if (toX) {
+          var acc = 0f
+          if (toW) while (o < nOut) {
+            val gv = g(oo + o)
+            gw(wo + o) += gv * xv
+            acc += gv * w(wo + o)
+            o += 1
+          } else while (o < nOut) { acc += g(oo + o) * w(wo + o); o += 1 }
+          gx(xo + i) = acc
+        } else if (toW) while (o < nOut) { gw(wo + o) += g(oo + o) * xv; o += 1 }
         i += 1
       }
       r += 1
     }
   }
 
-  def backward(gradOut: Array[Float], batch: Int): Array[Float] = {
-    val x = xCache
-    val w = effectiveW()
-    val gx = new Array[Float](batch * nIn)
-    val chunks = Nn.chunks(batch, nIn * nOut)
-    if (chunks <= 1) backwardRange(x, gradOut, w, gx, weight.grad, bias.grad, 0, batch)
-    else {
-      // Disjoint rows per chunk; weight/bias grads go to per-chunk local
-      // buffers merged in chunk order (no atomics).
-      val localGw = Array.fill(chunks)(new Array[Float](weight.grad.length))
-      val localGb = Array.fill(chunks)(new Array[Float](bias.grad.length))
-      Nn.forRows(batch, chunks) { (c, r0, r1) =>
-        backwardRange(x, gradOut, w, gx, localGw(c), localGb(c), r0, r1)
-      }
-      val gw = weight.grad; val gb = bias.grad
-      var c = 0
-      while (c < chunks) {
-        val lw = localGw(c); val lb = localGb(c)
-        var k = 0
-        while (k < gw.length) { gw(k) += lw(k); k += 1 }
-        k = 0
-        while (k < gb.length) { gb(k) += lb(k); k += 1 }
-        c += 1
-      }
-    }
-    // Mask the weight gradient so Adam's moments never see masked entries
-    // (equivalent to differentiating through W_eff = M ⊙ W).
-    if (mask != null) {
-      val gw = weight.grad
-      var k = 0
-      while (k < gw.length) { if (mask(k) == 0f) gw(k) = 0f; k += 1 }
-    }
-    gx
-  }
-
   def params: Seq[Param] = Seq(weight, bias)
 }
 
 final class ReLU(val dim: Int) extends Layer {
-  private var outCache: Array[Float] = null
   def nIn: Int = dim
   def nOut: Int = dim
-  def forward(x: Array[Float], batch: Int, cache: Boolean): Array[Float] = {
-    val out = Nn.relu(x)
-    if (cache) outCache = out
-    out
-  }
-  def backward(gradOut: Array[Float], batch: Int): Array[Float] =
-    Nn.reluBackward(outCache, gradOut)
+  def forward(x: Array[Float], batch: Int): Array[Float] = Nn.relu(x)
+  private[nn] def step(x: Array[Float], batch: Int): RowStep =
+    new RowStep(new Array[Float](batch * dim)) {
+      def forward(r0: Int, r1: Int): Unit = Nn.relu(x, out, r0 * dim, r1 * dim)
+      def backward(gOut: Array[Float], chunks: Int, need: Array[Boolean]): RowGrad =
+        new RowGrad(new Array[Float](batch * dim)) {
+          def rows(c: Int, r0: Int, r1: Int): Unit =
+            Nn.reluBackward(out, gOut, gx, r0 * dim, r1 * dim)
+        }
+    }
   def params: Seq[Param] = Nil
 }
 
@@ -403,28 +476,51 @@ final class MaskedResidualBlock(val dim: Int,
     val preserveWeights: Boolean = false) extends Layer {
   val l1 = new MaskedLinear(dim, dim, preserveWeights)
   val l2 = new MaskedLinear(dim, dim, preserveWeights)
-  private var xCache: Array[Float] = null
-  private var h1Cache: Array[Float] = null
   def nIn: Int = dim
   def nOut: Int = dim
   def setMaskInOut(m: Array[Array[Boolean]]): Unit = {
     l1.setMaskInOut(m); l2.setMaskInOut(m)
   }
-  def forward(x: Array[Float], batch: Int, cache: Boolean): Array[Float] = {
-    val h1 = l1.forward(Nn.relu(x), batch, cache)
-    val h2 = l2.forward(Nn.relu(h1), batch, cache)
-    if (cache) { xCache = x; h1Cache = h1 }
-    val out = new Array[Float](x.length)
+  def forward(x: Array[Float], batch: Int): Array[Float] = {
+    val out = l2.forward(Nn.relu(l1.forward(Nn.relu(x), batch)), batch)
     var k = 0
-    while (k < x.length) { out(k) = x(k) + h2(k); k += 1 }
+    while (k < x.length) { out(k) = x(k) + out(k); k += 1 }
     out
   }
-  def backward(gradOut: Array[Float], batch: Int): Array[Float] = {
-    val gA1 = l1.backward(Nn.reluBackward(h1Cache, l2.backward(gradOut, batch)), batch)
-    val gX = Nn.reluBackward(xCache, gA1)
-    var k = 0
-    while (k < gX.length) { gX(k) = gradOut(k) + gX(k); k += 1 }
-    gX
+  /** `a0 = act(x)` feeds L1; L1's output becomes `act(h1)` in place and
+    * feeds L2; L2's output becomes the block's output in place. ReLU's
+    * backward reads `a0` and `act(h1)`, positive where `x` and `h1` are. */
+  private[nn] def step(x: Array[Float], batch: Int): RowStep = {
+    val a0 = new Array[Float](batch * dim)
+    val s1 = l1.step(a0, batch)
+    val a1 = s1.out
+    val s2 = l2.step(a1, batch)
+    new RowStep(s2.out) {
+      def forward(r0: Int, r1: Int): Unit = {
+        val k0 = r0 * dim; val k1 = r1 * dim
+        Nn.relu(x, a0, k0, k1)
+        s1.forward(r0, r1)
+        Nn.relu(a1, a1, k0, k1)
+        s2.forward(r0, r1)
+        var k = k0
+        while (k < k1) { out(k) = x(k) + out(k); k += 1 }
+      }
+      def backward(gOut: Array[Float], chunks: Int, need: Array[Boolean]): RowGrad = {
+        val b2 = s2.backward(gOut, chunks)
+        val b1 = s1.backward(b2.gx, chunks)
+        new RowGrad(b1.gx) {
+          def rows(c: Int, r0: Int, r1: Int): Unit = {
+            val k0 = r0 * dim; val k1 = r1 * dim
+            b2.rows(c, r0, r1)
+            Nn.reluBackward(a1, b2.gx, b2.gx, k0, k1)
+            b1.rows(c, r0, r1)
+            var k = k0
+            while (k < k1) { gx(k) = gOut(k) + (if (a0(k) > 0f) gx(k) else 0f); k += 1 }
+          }
+          override def finish(): Unit = { b2.finish(); b1.finish() }
+        }
+      }
+    }
   }
   def params: Seq[Param] = l1.params ++ l2.params
 }

@@ -66,6 +66,22 @@ object Trainer {
   final case class EpochLog(epoch: Int, meanNllNats: Double,
       entropyGapBits: Double)
 
+  /** One minibatch step at learning rate `lr`; returns the batch's mean
+    * loss. */
+  private def step(model: Trainable, opt: Adam, lr: Float,
+      batch: Array[Array[Int]]): Double = {
+    opt.lr = lr
+    opt.zeroGrad()
+    // Per-batch mask/ordering cycling (train_model.py:183-185); no-op for
+    // single-mask models.
+    model.updateMasks()
+    val logits = model.forward(batch, train = true)
+    val (loss, grad) = model.nllWithGrad(logits, batch, batch.length)
+    model.backward(grad, batch.length)
+    opt.step()
+    loss
+  }
+
   /** Minibatch training loop (reference RunEpoch, train_model.py:126-253):
     * shuffled batches, per-step LR from the schedule, per-column
     * cross-entropy NLL, entropy-gap logging in bits.
@@ -94,16 +110,7 @@ object Trainer {
         val bs = math.min(batchSize, data.length - off)
         val batch = Array.tabulate(bs)(k => data(idx(off + k)))
         globalStep += 1
-        opt.lr = schedule.lr(globalStep)
-        opt.zeroGrad()
-        // Per-batch mask/ordering cycling (train_model.py:183-185);
-        // no-op for single-mask models.
-        model.updateMasks()
-        val logits = model.forward(batch, train = true)
-        val (loss, grad) = model.nllWithGrad(logits, batch, bs)
-        model.backward(grad, bs)
-        opt.step()
-        losses += loss
+        losses += step(model, opt, schedule.lr(globalStep), batch)
         steps += 1
         off += bs
       }
@@ -143,14 +150,7 @@ object Trainer {
         val bs = math.min(batchSize, data.length - off)
         val batch = java.util.Arrays.copyOfRange(data, off, off + bs)
         globalStep += 1
-        opt.lr = schedule.lr(globalStep)
-        opt.zeroGrad()
-        model.updateMasks()
-        val logits = model.forward(batch, train = true)
-        val (loss, grad) = model.nllWithGrad(logits, batch, bs)
-        model.backward(grad, bs)
-        opt.step()
-        losses += loss
+        losses += step(model, opt, schedule.lr(globalStep), batch)
         steps += 1
         off += bs
       }
@@ -301,13 +301,7 @@ object Trainer {
     } finally in.close()
     // Re-assert the mask invariant on loaded MADE weights.
     model match {
-      case m: Made =>
-        m.layers.foreach {
-          case l: MaskedLinear => l.applyMask()
-          case b: MaskedResidualBlock => b.l1.applyMask(); b.l2.applyMask()
-          case _ => ()
-        }
-        if (m.directIoLayer != null) m.directIoLayer.applyMask()
+      case m: Made => m.linears.foreach(_.applyMask())
       case _ => ()
     }
   }

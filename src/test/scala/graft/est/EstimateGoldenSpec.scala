@@ -71,7 +71,9 @@ class EstimateGoldenSpec extends AnyFunSuite {
     "transformer/sc=true" -> 5942341589629859060L,
     "multimask" -> -133158020855232454L,
     "ensemble" -> -6349895279017951095L,
-    "wide" -> 196227574265532122L)
+    "wide" -> 196227574265532122L,
+    "sample" -> 5730765918784579622L,
+    "msample" -> -3826797949449329243L)
 
   private def check(got: Seq[(String, Long)]): Unit = {
     val exp = got.map { case (k, _) => k -> pinned(k) }
@@ -125,5 +127,18 @@ class EstimateGoldenSpec extends AnyFunSuite {
     }
     check(Seq("wide" -> digest(new ProgressiveSampling(m, meta(binsW),
       numSamples = 1000, seed = 24L).selectivity, qs)))
+  }
+
+  test("SampleFromModel draws keep their pinned bits") {
+    // The benchmark's ResMADE shape: a 2000-row forward forks every layer.
+    val m = new Made(5, Seq(64, 64), binsM, inputEncoding = "one_hot",
+      residual = true, doDirectIo = true, columnMasking = true, seed = 11123L)
+    train(m, data(binsM, 192, 13))
+    var h = 1125899906842597L
+    for (t <- m.sample(2000, new java.util.Random(26)); v <- t) h = 31 * h + v
+    val sm = new SampleFromModel(m, meta(binsM), numSamplesPerQuery = 2000,
+      seed = 27L)
+    check(Seq("sample" -> h,
+      "msample" -> digest(q => sm.query(q).toDouble, queries(binsM, 10, 14))))
   }
 }

@@ -21,7 +21,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * widths 26→37→29→26, none a multiple of the 8-wide output tile.
   * Batches 1 and 3 end on an odd row; batch 2000 forks every layer over
   * row ranges. Training uses 64-tuple minibatches so no backward forks and
-  * the parameter digests hold on any core count.
+  * the parameter digests hold on any core count, except in the forked
+  * training case: there R and M train at batch 1024, where every layer
+  * forks, and model C (the catalog's customer ResMADE shape) at batch
+  * 512, where its 32×32 direct-io layer does not.
   */
 class MadeKernelSpec extends AnyFunSuite {
 
@@ -34,6 +37,9 @@ class MadeKernelSpec extends AnyFunSuite {
   private def modelM() = new Made(5, Seq(40, 40), binsR,
     inputEncoding = "one_hot", residual = true, doDirectIo = true,
     numMasks = 3, seed = 9)
+  private def modelC() = new Made(2, Seq(64, 64), Array(6, 26),
+    inputEncoding = "one_hot", residual = true, doDirectIo = true,
+    columnMasking = true, seed = 20260816L)
   private def modelN() = new Made(5, Seq(37, 29), binsN,
     inputEncoding = "embed", outputEncoding = "embed", embedSize = 6,
     seed = 5)
@@ -165,5 +171,29 @@ class MadeKernelSpec extends AnyFunSuite {
       sc -> h
     }
     assert(got.toMap == pinnedSelectivity, got.mkString("\n", "\n", ""))
+  }
+
+  // model -> (parameter digest, per-step loss digest) after 3 forked steps
+  private val pinnedForked: Map[String, (Long, Long)] = Map(
+    "R" -> (-8950671797076797615L, -6429341614130672427L),
+    "M" -> (633024941824970768L, -6420309442549554552L),
+    "C" -> (-2130410222363703773L, 6948582065618147525L))
+
+  test("training steps that fork keep their pinned bits") {
+    // Forking steps sum parameter gradients per row range, so their bits
+    // depend on the range count; the literals were taken at 4.
+    assume(Nn.chunks(512, 32 * 64) == 4 && Nn.chunks(1024, 64 * 64) == 4,
+      "pinned where a forking layer splits its batch into 4 row ranges")
+    val got = for ((name, m, batch) <- Seq(("R", modelR(), 1024),
+        ("M", modelM(), 1024), ("C", modelC(), 512))) yield {
+      val rng = new java.util.Random(7)
+      val data = Array.fill(batch)(m.inputBins.map(rng.nextInt))
+      // One step an epoch, so each logged mean is one step's loss.
+      val logs = Trainer.train(m, data, epochs = 3, batchSize = batch, seed = 3)
+      var h = 1125899906842597L
+      for (l <- logs) h = 31 * h + java.lang.Double.doubleToRawLongBits(l.meanNllNats)
+      name -> (digest(m.params.map(_.data)), h)
+    }
+    assert(got.toMap == pinnedForked, got.mkString("\n", "\n", ""))
   }
 }

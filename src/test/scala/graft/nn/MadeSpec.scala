@@ -24,7 +24,7 @@ class MadeSpec extends AnyFunSuite {
 
   /** dLogits[k]/dInput via backprop, for a single random input row. */
   private def inputGrad(model: Made, k: Int, inp: Array[Float]): Array[Float] = {
-    model.run(inp.clone(), 1, cache = true)
+    model.trainForward(inp.clone(), 1)((_, _) => ())
     val gradLogits = new Array[Float](model.totalOutputSize)
     gradLogits(k) = 1f
     model.backwardToInput(gradLogits, 1)
@@ -181,13 +181,8 @@ class MadeSpec extends AnyFunSuite {
     // Enumerate params WITH their masks: perturbing a masked weight entry
     // must be skipped — the mask is baked into the weights (init + grad
     // time), so the forward pass intentionally does not re-apply it.
-    val linears = (model.layers.flatMap {
-      case l: MaskedLinear => Seq(l)
-      case b: MaskedResidualBlock => Seq(b.l1, b.l2)
-      case _ => Nil
-    } :+ model.directIoLayer).filter(_ != null)
     val paramsWithMask: Seq[(Param, Array[Float])] =
-      linears.toSeq.flatMap(l => Seq((l.weight, l.mask), (l.bias, null)))
+      model.linears.toSeq.flatMap(l => Seq((l.weight, l.mask), (l.bias, null)))
     for ((p, mask) <- paramsWithMask; if p.data.nonEmpty) {
       // Spot-check a few entries per param tensor.
       val idxs = Seq(0, p.data.length / 2, p.data.length - 1).distinct

@@ -10,12 +10,15 @@ comment, and a non-blank line inside a triple-quoted string counts.
     python3 tools/loc.py src/main                       # total
     python3 tools/loc.py --files src/main/scala/graft/nn  # and per file
     python3 tools/loc.py --root /path/to/checkout src/main
+    python3 tools/loc.py --rev HEAD~1 src/main src/test  # before -> after
 
 Prints one `<count>  <path>` line per file with `--files`, then one total
-line per directory.
+line per directory. With `--rev`, each count is `<at rev> -> <working
+tree> (<delta>)`; the revision's files are read through `git show`.
 """
 import argparse
 import os
+import subprocess
 import sys
 
 EXTENSIONS = (".scala", ".java")
@@ -82,10 +85,14 @@ class Scanner:
         return code
 
 
-def count_file(path):
+def count_lines(lines):
     scanner = Scanner()
+    return sum(1 for line in lines if scanner.is_code(line.rstrip("\n")))
+
+
+def count_file(path):
     with open(path, encoding="utf-8", errors="replace") as f:
-        return sum(1 for line in f if scanner.is_code(line.rstrip("\n")))
+        return count_lines(f)
 
 
 def source_files(top):
@@ -98,23 +105,50 @@ def source_files(top):
     return found
 
 
+def git(root, *args):
+    return subprocess.run(["git", "-C", root, *args], check=True,
+                          capture_output=True).stdout.decode("utf-8", "replace")
+
+
+def working_counts(root, top):
+    """{path relative to root: count} for the source files under top."""
+    path = os.path.join(root, top)
+    if not os.path.exists(path):
+        return {}
+    return {os.path.relpath(f, root): count_file(f) for f in source_files(path)}
+
+
+def rev_counts(root, rev, top):
+    """{path relative to root: count} for the source files under top at rev."""
+    names = git(root, "ls-tree", "-r", "--name-only", rev, "--", top).splitlines()
+    return {n: count_lines(git(root, "show", f"{rev}:./{n}").splitlines())
+            for n in names if n.endswith(EXTENSIONS)}
+
+
 def main(argv):
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("dirs", nargs="+", help="directories or files to count")
     ap.add_argument("--files", action="store_true", help="also print per-file counts")
     ap.add_argument("--root", default=".", help="resolve the paths against this directory")
+    ap.add_argument("--rev", help="also count at this git revision: before -> after")
     args = ap.parse_args(argv)
     for top in args.dirs:
-        path = os.path.join(args.root, top)
-        if not os.path.exists(path):
-            sys.exit(f"loc.py: no such path: {path}")
-        total = 0
-        for f in source_files(path):
-            c = count_file(f)
-            total += c
-            if args.files:
-                print(f"{c:7d}  {os.path.relpath(f, args.root)}")
-        print(f"{total:7d}  {top} (total)")
+        after = working_counts(args.root, top)
+        before = rev_counts(args.root, args.rev, top) if args.rev else None
+        if not after and not before:
+            sys.exit(f"loc.py: no source files under {os.path.join(args.root, top)}")
+
+        def line(name, path):
+            a = sum(after.values()) if path is None else after.get(path, 0)
+            if before is None:
+                return f"{a:7d}  {name}"
+            b = sum(before.values()) if path is None else before.get(path, 0)
+            return f"{b:7d} -> {a:7d} ({a - b:+d})  {name}"
+
+        if args.files:
+            for f in sorted(set(after) | set(before or ())):
+                print(line(f, f))
+        print(line(f"{top} (total)", None))
 
 
 if __name__ == "__main__":
