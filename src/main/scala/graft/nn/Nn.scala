@@ -13,12 +13,15 @@ package graft.nn
   * input index, so a seeded model's logits are the same bits on any core
   * count. A backward that forks sums gradients per chunk and merges the
   * chunks in order, so its bits depend on the chunk count (`Nn.chunks`)
-  * and never on scheduling. MADE's training step runs chunk-major: its
-  * forward, loss and backward fork once each, and every row range runs
+  * and never on scheduling. Both families' training steps run
+  * chunk-major: the forward, loss and backward fork once each, and every
+  * row range (for the Transformer, a range of whole sequences) runs
   * through all the layers in turn ([[RowStep]]). Each dense layer still
   * sums its parameter gradients the way its own fork would — per range,
   * merged in range order, when it forks at that batch; in row order
-  * when it does not — so the trained bits are those of a step that forks
+  * when it does not — and the gradients that add up over every row
+  * (LayerNorm's γ and β, shared embeddings) are summed in row order
+  * after the join, so the trained bits are those of a step that forks
   * layer by layer.
   *
   * Scale posture: the 100 TB path never moves raw data to the driver —
@@ -63,19 +66,12 @@ final class Adam(params: Seq[Param], var lr: Float = 2e-4f,
 
 private[nn] object Nn {
   private val cores = Runtime.getRuntime.availableProcessors()
-  /** What one `math.exp`/`math.tanh` call costs, counted in MACs, for
-    * callers whose per-row work is mostly transcendental calls (GeLU,
-    * softmax): ~30-60 ns a call vs ~1.2 ns a scalar MAC. */
-  val TranscendentalMacs = 32
-  /** Parallelism for an op over `batch` independent rows, where
-    * `workPerRow` is one row's cost in MACs: dIn·dOut for a dense layer,
-    * ~8·d for a LayerNorm row, `TranscendentalMacs` per GeLU element,
-    * and for attention one sequence's scores, softmax `exp`s and context.
+  /** Parallelism for a dense layer over `batch` independent rows, where
+    * `workPerRow` is one row's cost in MACs (dIn·dOut).
     * Only worth forking when there's real work (≥ ~1M MACs) to amortize
-    * it. (A work-scaled chunk count — one chunk per ~2M MACs — was
-    * measured 25-30% SLOWER on the transformer train loop: the
-    * common-pool forks are cheap enough that core-count chunks win once
-    * past the threshold.) */
+    * it; past that, one chunk per core. The chunk-major training steps
+    * take their range count from their dense layers' chunks, so their
+    * trained bits depend on this function. */
   def chunks(batch: Int, workPerRow: Int): Int = {
     val totalWork = batch.toLong * workPerRow
     if (totalWork < (1L << 20) || batch < 64) 1
@@ -191,6 +187,39 @@ private[nn] abstract class RowGrad(val gx: Array[Float]) {
   def finish(): Unit = ()
 }
 
+/** Where a training step's full-batch buffers come from. [[Arena.fresh]]
+  * allocates each one. A keeping arena hands out, after `start()`, the
+  * arrays the previous step asked for, in the order it asked for them,
+  * whenever the sizes match: a step over the same batch size gets every
+  * buffer back instead of allocating, and first-touching, it again. A
+  * buffer from a keeping arena holds the previous step's values, so its
+  * users overwrite whatever they read. One step at a time may use a
+  * keeping arena. */
+private[nn] final class Arena(keep: Boolean) {
+  private val floatBufs = scala.collection.mutable.ArrayBuffer[Array[Float]]()
+  private val doubleBufs = scala.collection.mutable.ArrayBuffer[Array[Double]]()
+  private var nf = 0
+  private var nd = 0
+  def start(): Unit = { nf = 0; nd = 0 }
+  def floats(n: Int): Array[Float] =
+    if (!keep) new Array[Float](n)
+    else { nf += 1; Arena.take(floatBufs, nf - 1, n, new Array[Float](n)) }
+  def doubles(n: Int): Array[Double] =
+    if (!keep) new Array[Double](n)
+    else { nd += 1; Arena.take(doubleBufs, nd - 1, n, new Array[Double](n)) }
+}
+
+private[nn] object Arena {
+  /** Allocates every buffer; keeps nothing, so any thread may use it. */
+  val fresh = new Arena(keep = false)
+  private def take[A](bufs: scala.collection.mutable.ArrayBuffer[Array[A]], i: Int,
+      n: Int, alloc: => Array[A]): Array[A] = {
+    if (i == bufs.length) bufs += alloc
+    else if (bufs(i).length != n) bufs(i) = alloc
+    bufs(i)
+  }
+}
+
 /** `y = x (M ⊙ W) + b`, the one dense layer of both model families:
   * MADE's masked linear (reference made.py:11-28) and, with `mask = null`,
   * the Transformer's Conv1d (transformer.py:121-137). Weight and mask
@@ -215,8 +244,6 @@ final class MaskedLinear(val nIn: Int, val nOut: Int,
   val bias = new Param(new Array[Float](nOut))
   /** null = dense. Layout [nIn, nOut], 1f = connected. */
   var mask: Array[Float] = null
-  /** The step of the last caching `forward`, for `backward`. */
-  @transient private var cached: RowStep = null
   // Materialized M ⊙ W for the preserveWeights path: refreshed once per
   // forward/backward CALL (O(nIn·nOut), amortized over the O(batch·
   // nIn·nOut) loop it feeds) so the hot inner loops stay dense instead
@@ -337,38 +364,28 @@ final class MaskedLinear(val nIn: Int, val nOut: Int,
     }
   }
 
-  def forward(x: Array[Float], batch: Int): Array[Float] =
-    forward(x, batch, cache = false)
-
-  /** Forward forked over this layer's own row ranges; `cache` keeps the
-    * step for `backward` (the Transformer's layer-by-layer training). */
-  def forward(x: Array[Float], batch: Int, cache: Boolean): Array[Float] = {
+  /** Forward forked over this layer's own row ranges. */
+  def forward(x: Array[Float], batch: Int): Array[Float] = {
     val s = step(x, batch)
     Nn.forRows(batch, Nn.chunks(batch, nIn * nOut))((_, r0, r1) => s.forward(r0, r1))
-    if (cache) cached = s
     s.out
   }
 
-  /** Backward given dL/dOut after a caching `forward`, forked like it;
-    * accumulates param grads, returns dL/dIn. */
-  def backward(gradOut: Array[Float], batch: Int): Array[Float] = {
-    val chunks = Nn.chunks(batch, nIn * nOut)
-    val g = cached.backward(gradOut, chunks)
-    Nn.forRows(batch, chunks)(g.rows)
-    g.finish()
-    g.gx
-  }
+  private[nn] def step(x: Array[Float], batch: Int): RowStep = step(x, batch, Arena.fresh)
 
-  private[nn] def step(x: Array[Float], batch: Int): RowStep = {
+  /** [[step]] taking its output and dL/dinput buffers from `arena`. */
+  private[nn] def step(x: Array[Float], batch: Int, arena: Arena): RowStep = {
     val w = effectiveW()
-    new RowStep(new Array[Float](batch * nOut)) {
+    new RowStep(arena.floats(batch * nOut)) {
       def forward(r0: Int, r1: Int): Unit = {
         var r = r0
         while (r + 1 < r1) { forwardRows(x, w, out, r, r + 1); r += 2 }
         if (r < r1) forwardRows(x, w, out, r, r)
       }
+      // The input gradients `need` leaves out must read 0: a fresh buffer.
       def backward(gOut: Array[Float], chunks: Int, need: Array[Boolean]): RowGrad =
-        backwardStep(x, w, gOut, need, batch, chunks)
+        backwardStep(x, w, gOut, need, batch, chunks,
+          if (need == null) arena.floats(batch * nIn) else new Array[Float](batch * nIn))
     }
   }
 
@@ -380,12 +397,12 @@ final class MaskedLinear(val nIn: Int, val nOut: Int,
     * every row in row order, inside its one range or, when the caller
     * splits the rows anyway, in `finish` from the full-batch buffers. */
   private def backwardStep(x: Array[Float], w: Array[Float], g: Array[Float],
-      need: Array[Boolean], batch: Int, chunks: Int): RowGrad = {
+      need: Array[Boolean], batch: Int, chunks: Int, gxBuf: Array[Float]): RowGrad = {
     val own = Nn.chunks(batch, nIn * nOut)
     require(own == 1 || own == chunks, s"$own row ranges of a layer vs $chunks of its step")
     val gws = if (own > 1) Array.fill(own)(new Array[Float](weight.grad.length)) else null
     val gbs = if (own > 1) Array.fill(own)(new Array[Float](bias.grad.length)) else null
-    new RowGrad(new Array[Float](batch * nIn)) {
+    new RowGrad(gxBuf) {
       def rows(c: Int, r0: Int, r1: Int): Unit =
         if (own > 1) backwardRange(x, g, w, gx, need, gws(c), gbs(c), r0, r1)
         else if (chunks == 1) backwardRange(x, g, w, gx, need, weight.grad, bias.grad, r0, r1)

@@ -53,6 +53,9 @@ final class Transformer(
     inv
   }
   def totalInputSize: Int = seqLen * dModel
+  /** Column c's bins are entries `[binStart(c), binStart(c + 1))` of all
+    * columns' bins. */
+  private val binStart: Array[Int] = inputBins.scanLeft(0)(_ + _)
 
   // ---- parameters ----
   private def gaussian(n: Int, std: Double): Array[Float] =
@@ -80,293 +83,322 @@ final class Transformer(
   private final class TNorm(d: Int, eps: Float = 1e-5f) extends Serializable {
     val scale = new Param(Array.fill(d)(1f))
     val shift = new Param(new Array[Float](d))
-    private var xhat: Array[Float] = null
-    private var invStd: Array[Float] = null
-    /** `cache` keeps x̂ and 1/σ for backward (training only). */
-    def forward(x: Array[Float], n: Int, cache: Boolean): Array[Float] = {
-      val out = new Array[Float](n * d)
-      val xh = if (cache) new Array[Float](n * d) else null
-      val inv = if (cache) new Array[Float](n) else null
-      Nn.forRows(n, Nn.chunks(n, 8 * d)) { (_, r0, r1) =>
-        var r = r0
-        while (r < r1) {
-          val o = r * d
-          var mean = 0f
-          var i = 0
-          while (i < d) { mean += x(o + i); i += 1 }
-          mean /= d
-          var v = 0f
-          i = 0
-          while (i < d) { val c = x(o + i) - mean; v += c * c; i += 1 }
-          v /= d
-          val is = (1.0 / math.sqrt(v + eps)).toFloat
-          if (inv != null) inv(r) = is
-          i = 0
-          while (i < d) {
-            val h = (x(o + i) - mean) * is
-            if (xh != null) xh(o + i) = h
-            out(o + i) = scale.data(i) * h + shift.data(i)
-            i += 1
+
+    /** This norm's part of a step over the `n` rows of `x` (see
+      * [[RowStep]]), its buffers from `arena`; `train` keeps x̂ and 1/σ
+      * for the backward. */
+    def step(x: Array[Float], n: Int, train: Boolean, arena: Arena): RowStep = {
+      val xh = if (train) arena.floats(n * d) else null
+      val inv = if (train) arena.floats(n) else null
+      new RowStep(arena.floats(n * d)) {
+        def forward(r0: Int, r1: Int): Unit = {
+          var r = r0
+          while (r < r1) {
+            val o = r * d
+            var mean = 0f
+            var i = 0
+            while (i < d) { mean += x(o + i); i += 1 }
+            mean /= d
+            var v = 0f
+            i = 0
+            while (i < d) { val c = x(o + i) - mean; v += c * c; i += 1 }
+            v /= d
+            val is = (1.0 / math.sqrt(v + eps)).toFloat
+            if (inv != null) inv(r) = is
+            i = 0
+            while (i < d) {
+              val h = (x(o + i) - mean) * is
+              if (xh != null) xh(o + i) = h
+              out(o + i) = scale.data(i) * h + shift.data(i)
+              i += 1
+            }
+            r += 1
           }
-          r += 1
         }
+        /** dL/dx by row range; `finish` adds γ's and β's gradients over
+          * all rows, in row order. */
+        def backward(g: Array[Float], chunks: Int, need: Array[Boolean]): RowGrad =
+          new RowGrad(arena.floats(n * d)) {
+            def rows(c: Int, r0: Int, r1: Int): Unit = {
+              var r = r0
+              while (r < r1) {
+                val o = r * d
+                var sumG = 0f
+                var sumGx = 0f
+                var i = 0
+                while (i < d) {
+                  val gy = g(o + i) * scale.data(i)
+                  sumG += gy
+                  sumGx += gy * xh(o + i)
+                  i += 1
+                }
+                val is = inv(r)
+                i = 0
+                while (i < d) {
+                  val gy = g(o + i) * scale.data(i)
+                  gx(o + i) = is * (gy - sumG / d - xh(o + i) * sumGx / d)
+                  i += 1
+                }
+                r += 1
+              }
+            }
+            override def finish(): Unit = {
+              var o = 0
+              while (o < n * d) {
+                var i = 0
+                while (i < d) {
+                  scale.grad(i) += g(o + i) * xh(o + i)
+                  shift.grad(i) += g(o + i)
+                  i += 1
+                }
+                o += d
+              }
+            }
+          }
       }
-      if (cache) { xhat = xh; invStd = inv }
-      out
-    }
-    def backward(g: Array[Float], n: Int): Array[Float] = {
-      val gx = new Array[Float](n * d)
-      var r = 0
-      while (r < n) {
-        val o = r * d
-        var sumG = 0f
-        var sumGx = 0f
-        var i = 0
-        while (i < d) {
-          val gy = g(o + i) * scale.data(i)
-          sumG += gy
-          sumGx += gy * xhat(o + i)
-          scale.grad(i) += g(o + i) * xhat(o + i)
-          shift.grad(i) += g(o + i)
-          i += 1
-        }
-        val is = invStd(r)
-        i = 0
-        while (i < d) {
-          val gy = g(o + i) * scale.data(i)
-          gx(o + i) = is * (gy - sumG / d - xhat(o + i) * sumGx / d)
-          i += 1
-        }
-        r += 1
-      }
-      gx
     }
     def params: Seq[Param] = Seq(scale, shift)
   }
 
-  /** tanh-approx GeLU (transformer.py:211-218). */
-  private final class TGelu extends Serializable {
-    private var xCache: Array[Float] = null
-    private var tanhCache: Array[Double] = null
-    private val c = math.sqrt(2.0 / math.Pi)
-    /** `cache` keeps `x` and its tanh term for backward (training only). */
-    def forward(x: Array[Float], cache: Boolean): Array[Float] = {
-      val out = new Array[Float](x.length)
-      val th = if (cache) new Array[Double](x.length) else null
-      Nn.forRows(x.length, Nn.chunks(x.length, Nn.TranscendentalMacs)) { (_, i0, i1) =>
-        var i = i0
-        while (i < i1) {
-          val v = x(i)
-          val t = math.tanh(c * (v + 0.044715 * v * v * v))
-          if (th != null) th(i) = t
-          out(i) = (0.5 * v * (1 + t)).toFloat
+  private val geluC = math.sqrt(2.0 / math.Pi)
+
+  /** Elements `[k0, k1)` of the tanh-approx GeLU (transformer.py:211-218)
+    * of `x` into `out`; `th`, when not null, keeps the tanh terms for
+    * [[geluBackward]]. */
+  private def gelu(x: Array[Float], out: Array[Float], th: Array[Double],
+      k0: Int, k1: Int): Unit = {
+    var i = k0
+    while (i < k1) {
+      val v = x(i)
+      val t = math.tanh(geluC * (v + 0.044715 * v * v * v))
+      if (th != null) th(i) = t
+      out(i) = (0.5 * v * (1 + t)).toFloat
+      i += 1
+    }
+  }
+
+  /** Elements `[k0, k1)` of GeLU's backward, in place: dL/dout `g`
+    * becomes dL/dx, from the input `x` and the kept tanh terms. */
+  private def geluBackward(x: Array[Float], th: Array[Double], g: Array[Float],
+      k0: Int, k1: Int): Unit = {
+    var i = k0
+    while (i < k1) {
+      val v = x(i)
+      val t = th(i)
+      val du = geluC * (1 + 3 * 0.044715 * v * v)
+      g(i) = (g(i) * (0.5 * (1 + t) + 0.5 * v * (1 - t * t) * du)).toFloat
+      i += 1
+    }
+  }
+
+  /** `y(k) = x(k) + y(k)` for elements `[k0, k1)`: a residual add. */
+  private def addInto(x: Array[Float], y: Array[Float], k0: Int, k1: Int): Unit = {
+    var k = k0
+    while (k < k1) { y(k) = x(k) + y(k); k += 1 }
+  }
+
+  /** Sequences `[b0, b1)` of multi-head causal self-attention
+    * (transformer.py:140-208): `ctx` accumulates each position's
+    * attention-weighted values from the fused q/k/v rows `q`. `attn`,
+    * [bs, h, seq, seq], keeps the attention weights for the backward;
+    * when null, each query softmaxes in a seqLen scratch row. */
+  private def attend(q: Array[Float], attn: Array[Float], ctx: Array[Float],
+      b0: Int, b1: Int): Unit = {
+    val h3 = 3 * dModel
+    val scale = (1.0 / math.sqrt(dState)).toFloat
+    val p = if (attn != null) attn else new Array[Float](seqLen)
+    java.util.Arrays.fill(ctx, b0 * seqLen * dModel, b1 * seqLen * dModel, 0f)
+    var b = b0
+    while (b < b1) {
+      var h = 0
+      while (h < numHeads) {
+        val qOff = h * dState
+        val kOff = dModel + h * dState
+        val vOff = 2 * dModel + h * dState
+        var i = 0
+        while (i < seqLen) {
+          val aOff = if (attn != null) ((b * numHeads + h) * seqLen + i) * seqLen else 0
+          val qRow = (b * seqLen + i) * h3 + qOff
+          // causal: position i attends to j <= i (mask(n), transformer.py:48-55)
+          var mx = Float.NegativeInfinity
+          var j = 0
+          while (j <= i) {
+            val kRow = (b * seqLen + j) * h3 + kOff
+            var s = 0f
+            var t = 0
+            while (t < dState) { s += q(qRow + t) * q(kRow + t); t += 1 }
+            s *= scale
+            p(aOff + j) = s
+            if (s > mx) mx = s
+            j += 1
+          }
+          var sum = 0.0
+          j = 0
+          while (j <= i) {
+            val e = math.exp(p(aOff + j) - mx)
+            p(aOff + j) = e.toFloat
+            sum += e
+            j += 1
+          }
+          j = 0
+          while (j <= i) { p(aOff + j) = (p(aOff + j) / sum).toFloat; j += 1 }
+          // ctx_i = sum_j attn_ij v_j
+          val cRow = (b * seqLen + i) * dModel + h * dState
+          j = 0
+          while (j <= i) {
+            val a = p(aOff + j)
+            val vRow = (b * seqLen + j) * h3 + vOff
+            var t = 0
+            while (t < dState) { ctx(cRow + t) += a * q(vRow + t); t += 1 }
+            j += 1
+          }
           i += 1
         }
+        h += 1
       }
-      if (cache) { xCache = x; tanhCache = th }
-      out
-    }
-    def backward(g: Array[Float]): Array[Float] = {
-      val gx = new Array[Float](g.length)
-      var i = 0
-      while (i < g.length) {
-        val v = xCache(i)
-        val t = tanhCache(i)
-        val du = c * (1 + 3 * 0.044715 * v * v)
-        gx(i) = (g(i) * (0.5 * (1 + t) + 0.5 * v * (1 - t * t) * du)).toFloat
-        i += 1
-      }
-      gx
+      b += 1
     }
   }
 
-  /** Multi-head causal self-attention (transformer.py:140-208). */
-  private final class TAttention extends Serializable {
-    val qkv = dense(dModel, 3 * dModel)
-    val out = dense(dModel, dModel)
-    private var qkvCache: Array[Float] = null
-    private var attnCache: Array[Float] = null // [bs, h, seq, seq]
-
-    /** One sequence's work in MACs: its causal (i, j ≤ i) pairs over all
-      * heads, times the cost of one pair. */
-    private def seqCost(pairMacs: Int): Int =
-      numHeads * seqLen * (seqLen + 1) / 2 * pairMacs
-
-    /** `cache` keeps q/k/v and the attention weights for backward
-      * (training only); otherwise each chunk softmaxes in a seqLen
-      * scratch row. */
-    def forward(x: Array[Float], bs: Int, cache: Boolean): Array[Float] = {
-      val n = bs * seqLen
-      val q = qkv.forward(x, n, cache)
-      val attn = if (cache) new Array[Float](bs * numHeads * seqLen * seqLen) else null
-      val ctx = new Array[Float](n * dModel)
-      // Per-batch-element state is disjoint -> parallel over b. A pair
-      // costs a score and a context row (dState MACs each) and one exp.
-      Nn.forRows(bs, Nn.chunks(bs, seqCost(2 * dState + Nn.TranscendentalMacs))) {
-        (_, b0, b1) => attend(q, attn, ctx, b0, b1)
-      }
-      if (cache) { qkvCache = q; attnCache = attn }
-      out.forward(ctx, n, cache)
-    }
-
-    private def attend(q: Array[Float], attn: Array[Float], ctx: Array[Float],
-        b0: Int, b1: Int): Unit = {
-      val h3 = 3 * dModel
-      val scale = (1.0 / math.sqrt(dState)).toFloat
-      val p = if (attn != null) attn else new Array[Float](seqLen)
-      var b = b0
-      while (b < b1) {
-        var h = 0
-        while (h < numHeads) {
-          val qOff = h * dState
-          val kOff = dModel + h * dState
-          val vOff = 2 * dModel + h * dState
-          var i = 0
-          while (i < seqLen) {
-            val aOff = if (attn != null) ((b * numHeads + h) * seqLen + i) * seqLen else 0
-            val qRow = (b * seqLen + i) * h3 + qOff
-            // causal: position i attends to j <= i (mask(n), transformer.py:48-55)
-            var mx = Float.NegativeInfinity
-            var j = 0
-            while (j <= i) {
-              val kRow = (b * seqLen + j) * h3 + kOff
-              var s = 0f
-              var t = 0
-              while (t < dState) { s += q(qRow + t) * q(kRow + t); t += 1 }
-              s *= scale
-              p(aOff + j) = s
-              if (s > mx) mx = s
-              j += 1
+  /** Sequences `[b0, b1)` of attention's backward: `gQkv` accumulates
+    * dL/dq, dL/dk and dL/dv from dL/dctx `gCtx`, the fused
+    * q/k/v rows `q` and the attention weights `attn` the forward kept. */
+  private def attendBackward(q: Array[Float], attn: Array[Float],
+      gCtx: Array[Float], gQkv: Array[Float], b0: Int, b1: Int): Unit = {
+    val h3 = 3 * dModel
+    val scale = (1.0 / math.sqrt(dState)).toFloat
+    val dAttn = new Array[Float](seqLen)
+    java.util.Arrays.fill(gQkv, b0 * seqLen * h3, b1 * seqLen * h3, 0f)
+    var b = b0
+    while (b < b1) {
+      var h = 0
+      while (h < numHeads) {
+        val qOff = h * dState
+        val kOff = dModel + h * dState
+        val vOff = 2 * dModel + h * dState
+        var i = 0
+        while (i < seqLen) {
+          val aOff = ((b * numHeads + h) * seqLen + i) * seqLen
+          val cRow = (b * seqLen + i) * dModel + h * dState
+          // dAttn_ij = gCtx_i . v_j ; dV_j += attn_ij gCtx_i
+          var j = 0
+          while (j <= i) {
+            val vRow = (b * seqLen + j) * h3 + vOff
+            var s = 0f
+            var t = 0
+            while (t < dState) {
+              s += gCtx(cRow + t) * q(vRow + t)
+              gQkv(vRow + t) += attn(aOff + j) * gCtx(cRow + t)
+              t += 1
             }
-            var sum = 0.0
-            j = 0
-            while (j <= i) {
-              val e = math.exp(p(aOff + j) - mx)
-              p(aOff + j) = e.toFloat
-              sum += e
-              j += 1
-            }
-            j = 0
-            while (j <= i) { p(aOff + j) = (p(aOff + j) / sum).toFloat; j += 1 }
-            // ctx_i = sum_j attn_ij v_j
-            val cRow = (b * seqLen + i) * dModel + h * dState
-            j = 0
-            while (j <= i) {
-              val a = p(aOff + j)
-              val vRow = (b * seqLen + j) * h3 + vOff
-              var t = 0
-              while (t < dState) { ctx(cRow + t) += a * q(vRow + t); t += 1 }
-              j += 1
-            }
-            i += 1
+            dAttn(j) = s
+            j += 1
           }
-          h += 1
-        }
-        b += 1
-      }
-    }
-
-    def backward(g: Array[Float], bs: Int): Array[Float] = {
-      val n = bs * seqLen
-      val h3 = 3 * dModel
-      val gCtx = out.backward(g, n)
-      val q = qkvCache
-      val attn = attnCache
-      val gQkv = new Array[Float](n * h3)
-      val scale = (1.0 / math.sqrt(dState)).toFloat
-      // gQkv rows are per-batch-element -> disjoint, parallel over b. A
-      // pair costs four dState-long loops.
-      Nn.forRows(bs, Nn.chunks(bs, seqCost(4 * dState))) { (_, b0, b1) =>
-      val dAttn = new Array[Float](seqLen)
-      var b = b0
-      while (b < b1) {
-        var h = 0
-        while (h < numHeads) {
-          val qOff = h * dState
-          val kOff = dModel + h * dState
-          val vOff = 2 * dModel + h * dState
-          var i = 0
-          while (i < seqLen) {
-            val aOff = ((b * numHeads + h) * seqLen + i) * seqLen
-            val cRow = (b * seqLen + i) * dModel + h * dState
-            // dAttn_ij = gCtx_i . v_j ; dV_j += attn_ij gCtx_i
-            var j = 0
-            while (j <= i) {
-              val vRow = (b * seqLen + j) * h3 + vOff
-              var s = 0f
-              var t = 0
-              while (t < dState) {
-                s += gCtx(cRow + t) * q(vRow + t)
-                gQkv(vRow + t) += attn(aOff + j) * gCtx(cRow + t)
-                t += 1
-              }
-              dAttn(j) = s
-              j += 1
+          // softmax backward: dScore = a * (dAttn - sum_k a_k dAttn_k)
+          var dot = 0f
+          j = 0
+          while (j <= i) { dot += attn(aOff + j) * dAttn(j); j += 1 }
+          val qRow = (b * seqLen + i) * h3 + qOff
+          j = 0
+          while (j <= i) {
+            val dScore = attn(aOff + j) * (dAttn(j) - dot) * scale
+            val kRow = (b * seqLen + j) * h3 + kOff
+            var t = 0
+            while (t < dState) {
+              gQkv(qRow + t) += dScore * q(kRow + t)
+              gQkv(kRow + t) += dScore * q(qRow + t)
+              t += 1
             }
-            // softmax backward: dScore = a * (dAttn - sum_k a_k dAttn_k)
-            var dot = 0f
-            j = 0
-            while (j <= i) { dot += attn(aOff + j) * dAttn(j); j += 1 }
-            val qRow = (b * seqLen + i) * h3 + qOff
-            j = 0
-            while (j <= i) {
-              val dScore = attn(aOff + j) * (dAttn(j) - dot) * scale
-              val kRow = (b * seqLen + j) * h3 + kOff
-              var t = 0
-              while (t < dState) {
-                gQkv(qRow + t) += dScore * q(kRow + t)
-                gQkv(kRow + t) += dScore * q(qRow + t)
-                t += 1
-              }
-              j += 1
-            }
-            i += 1
+            j += 1
           }
-          h += 1
+          i += 1
         }
-        b += 1
+        h += 1
       }
-      }
-      qkv.backward(gQkv, n)
+      b += 1
     }
-    def params: Seq[Param] = qkv.params ++ out.params
   }
 
-  /** Pre-norm residual block (transformer.py:221-264, do_residual=true). */
+  /** Pre-norm residual block (transformer.py:221-264, do_residual=true):
+    * `x1 = x + proj(attend(qkv(norm1(x))))`,
+    * `y = x1 + fc2(gelu(fc1(norm2(x1))))`. */
   private final class TBlock extends Serializable {
     val norm1 = new TNorm(dModel)
     val norm2 = new TNorm(dModel)
-    val attn = new TAttention
+    val qkv = dense(dModel, 3 * dModel)
+    val proj = dense(dModel, dModel)
     val fc1 = dense(dModel, dFf)
-    val act = new TGelu
     val fc2 = dense(dFf, dModel)
-    def forward(x: Array[Float], bs: Int, cache: Boolean): Array[Float] = {
+
+    /** This block's part of a step over the `bs` sequences of `x`, whose
+      * SEQUENCES the caller splits into ranges: `forward(b0, b1)` runs
+      * sequences `[b0, b1)` through every layer in turn, whose steps
+      * take the matching token rows `[b0·seqLen, b1·seqLen)`. `train`
+      * keeps what the backward needs; every buffer, the backward's too,
+      * comes from `arena`. The proj and fc2 layers' outputs become the
+      * residual sums in place. */
+    def step(x: Array[Float], bs: Int, train: Boolean, arena: Arena): RowStep = {
       val n = bs * seqLen
-      val a = attn.forward(norm1.forward(x, n, cache), bs, cache)
-      val x1 = new Array[Float](x.length)
-      var i = 0
-      while (i < x.length) { x1(i) = x(i) + a(i); i += 1 }
-      val f = fc1.forward(norm2.forward(x1, n, cache), n, cache)
-      val m = fc2.forward(act.forward(f, cache), n, cache)
-      val x2 = new Array[Float](x.length)
-      i = 0
-      while (i < x.length) { x2(i) = x1(i) + m(i); i += 1 }
-      x2
-    }
-    def backward(g: Array[Float], bs: Int): Array[Float] = {
-      val n = bs * seqLen
-      val gM = fc1.backward(act.backward(fc2.backward(g, n)), n)
-      val gX1 = norm2.backward(gM, n)
-      var i = 0
-      while (i < g.length) { gX1(i) += g(i); i += 1 }
-      val gA = attn.backward(gX1, bs)
-      val gX = norm1.backward(gA, n)
-      i = 0
-      while (i < g.length) { gX(i) += gX1(i); i += 1 }
-      gX
+      val s1 = norm1.step(x, n, train, arena)
+      val sq = qkv.step(s1.out, n, arena)
+      val attn = if (train) arena.floats(bs * numHeads * seqLen * seqLen) else null
+      val ctx = arena.floats(n * dModel)
+      val so = proj.step(ctx, n, arena)
+      val x1 = so.out
+      val s2 = norm2.step(x1, n, train, arena)
+      val sf1 = fc1.step(s2.out, n, arena)
+      val th = if (train) arena.doubles(n * dFf) else null
+      val act = arena.floats(n * dFf)
+      val sf2 = fc2.step(act, n, arena)
+      new RowStep(sf2.out) {
+        def forward(b0: Int, b1: Int): Unit = {
+          val r0 = b0 * seqLen; val r1 = b1 * seqLen
+          s1.forward(r0, r1)
+          sq.forward(r0, r1)
+          attend(sq.out, attn, ctx, b0, b1)
+          so.forward(r0, r1)
+          addInto(x, x1, r0 * dModel, r1 * dModel)
+          s2.forward(r0, r1)
+          sf1.forward(r0, r1)
+          gelu(sf1.out, act, th, r0 * dFf, r1 * dFf)
+          sf2.forward(r0, r1)
+          addInto(x1, out, r0 * dModel, r1 * dModel)
+        }
+        /** dL/dx by sequence range; `finish` completes every layer's
+          * parameter gradients. */
+        def backward(gOut: Array[Float], chunks: Int, need: Array[Boolean]): RowGrad = {
+          val gf2 = sf2.backward(gOut, chunks)
+          val gf1 = sf1.backward(gf2.gx, chunks)
+          val g2 = s2.backward(gf1.gx, chunks)
+          val gx1 = g2.gx
+          val go = so.backward(gx1, chunks)
+          val gQkv = arena.floats(n * 3 * dModel)
+          val gq = sq.backward(gQkv, chunks)
+          val g1 = s1.backward(gq.gx, chunks)
+          new RowGrad(g1.gx) {
+            def rows(c: Int, b0: Int, b1: Int): Unit = {
+              val r0 = b0 * seqLen; val r1 = b1 * seqLen
+              gf2.rows(c, r0, r1)
+              geluBackward(sf1.out, th, gf2.gx, r0 * dFf, r1 * dFf)
+              gf1.rows(c, r0, r1)
+              g2.rows(c, r0, r1)
+              addInto(gOut, gx1, r0 * dModel, r1 * dModel)
+              go.rows(c, r0, r1)
+              attendBackward(sq.out, attn, go.gx, gQkv, b0, b1)
+              gq.rows(c, r0, r1)
+              g1.rows(c, r0, r1)
+              addInto(gx1, gx, r0 * dModel, r1 * dModel)
+            }
+            override def finish(): Unit = {
+              gf2.finish(); gf1.finish(); g2.finish()
+              go.finish(); gq.finish(); g1.finish()
+            }
+          }
+        }
+      }
     }
     def params: Seq[Param] =
-      norm1.params ++ norm2.params ++ attn.params ++ fc1.params ++ fc2.params
+      norm1.params ++ norm2.params ++ qkv.params ++ proj.params ++ fc1.params ++ fc2.params
   }
 
   private val blocks = Array.fill(numBlocks)(new TBlock)
@@ -392,72 +424,62 @@ final class Transformer(
     if (pos >= seqLen) return // right-shifted out (transformer.py:440-444)
     var r = 0
     while (r < batch) {
-      val o = (r * seqLen + pos) * dModel
-      var k = 0
-      if (values == null) {
-        val unk = unkEmbeddings(naturalIdx).data
-        while (k < dModel) {
-          out(o + k) = unk(k) + posEmbeddings.data(pos * dModel + k)
-          k += 1
-        }
-      } else {
-        val e = embeddings(naturalIdx).data
-        val eo = values(r) * dModel
-        while (k < dModel) {
-          out(o + k) = e(eo + k) + posEmbeddings.data(pos * dModel + k)
-          k += 1
-        }
-      }
+      if (values == null) embed(unkEmbeddings(naturalIdx).data, 0, out, r, pos)
+      else embed(embeddings(naturalIdx).data, values(r) * dModel, out, r, pos)
       r += 1
     }
   }
 
-  // Per-batch dropout state for column masking.
-  private var dropMask: Array[Array[Boolean]] = null
-  private var dataCache: Array[Array[Int]] = null
+  /** `src[off, off + dModel)` + position `pos`'s embedding into sequence
+    * `r`'s slot `pos`. */
+  private def embed(src: Array[Float], off: Int, out: Array[Float], r: Int,
+      pos: Int): Unit = {
+    val o = (r * seqLen + pos) * dModel
+    val pe = posEmbeddings.data
+    var k = 0
+    while (k < dModel) { out(o + k) = src(off + k) + pe(pos * dModel + k); k += 1 }
+  }
 
-  /** Full training encode: SOS + right-shifted embeddings + pos embs,
-    * with per-column [MASK] dropout when training (transformer.py:456-487).
-    */
-  def encodeInput(data: Array[Array[Int]], train: Boolean): Array[Float] = {
-    val bs = data.length
-    val out = new Array[Float](bs * seqLen * dModel)
-    dataCache = data
-    dropMask = if (columnMasking && train) new Array[Array[Boolean]](nin) else null
-    // SOS: zeros + pos emb 0.
-    var r = 0
-    while (r < bs) {
-      System.arraycopy(posEmbeddings.data, 0, out, r * seqLen * dModel, dModel)
-      r += 1
-    }
-    val colBuf = new Array[Int](bs)
-    for (ordPos <- 0 until nin - 1) {
-      val nat = invOrder(ordPos)
-      var i = 0
-      while (i < bs) { colBuf(i) = data(i)(nat); i += 1 }
-      encodeColumn(nat, colBuf, out, bs)
-      if (dropMask != null) {
-        val p = rng.nextInt(nin).toDouble / nin
-        val drops = new Array[Boolean](bs)
-        val pos = ordPos + 1
-        val unk = unkEmbeddings(nat).data
-        i = 0
-        while (i < bs) {
-          if (rng.nextDouble() < p) {
-            drops(i) = true
-            val o = (i * seqLen + pos) * dModel
-            var k = 0
-            while (k < dModel) {
-              out(o + k) = unk(k) + posEmbeddings.data(pos * dModel + k)
-              k += 1
-            }
-          }
-          i += 1
-        }
-        dropMask(nat) = drops
+  /** Sequence ranges of a step over `bs` sequences: the count `Nn.chunks`
+    * gives every dense layer that forks at bs·seqLen token rows, 1 when
+    * none does. Every forking layer gets the same count, and the widest
+    * (qkv or the MLP's) forks first. */
+  private def stepChunks(bs: Int): Int =
+    Nn.chunks(bs * seqLen, dModel * math.max(3 * dModel, dFf))
+
+  /** What a training forward leaves for `backward`. */
+  private final class Step(val blocks: Array[RowStep], val norm: RowStep,
+      val data: Array[Array[Int]], val drops: Array[Array[Boolean]])
+  @transient private var last: Step = null
+  /** The training steps' block buffers, kept from one step to the next. */
+  @transient private var arena: Arena = null
+
+  /** The forward over the `bs` sequences of `inp`, chunk-major: one fork
+    * whose sequence ranges each run `encode(b0, b1)`, which fills those
+    * sequences of `inp`, then the SOS slot (pos emb 0, never query
+    * state), every block and the final norm. Forward bits do not depend
+    * on the ranges: every kernel computes a row, or for attention a
+    * sequence, on its own. The blocks' buffers come from `arena`; the
+    * final norm's, the returned hidden states among them, are fresh. */
+  private def walk(inp: Array[Float], bs: Int, train: Boolean, arena: Arena)(
+      encode: (Int, Int) => Unit): (Array[RowStep], RowStep) = {
+    val s = new Array[RowStep](numBlocks)
+    var h = inp
+    var i = 0
+    while (i < numBlocks) { s(i) = blocks(i).step(h, bs, train, arena); h = s(i).out; i += 1 }
+    val norm = finalNorm.step(h, bs * seqLen, train, Arena.fresh)
+    Nn.forRows(bs, stepChunks(bs)) { (_, b0, b1) =>
+      encode(b0, b1)
+      var b = b0
+      while (b < b1) {
+        System.arraycopy(posEmbeddings.data, 0, inp, b * seqLen * dModel, dModel)
+        b += 1
       }
+      var i = 0
+      while (i < numBlocks) { s(i).forward(b0, b1); i += 1 }
+      norm.forward(b0 * seqLen, b1 * seqLen)
     }
-    out
+    (s, norm)
   }
 
   /** Inference forward from an encoded buffer. Overwrites position 0
@@ -466,32 +488,62 @@ final class Transformer(
     * Writes no field of the model (all scratch is local to the call), so
     * any number of threads may call it at once, with any batch sizes. */
   def forwardEncoded(inp: Array[Float], batch: Int): Array[Float] =
-    run(inp, batch, cache = false)
+    walk(inp, batch, train = false, Arena.fresh)((_, _) => ())._2.out
 
-  /** Training forward: like forwardEncoded, but every layer also keeps
-    * what `backward` needs. */
-  def forward(data: Array[Array[Int]], train: Boolean): Array[Float] =
-    run(encodeInput(data, train), data.length, cache = true)
-
-  private def run(inp: Array[Float], batch: Int, cache: Boolean): Array[Float] = {
-    var r = 0
-    while (r < batch) {
-      System.arraycopy(posEmbeddings.data, 0, inp, r * seqLen * dModel, dModel)
-      r += 1
+  /** Training forward: SOS + right-shifted embeddings + pos embs
+    * (transformer.py:456-487), then the net, keeping what `backward`
+    * needs. With columnMasking and train=true, each input column draws
+    * p ~ U{0..nin-1}/nin and each row's slot becomes the [MASK]
+    * embedding w.p. p; the draws run here, in (order position, row)
+    * order, the encoding in the step's sequence ranges. Reuses the last
+    * training step's buffers, so one caller at a time may train a model. */
+  def forward(data: Array[Array[Int]], train: Boolean): Array[Float] = {
+    val bs = data.length
+    val drops =
+      if (columnMasking && train) Array.fill(nin - 1) {
+        val p = rng.nextInt(nin).toDouble / nin
+        Array.fill(bs)(rng.nextDouble() < p)
+      } else null
+    if (arena == null) arena = new Arena(keep = true)
+    arena.start()
+    val inp = arena.floats(bs * seqLen * dModel)
+    val (s, norm) = walk(inp, bs, train = true, arena) { (b0, b1) =>
+      var r = b0
+      while (r < b1) {
+        var p = 0
+        while (p < nin - 1) {
+          val nat = invOrder(p)
+          if (drops != null && drops(p)(r)) embed(unkEmbeddings(nat).data, 0, inp, r, p + 1)
+          else embed(embeddings(nat).data, data(r)(nat) * dModel, inp, r, p + 1)
+          p += 1
+        }
+        r += 1
+      }
     }
-    var h = inp
-    var i = 0
-    while (i < numBlocks) { h = blocks(i).forward(h, batch, cache); i += 1 }
-    finalNorm.forward(h, batch * seqLen, cache)
+    last = new Step(s, norm, data, drops)
+    norm.out
   }
 
-  /** Backward from dL/dHidden; routes gradients into block params,
-    * embeddings, pos embeddings, and unk embeddings. */
+  /** Backward from dL/dHidden, chunk-major like `forward`, which it must
+    * follow: one fork whose sequence ranges each run the final norm's
+    * and every block's backward. After the join the layers complete
+    * their parameter gradients, and dL/dEncodedInput is routed into the
+    * embeddings, pos embeddings and unk embeddings in row order. */
   def backward(gradHidden: Array[Float], batch: Int): Unit = {
-    var g = finalNorm.backward(gradHidden, batch * seqLen)
+    val st = last
+    val chunks = stepChunks(batch)
+    val gn = st.norm.backward(gradHidden, chunks)
+    val gs = new Array[RowGrad](numBlocks)
+    var g = gn.gx
     var i = numBlocks - 1
-    while (i >= 0) { g = blocks(i).backward(g, batch); i -= 1 }
-    // g = dL/dEncodedInput. Route into embeddings/pos/unk.
+    while (i >= 0) { gs(i) = st.blocks(i).backward(g, chunks); g = gs(i).gx; i -= 1 }
+    Nn.forRows(batch, chunks) { (c, b0, b1) =>
+      gn.rows(c, b0 * seqLen, b1 * seqLen)
+      var i = numBlocks - 1
+      while (i >= 0) { gs(i).rows(c, b0, b1); i -= 1 }
+    }
+    gn.finish()
+    gs.foreach(_.finish())
     var r = 0
     while (r < batch) {
       // SOS slice: pos emb 0 only.
@@ -505,13 +557,13 @@ final class Transformer(
         val nat = invOrder(ordPos)
         val pos = ordPos + 1
         val o = (r * seqLen + pos) * dModel
-        val dropped = dropMask != null && dropMask(nat)(r)
+        val dropped = st.drops != null && st.drops(ordPos)(r)
         k = 0
         while (k < dModel) {
           val gv = g(o + k)
           posEmbeddings.grad(pos * dModel + k) += gv
           if (dropped) unkEmbeddings(nat).grad(k) += gv
-          else embeddings(nat).grad(dataCache(r)(nat) * dModel + k) += gv
+          else embeddings(nat).grad(st.data(r)(nat) * dModel + k) += gv
           k += 1
         }
         ordPos += 1
@@ -545,45 +597,88 @@ final class Transformer(
   }
 
   /** Mean NLL + gradient wrt hidden states AND tied embeddings
-    * (transformer.py:568-585); grad scaled 1/batch. */
+    * (transformer.py:568-585); grad scaled 1/batch. One fork over the
+    * training step's sequence ranges computes each row's loss terms,
+    * logit gradients and dL/dhidden; after the join the terms are summed
+    * in (column, row) order, and a second fork over the (column, bin)
+    * embedding rows adds up the tied embeddings' gradients, each row's
+    * terms in row order. */
   def nllWithGrad(hidden: Array[Float], data: Array[Array[Int]],
       batch: Int): (Double, Array[Float]) = {
     val gradH = new Array[Float](hidden.length)
-    var total = 0.0
+    val terms = new Array[Double](nin * batch) // column c's row r at c·batch + r
+    // Column c's logits, then their gradients, [batch, dom_c].
+    val gLogits = Array.tabulate(nin)(c => new Array[Float](batch * inputBins(c)))
     val invB = 1f / batch
-    for (c <- 0 until nin) {
-      val dom = inputBins(c)
-      val e = embeddings(c)
-      val logits = logitsForCol(c, hidden, batch)
-      val pos = ordering(c)
-      var r = 0
-      while (r < batch) {
-        val base = r * dom
-        var mx = Float.NegativeInfinity
-        var j = 0
-        while (j < dom) { if (logits(base + j) > mx) mx = logits(base + j); j += 1 }
-        var sum = 0.0
-        j = 0
-        while (j < dom) { sum += math.exp(logits(base + j) - mx); j += 1 }
-        val logZ = mx + math.log(sum)
-        val t = data(r)(c)
-        total += logZ - logits(base + t)
-        val hOff = (r * seqLen + pos) * dModel
-        j = 0
-        while (j < dom) {
-          val gl = ((math.exp(logits(base + j) - logZ)).toFloat -
-            (if (j == t) 1f else 0f)) * invB
-          if (gl != 0f) {
+    Nn.forRows(batch, stepChunks(batch)) { (_, r0, r1) =>
+      var c = 0
+      while (c < nin) {
+        val dom = inputBins(c)
+        val e = embeddings(c).data
+        val gl = gLogits(c)
+        val pos = ordering(c)
+        var r = r0
+        while (r < r1) {
+          val base = r * dom
+          val hOff = (r * seqLen + pos) * dModel
+          var mx = Float.NegativeInfinity
+          var j = 0
+          while (j < dom) {
+            var s = 0f
             var k = 0
-            while (k < dModel) {
-              gradH(hOff + k) += gl * e.data(j * dModel + k)
-              e.grad(j * dModel + k) += gl * hidden(hOff + k)
-              k += 1
-            }
+            while (k < dModel) { s += hidden(hOff + k) * e(j * dModel + k); k += 1 }
+            gl(base + j) = s
+            if (s > mx) mx = s
+            j += 1
           }
-          j += 1
+          var sum = 0.0
+          j = 0
+          while (j < dom) { sum += math.exp(gl(base + j) - mx); j += 1 }
+          val logZ = mx + math.log(sum)
+          val t = data(r)(c)
+          terms(c * batch + r) = logZ - gl(base + t)
+          j = 0
+          while (j < dom) {
+            val g = ((math.exp(gl(base + j) - logZ)).toFloat -
+              (if (j == t) 1f else 0f)) * invB
+            gl(base + j) = g
+            if (g != 0f) {
+              var k = 0
+              while (k < dModel) { gradH(hOff + k) += g * e(j * dModel + k); k += 1 }
+            }
+            j += 1
+          }
+          r += 1
         }
-        r += 1
+        c += 1
+      }
+    }
+    var total = 0.0
+    var k = 0
+    while (k < terms.length) { total += terms(k); k += 1 }
+    // Each (column, bin) embedding row adds its rows' terms in row order;
+    // the rows are disjoint, so they fork.
+    Nn.forRows(binStart(nin), stepChunks(batch)) { (_, e0, e1) =>
+      var c = 0
+      var e = e0
+      while (e < e1) {
+        while (binStart(c + 1) <= e) c += 1
+        val dom = inputBins(c)
+        val j = e - binStart(c)
+        val eg = embeddings(c).grad
+        val gl = gLogits(c)
+        val pos = ordering(c)
+        var r = 0
+        while (r < batch) {
+          val g = gl(r * dom + j)
+          if (g != 0f) {
+            val hOff = (r * seqLen + pos) * dModel
+            var k = 0
+            while (k < dModel) { eg(j * dModel + k) += g * hidden(hOff + k); k += 1 }
+          }
+          r += 1
+        }
+        e += 1
       }
     }
     (total / batch, gradH)

@@ -1,6 +1,10 @@
 package graft.ops
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.{ExistenceJoin, LeftAnti, LeftSemi}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Deduplicate,
+  Filter, GlobalLimit, Join, LocalLimit, LogicalPlan, Project, Repartition,
+  RepartitionByExpression, Sample, Sort, SubqueryAlias, Union, Window}
 import org.apache.spark.storage.StorageLevel
 
 /** Shared lineage-truncating loop driver for iterative DataFrame
@@ -69,6 +73,29 @@ object Iterate {
   private def autoEnabled: Boolean =
     !sys.env.get("GRAFT_ITERATE_AUTO").exists(_.trim == "0")
 
+  /** An upper bound on `plan`'s rows from the row counts Catalyst knows
+    * below it: a join yields at most the product of its sides (plus
+    * their rows for outer joins), a union the sum, and the operators
+    * matched here never add rows. None where a bound is unknown. */
+  private def rowBound(plan: LogicalPlan): Option[BigInt] =
+    plan.stats.rowCount.orElse(plan match {
+      case j: Join =>
+        for (l <- rowBound(j.left); r <- rowBound(j.right)) yield j.joinType match {
+          case LeftSemi | LeftAnti | ExistenceJoin(_) => l
+          case _ => l * r + l + r
+        }
+      case u: Union =>
+        u.children.map(rowBound).foldLeft(Option(BigInt(0))) {
+          case (Some(a), Some(b)) => Some(a + b)
+          case _ => None
+        }
+      case _: Project | _: Filter | _: Aggregate | _: Sort | _: Window |
+           _: Repartition | _: RepartitionByExpression | _: Sample |
+           _: GlobalLimit | _: LocalLimit | _: Deduplicate | _: SubqueryAlias =>
+        rowBound(plan.children.head)
+      case _ => None
+    })
+
   /** Auto-select the local rounds' storage posture when the caller
     * didn't (r15; VERDICT r14 ask #4 — pick the measured-flat posture
     * with NO env knobs): estimate the per-round state from the INITIAL
@@ -102,16 +129,21 @@ object Iterate {
       // record it), floor the estimate with an UnsafeRow-block model:
       // ~16 B object header + 8 B row header + 8 B per field, doubled
       // for deser JVM object overhead — which reproduces the measured
-      // 1.6 GB within ~20% for the 2-long edge schema.
-      val nFields = df.schema.size
-      val rowModel = stats.rowCount
-        .map(rc => rc * (2L * (24 + 8 * nFields)))
-        .getOrElse(BigInt(0))
-      val perRound = stats.sizeInBytes.max(rowModel)
+      // 1.6 GB within ~20% for the 2-long edge schema. Catalyst drops
+      // the row count at a join and multiplies its children's
+      // sizeInBytes instead (3.5e48 B for a tiny dedup state), so
+      // without a row count the model prices [[rowBound]]'s bound when
+      // there is one, and sizeInBytes, clamped to the pool, otherwise.
+      val rowBytes = 2L * (24 + 8 * df.schema.size)
+      val perRound = stats.rowCount match {
+        case Some(rc) => stats.sizeInBytes.max(rc * rowBytes)
+        case None => rowBound(df.queryExecution.optimizedPlan)
+          .map(_ * rowBytes).getOrElse(stats.sizeInBytes.min(BigInt(pool)))
+      }
       if (sys.env.get("GRAFT_ITERATE_DEBUG").exists(_.trim == "1"))
         System.err.println(
           s"[iterate] auto-posture debug: sizeInBytes=${stats.sizeInBytes} " +
-            s"rowCount=${stats.rowCount} rowModel=$rowModel " +
+            s"rowCount=${stats.rowCount} " +
             s"perRound=$perRound pool=$pool " +
             s"threshold=${(pool * PoolSafetyFraction).toLong}")
       if (pool > 0 &&

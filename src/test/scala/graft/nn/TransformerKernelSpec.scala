@@ -13,7 +13,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * ordering) has 36, 12 and 20, which are not multiples of the 8-wide
   * output tile. Batches 1 and 3 end on an odd row; batch 2000 forks every
   * layer over row ranges. Training uses 64-tuple minibatches so no layer
-  * forks and the parameter digests hold on any core count.
+  * forks and the parameter digests hold on any core count, except in the
+  * forked training case: there model F (the benchmark's shape: dModel 16,
+  * dFf 32, 2 heads, column masking, domains 4/3/51/12/10) trains at batch
+  * 1024, where every dense layer forks, with a 304-row tail step where
+  * only qkv does.
   */
 class TransformerKernelSpec extends AnyFunSuite {
 
@@ -83,5 +87,27 @@ class TransformerKernelSpec extends AnyFunSuite {
       name -> digest(m.params.map(_.data))
     }
     assert(got.toMap == pinnedTrained, got.mkString("\n", "\n", ""))
+  }
+
+  // (parameter digest, per-epoch loss digest) after 3 epochs of 2 steps
+  private val pinnedForked = (-4995883808582588042L, -6447589040589070751L)
+
+  test("training steps that fork keep their pinned bits") {
+    val fBins = Array(4, 3, 51, 12, 10)
+    val m = new Transformer(5, fBins, dModel = 16, dFf = 32, numHeads = 2,
+      numBlocks = 2, columnMasking = true, seed = 11123L)
+    // Forking steps sum parameter gradients per row range, so their bits
+    // depend on the range count; the literals were taken at 4.
+    assume(Nn.chunks(1024 * m.seqLen, 16 * 48) == 4 &&
+      Nn.chunks(304 * m.seqLen, 16 * 48) == 4,
+      "pinned where a forking layer splits its rows into 4 ranges")
+    val rng = new java.util.Random(12)
+    val data = Array.fill(1328)(fBins.map(rng.nextInt))
+    val logs = Trainer.train(m, data, epochs = 3, batchSize = 1024,
+      schedule = Trainer.ConstantLr(5e-3f), seed = 3)
+    var h = 1125899906842597L
+    for (l <- logs) h = 31 * h + java.lang.Double.doubleToRawLongBits(l.meanNllNats)
+    val got = (digest(m.params.map(_.data)), h)
+    assert(got == pinnedForked, got.toString)
   }
 }

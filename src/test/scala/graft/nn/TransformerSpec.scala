@@ -144,6 +144,47 @@ class TransformerSpec extends AnyFunSuite {
     }
   }
 
+  test("training at odd batch sizes is deterministic, and a forked " +
+    "forwardEncoded equals batch-1 calls") {
+    val fBins = Array(4, 3, 51, 12, 10)
+    def model() = new Transformer(5, fBins, dModel = 16, dFf = 32,
+      numHeads = 2, numBlocks = 2, columnMasking = true, seed = 17)
+    val rng = new java.util.Random(6)
+    val data = Array.fill(1001)(fBins.map(rng.nextInt))
+    // Batch 1001 forks (at 4 or more cores) over ranges that do not divide
+    // it; 1 and 7 run inline. Each trains two steps per epoch.
+    for (bs <- Seq(1, 7, 1001)) {
+      val rows = data.take(math.min(2 * bs, data.length))
+      val runs = Seq.fill(2) {
+        val m = model()
+        Trainer.train(m, rows, epochs = 2, batchSize = bs,
+          schedule = Trainer.ConstantLr(5e-3f), seed = 8)
+        m.params.map(_.data.clone())
+      }
+      assert(runs(0).zip(runs(1)).forall { case (a, b) =>
+        java.util.Arrays.equals(a, b) }, s"batch $bs: two runs differ")
+      assert(runs(0).forall(_.forall(v => !v.isNaN && !v.isInfinite)),
+        s"batch $bs: a parameter is not finite")
+    }
+    // ProgressiveSampling's prefix groups rely on each sequence's hidden
+    // states not depending on the batch around it.
+    val m = model()
+    Trainer.train(m, data.take(512), epochs = 1, batchSize = 256, seed = 2)
+    val n = 2000
+    val inp = new Array[Float](n * m.totalInputSize)
+    for (c <- 0 until m.nin) {
+      val values = Array.fill(n)(rng.nextInt(fBins(c)))
+      m.encodeColumn(c, values, inp, n)
+    }
+    val whole = m.forwardEncoded(inp.clone(), n)
+    val w = m.totalInputSize
+    val differing = (0 until n).count { r =>
+      val one = m.forwardEncoded(java.util.Arrays.copyOfRange(inp, r * w, (r + 1) * w), 1)
+      !java.util.Arrays.equals(one, java.util.Arrays.copyOfRange(whole, r * w, (r + 1) * w))
+    }
+    assert(differing == 0, s"$differing of $n sequences differ from their batch-1 forward")
+  }
+
   test("ProgressiveSampling drives the Transformer via ArModel") {
     for (ord <- Seq(null, Array(2, 1, 0))) psampleMatchesExact(ord)
   }

@@ -140,6 +140,26 @@ class IterateReliableSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"small-state auto run must stay deserialized, got $serLevels")
   }
 
+  test("auto-posture prices a join of known row counts with the row " +
+    "model, not its inflated byte size") {
+    // Catalyst sizes a join as the product of its children's byte sizes
+    // and drops the row count: twelve copies of a materialized 2-row
+    // cache cross-join to 4096 rows (~1 MB under the row model) whose
+    // plan claims far more than the storage pool, as a blown-up join
+    // estimate did on a tiny dedup state.
+    val small = spark.range(2).toDF("c0").cache()
+    small.count()
+    val df = (1 until 12).foldLeft(small) { (acc, i) =>
+      acc.crossJoin(small.toDF(s"c$i"))
+    }
+    val stats = df.queryExecution.optimizedPlan.stats
+    val pool = spark.sparkContext.getExecutorMemoryStatus.values.map(_._1).sum
+    assert(stats.rowCount.isEmpty && stats.sizeInBytes > BigInt(pool),
+      s"precondition: rowCount=${stats.rowCount} sizeInBytes=${stats.sizeInBytes} pool=$pool")
+    try assert(Iterate.autoStorageLevel(df).isEmpty)
+    finally small.unpersist(true)
+  }
+
   test("iterateUntil converges identically under reliable truncation") {
     spark.sparkContext.setCheckpointDir(ckptDir.toString)
     import org.apache.spark.sql.functions._
