@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import graft.core.Dictionary
 import graft.est.{BayesNet, BayesNetEstimator}
 
 /** Scratch profiler for the wide-BN fit (round-7 ask #4). */

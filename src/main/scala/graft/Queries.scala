@@ -814,10 +814,10 @@ ORDER BY query_id""")),
         val savedEnabled =
           s.conf.getOption(graft.plans.GraftRuntime.EnabledKey)
         val (dir, ev, doms, le) = gridWorkloadData(s, d)
-        graft.plans.GraftRuntime.registerWithDomain(dir,
+        graft.plans.GraftRuntime.register(dir,
           Set("g1", "g2", "w", "v"),
           preds => le.count(preds),
-          name => doms.get(name))
+          domain = name => doms.get(name))
         s.conf.set(graft.plans.GraftRuntime.EnabledKey, "true")
         try {
           ev.createOrReplaceTempView("graft_aqp_gbo_events")
@@ -918,16 +918,16 @@ ORDER BY query_id, grp, metric""")),
           Seq("c_nationkey", "c_acctbal", "c_mktsegment"))
         val leN = localExact(s"$d/nation.parquet", nat,
           Seq("n_nationkey", "n_regionkey", "n_name"))
-        graft.plans.GraftRuntime.registerWithDomain(
+        graft.plans.GraftRuntime.register(
           s"$d/customer.parquet",
           Set("c_nationkey", "c_acctbal", "c_mktsegment"),
           preds => leC.count(preds),
-          name => if (name == "c_nationkey") Some(cDom) else None)
-        graft.plans.GraftRuntime.registerWithDomain(
+          domain = name => if (name == "c_nationkey") Some(cDom) else None)
+        graft.plans.GraftRuntime.register(
           s"$d/nation.parquet",
           Set("n_nationkey", "n_regionkey", "n_name"),
           preds => leN.count(preds),
-          name => if (name == "n_nationkey") Some(nDom) else None)
+          domain = name => if (name == "n_nationkey") Some(nDom) else None)
         s.conf.set(graft.plans.GraftRuntime.EnabledKey, "true")
         try {
           cust.createOrReplaceTempView("graft_aqp_jo_customer")
@@ -1144,10 +1144,10 @@ ORDER BY query_id""")),
         // trip per probe (the r16 lesson, this entry had kept it).
         val le = localExact(dir, ev, Seq("et", "value"))
         val etDomain = le.domainOf("et")
-        graft.plans.GraftRuntime.registerWithDomain(dir,
+        graft.plans.GraftRuntime.register(dir,
           Set("et", "value"),
           preds => le.count(preds),
-          name => if (name == "et") Some(etDomain) else None)
+          domain = name => if (name == "et") Some(etDomain) else None)
         s.conf.set(graft.plans.GraftRuntime.EnabledKey, "true")
         try {
           ev.createOrReplaceTempView("graft_aqp_cntd_events")
@@ -1238,10 +1238,10 @@ ORDER BY query_id""")),
         val le = localExact(dir, ev, Seq("qty", "ql", "et", "value"))
         val qtyDomain = le.domainOf("qty")
         val qlDomain = le.domainOf("ql")
-        graft.plans.GraftRuntime.registerWithDomain(dir,
+        graft.plans.GraftRuntime.register(dir,
           Set("qty", "ql", "et", "value"),
           preds => le.count(preds),
-          name => name match {
+          domain = name => name match {
             case "qty" => Some(qtyDomain)
             case "ql" => Some(qlDomain)
             case _ => None
@@ -1362,9 +1362,9 @@ ORDER BY query_id""")),
         val exact = texts.map { case (qid, _, refSql) =>
           qid -> s.sql(refSql).collect()(0).getDouble(0)
         }.toMap
-        graft.plans.GraftRuntime.registerWithDomain(
+        graft.plans.GraftRuntime.register(
           s"$d/lineitem.parquet", modelCols.toSet, ps.query,
-          name => if (name == "l_quantity")
+          domain = name => if (name == "l_quantity")
             Some(meta.column("l_quantity").domain.toSeq) else None)
         s.conf.set(graft.plans.GraftRuntime.EnabledKey, "true")
         try {
@@ -1424,10 +1424,10 @@ ORDER BY query_id""")),
         // pattern (229 s for a probe-grid workload) — while the
         // driver-side mask scan is microseconds (ADVICE r16).
         val le = localExact(s"$d/lineitem.parquet", liDf, modelCols)
-        graft.plans.GraftRuntime.registerWithDomain(
+        graft.plans.GraftRuntime.register(
           s"$d/lineitem.parquet", modelCols.toSet,
           preds => le.count(preds),
-          name => domains.get(name))
+          domain = name => domains.get(name))
         s.conf.set(graft.plans.GraftRuntime.EnabledKey, "true")
         try {
           liDf.createOrReplaceTempView("graft_aqp_gbm_lineitem")
@@ -1517,10 +1517,10 @@ ORDER BY query_id, rf, ls""")),
         val le = localExact(dir, ev, Seq("g", "qty", "value"))
         val gDomain = le.domainOf("g")
         val qtyDomain = le.domainOf("qty")
-        graft.plans.GraftRuntime.registerWithDomain(dir,
+        graft.plans.GraftRuntime.register(dir,
           Set("g", "qty", "value"),
           preds => le.count(preds),
-          name => name match {
+          domain = name => name match {
             case "g" => Some(gDomain)
             case "qty" => Some(qtyDomain)
             case _ => None
@@ -1641,20 +1641,20 @@ ORDER BY query_id, grp NULLS FIRST, metric""")),
         val leN = localExact(s"$d/nation.parquet", nat,
           Seq("n_nationkey", "n_regionkey", "n_name"))
         val leS = localExact(s"$d/supplier.parquet", supp, Seq("s_nationkey"))
-        graft.plans.GraftRuntime.registerWithDomain(
+        graft.plans.GraftRuntime.register(
           s"$d/customer.parquet",
           Set("c_nationkey", "c_acctbal", "c_mktsegment"),
           preds => leC.count(preds),
-          name => if (name == "c_nationkey") Some(cDom) else None)
-        graft.plans.GraftRuntime.registerWithDomain(
+          domain = name => if (name == "c_nationkey") Some(cDom) else None)
+        graft.plans.GraftRuntime.register(
           s"$d/nation.parquet",
           Set("n_nationkey", "n_regionkey", "n_name"),
           preds => leN.count(preds),
-          name => if (name == "n_nationkey") Some(nDom) else None)
-        graft.plans.GraftRuntime.registerWithDomain(
+          domain = name => if (name == "n_nationkey") Some(nDom) else None)
+        graft.plans.GraftRuntime.register(
           s"$d/supplier.parquet", Set("s_nationkey"),
           preds => leS.count(preds),
-          name => if (name == "s_nationkey") Some(sDom) else None)
+          domain = name => if (name == "s_nationkey") Some(sDom) else None)
         s.conf.set(graft.plans.GraftRuntime.EnabledKey, "true")
         try {
           cust.createOrReplaceTempView("graft_aqp_jc_customer")
@@ -1739,16 +1739,16 @@ ORDER BY query_id""")),
           Seq("c_nationkey", "c_acctbal", "c_mktsegment"))
         val leN = localExact(s"$d/nation.parquet", nat,
           Seq("n_nationkey", "n_regionkey", "n_name"))
-        graft.plans.GraftRuntime.registerWithDomain(
+        graft.plans.GraftRuntime.register(
           s"$d/customer.parquet",
           Set("c_nationkey", "c_acctbal", "c_mktsegment"),
           preds => leC.count(preds),
-          name => if (name == "c_nationkey") Some(cDom) else None)
-        graft.plans.GraftRuntime.registerWithDomain(
+          domain = name => if (name == "c_nationkey") Some(cDom) else None)
+        graft.plans.GraftRuntime.register(
           s"$d/nation.parquet",
           Set("n_nationkey", "n_regionkey", "n_name"),
           preds => leN.count(preds),
-          name => if (name == "n_nationkey") Some(nDom) else None)
+          domain = name => if (name == "n_nationkey") Some(nDom) else None)
         s.conf.set(graft.plans.GraftRuntime.EnabledKey, "true")
         try {
           cust.createOrReplaceTempView("graft_aqp_ex_customer")
@@ -1848,12 +1848,12 @@ ORDER BY query_id""")),
         val leR = localExact(s"$base/r.parquet", dr, Seq("k1", "b"))
         val lDoms = Seq("k1", "w").map(c => c -> leL.domainOf(c)).toMap
         val rDoms = Seq("k1").map(c => c -> leR.domainOf(c)).toMap
-        graft.plans.GraftRuntime.registerWithDomain(s"$base/l.parquet",
+        graft.plans.GraftRuntime.register(s"$base/l.parquet",
           Set("k1", "w"), preds => leL.count(preds),
-          name => lDoms.get(name))
-        graft.plans.GraftRuntime.registerWithDomain(s"$base/r.parquet",
+          domain = name => lDoms.get(name))
+        graft.plans.GraftRuntime.register(s"$base/r.parquet",
           Set("k1", "b"), preds => leR.count(preds),
-          name => rDoms.get(name))
+          domain = name => rDoms.get(name))
         s.conf.set(graft.plans.GraftRuntime.EnabledKey, "true")
         try {
           dl.createOrReplaceTempView("graft_aqp_exa_l")
@@ -1959,12 +1959,12 @@ ORDER BY query_id""")),
         val leR = localExact(s"$base/r.parquet", dr, Seq("kk", "b"))
         val lDoms = Seq("k").map(c => c -> leL.domainOf(c)).toMap
         val rDoms = Seq("kk").map(c => c -> leR.domainOf(c)).toMap
-        graft.plans.GraftRuntime.registerWithDomain(s"$base/l.parquet",
+        graft.plans.GraftRuntime.register(s"$base/l.parquet",
           Set("k", "w"), preds => leL.count(preds),
-          name => lDoms.get(name))
-        graft.plans.GraftRuntime.registerWithDomain(s"$base/r.parquet",
+          domain = name => lDoms.get(name))
+        graft.plans.GraftRuntime.register(s"$base/r.parquet",
           Set("kk", "b"), preds => leR.count(preds),
-          name => rDoms.get(name))
+          domain = name => rDoms.get(name))
         s.conf.set(graft.plans.GraftRuntime.EnabledKey, "true")
         try {
           dl.createOrReplaceTempView("graft_aqp_nin_l")
@@ -2079,12 +2079,12 @@ ORDER BY query_id""")),
         val leR = localExact(s"$base/r.parquet", dr, Seq("k1", "k2", "b"))
         val lDoms = Seq("k1", "k2", "w").map(c => c -> leL.domainOf(c)).toMap
         val rDoms = Seq("k1", "k2").map(c => c -> leR.domainOf(c)).toMap
-        graft.plans.GraftRuntime.registerWithDomain(s"$base/l.parquet",
+        graft.plans.GraftRuntime.register(s"$base/l.parquet",
           Set("k1", "k2", "w"), preds => leL.count(preds),
-          name => lDoms.get(name))
-        graft.plans.GraftRuntime.registerWithDomain(s"$base/r.parquet",
+          domain = name => lDoms.get(name))
+        graft.plans.GraftRuntime.register(s"$base/r.parquet",
           Set("k1", "k2", "b"), preds => leR.count(preds),
-          name => rDoms.get(name))
+          domain = name => rDoms.get(name))
         s.conf.set(graft.plans.GraftRuntime.EnabledKey, "true")
         try {
           dl.createOrReplaceTempView("graft_aqp_exc_l")
@@ -2202,12 +2202,12 @@ ORDER BY query_id""")),
         val d1 = Seq("k", "w").map(c => c -> le1.domainOf(c)).toMap
         val d2 = Seq("k", "w").map(c => c -> le2.domainOf(c)).toMap
         val dR = Seq("k").map(c => c -> leR.domainOf(c)).toMap
-        graft.plans.GraftRuntime.registerWithDomain(s"$base/t1.parquet",
-          Set("k", "w"), preds => le1.count(preds), n => d1.get(n))
-        graft.plans.GraftRuntime.registerWithDomain(s"$base/t2.parquet",
-          Set("k", "w"), preds => le2.count(preds), n => d2.get(n))
-        graft.plans.GraftRuntime.registerWithDomain(s"$base/r.parquet",
-          Set("k", "b"), preds => leR.count(preds), n => dR.get(n))
+        graft.plans.GraftRuntime.register(s"$base/t1.parquet",
+          Set("k", "w"), preds => le1.count(preds), domain = n => d1.get(n))
+        graft.plans.GraftRuntime.register(s"$base/t2.parquet",
+          Set("k", "w"), preds => le2.count(preds), domain = n => d2.get(n))
+        graft.plans.GraftRuntime.register(s"$base/r.parquet",
+          Set("k", "b"), preds => leR.count(preds), domain = n => dR.get(n))
         s.conf.set(graft.plans.GraftRuntime.EnabledKey, "true")
         try {
           t1.createOrReplaceTempView("graft_aqp_unc_t1")
@@ -2330,10 +2330,10 @@ ORDER BY query_id""")),
         val le2 = localExact(s"$base/t2.parquet", t2, Seq("k", "w", "v"))
         val d1 = Seq("k", "w", "v").map(c => c -> le1.domainOf(c)).toMap
         val d2 = Seq("k", "w", "v").map(c => c -> le2.domainOf(c)).toMap
-        graft.plans.GraftRuntime.registerWithDomain(s"$base/t1.parquet",
-          Set("k", "w", "v"), preds => le1.count(preds), n => d1.get(n))
-        graft.plans.GraftRuntime.registerWithDomain(s"$base/t2.parquet",
-          Set("k", "w", "v"), preds => le2.count(preds), n => d2.get(n))
+        graft.plans.GraftRuntime.register(s"$base/t1.parquet",
+          Set("k", "w", "v"), preds => le1.count(preds), domain = n => d1.get(n))
+        graft.plans.GraftRuntime.register(s"$base/t2.parquet",
+          Set("k", "w", "v"), preds => le2.count(preds), domain = n => d2.get(n))
         s.conf.set(graft.plans.GraftRuntime.EnabledKey, "true")
         try {
           t1.createOrReplaceTempView("graft_aqp_una_t1")
@@ -2495,13 +2495,13 @@ ORDER BY query_id""")),
         val domF = Seq("k1", "k2", "w").map(c => c -> leF.domainOf(c)).toMap
         val domDl = Seq("m1", "a").map(c => c -> leDl.domainOf(c)).toMap
         val domD2 = Seq("j2", "b").map(c => c -> leD2.domainOf(c)).toMap
-        graft.plans.GraftRuntime.registerWithDomain(s"$base/f.parquet",
+        graft.plans.GraftRuntime.register(s"$base/f.parquet",
           Set("k1", "k2", "w"), preds => leF.count(preds),
-          n => domF.get(n))
-        graft.plans.GraftRuntime.registerWithDomain(s"$base/dl.parquet",
-          Set("m1", "a"), preds => leDl.count(preds), n => domDl.get(n))
-        graft.plans.GraftRuntime.registerWithDomain(s"$base/d2.parquet",
-          Set("j2", "b"), preds => leD2.count(preds), n => domD2.get(n))
+          domain = n => domF.get(n))
+        graft.plans.GraftRuntime.register(s"$base/dl.parquet",
+          Set("m1", "a"), preds => leDl.count(preds), domain = n => domDl.get(n))
+        graft.plans.GraftRuntime.register(s"$base/d2.parquet",
+          Set("j2", "b"), preds => leD2.count(preds), domain = n => domD2.get(n))
         s.conf.set(graft.plans.GraftRuntime.EnabledKey, "true")
         try {
           fD.createOrReplaceTempView("graft_aqp_oit_f")
@@ -2612,9 +2612,9 @@ ORDER BY query_id""")),
         Seq(
           "f" -> Set("k1", "k2", "g", "w", "dt"),
           "d1" -> Set("k1", "k2", "a", "s")).foreach { case (t, cols) =>
-          graft.plans.GraftRuntime.registerWithDomain(
+          graft.plans.GraftRuntime.register(
             s"$dir/$t.parquet", cols,
-            preds => les(t).count(preds), name => doms.get((t, name)))
+            preds => les(t).count(preds), domain = name => doms.get((t, name)))
         }
         s.conf.set(graft.plans.GraftRuntime.EnabledKey, "true")
         try {
@@ -2763,9 +2763,9 @@ ORDER BY query_id, metric""")),
           "f" -> Set("k1", "k2", "g", "w", "dt"),
           "d3" -> Set("m1", "c"),
           "d2" -> Set("k2", "b")).foreach { case (t, cols) =>
-          graft.plans.GraftRuntime.registerWithDomain(
+          graft.plans.GraftRuntime.register(
             s"$dir/$t.parquet", cols,
-            preds => les(t).count(preds), name => doms.get((t, name)))
+            preds => les(t).count(preds), domain = name => doms.get((t, name)))
         }
         s.conf.set(graft.plans.GraftRuntime.EnabledKey, "true")
         try {
@@ -2883,9 +2883,9 @@ ORDER BY query_id""")),
         Seq(
           "f" -> Set("k1", "k2", "g", "w", "dt"),
           "d1" -> Set("k1", "k2", "a", "s")).foreach { case (t, cols) =>
-          graft.plans.GraftRuntime.registerWithDomain(
+          graft.plans.GraftRuntime.register(
             s"$dir/$t.parquet", cols,
-            preds => les(t).count(preds), name => doms.get((t, name)))
+            preds => les(t).count(preds), domain = name => doms.get((t, name)))
         }
         s.conf.set(graft.plans.GraftRuntime.EnabledKey, "true")
         try {
@@ -3046,16 +3046,16 @@ ORDER BY query_id, grp, metric""")),
         val nDoms = Seq("n_nationkey", "n_regionkey")
           .map(c => c -> leN.domainOf(c)).toMap
         val rDoms = Seq("r_regionkey").map(c => c -> leR.domainOf(c)).toMap
-        graft.plans.GraftRuntime.registerWithDomain(
+        graft.plans.GraftRuntime.register(
           s"$d/customer.parquet", Set("c_custkey", "c_nationkey"),
           preds => leC.count(preds),
-          n => if (n == "c_nationkey") cDoms.get(n) else None)
-        graft.plans.GraftRuntime.registerWithDomain(
+          domain = n => if (n == "c_nationkey") cDoms.get(n) else None)
+        graft.plans.GraftRuntime.register(
           s"$d/nation.parquet", Set("n_nationkey", "n_regionkey"),
-          preds => leN.count(preds), n => nDoms.get(n))
-        graft.plans.GraftRuntime.registerWithDomain(
+          preds => leN.count(preds), domain = n => nDoms.get(n))
+        graft.plans.GraftRuntime.register(
           s"$d/region.parquet", Set("r_regionkey", "r_name"),
-          preds => leR.count(preds), n => rDoms.get(n))
+          preds => leR.count(preds), domain = n => rDoms.get(n))
         s.conf.set(graft.plans.GraftRuntime.EnabledKey, "true")
         try {
           cust.createOrReplaceTempView("graft_aqp_ox_customer")
@@ -3196,15 +3196,15 @@ ORDER BY query_id""")),
         val fDoms = Seq("k1", "k2", "w").map(c => c -> leF.domainOf(c)).toMap
         val dDoms = Seq("k1", "a").map(c => c -> leD.domainOf(c)).toMap
         val rDoms = Seq("k2").map(c => c -> leR.domainOf(c)).toMap
-        graft.plans.GraftRuntime.registerWithDomain(s"$base/f.parquet",
+        graft.plans.GraftRuntime.register(s"$base/f.parquet",
           Set("k1", "k2", "w"), preds => leF.count(preds),
-          name => fDoms.get(name))
-        graft.plans.GraftRuntime.registerWithDomain(s"$base/d.parquet",
+          domain = name => fDoms.get(name))
+        graft.plans.GraftRuntime.register(s"$base/d.parquet",
           Set("k1", "a"), preds => leD.count(preds),
-          name => dDoms.get(name))
-        graft.plans.GraftRuntime.registerWithDomain(s"$base/r.parquet",
+          domain = name => dDoms.get(name))
+        graft.plans.GraftRuntime.register(s"$base/r.parquet",
           Set("k2", "b"), preds => leR.count(preds),
-          name => rDoms.get(name))
+          domain = name => rDoms.get(name))
         s.conf.set(graft.plans.GraftRuntime.EnabledKey, "true")
         try {
           fD.createOrReplaceTempView("graft_aqp_exn_f")
@@ -3304,17 +3304,17 @@ ORDER BY query_id""")),
         val nDoms = Seq("n_nationkey", "n_regionkey")
           .map(c => c -> leN.domainOf(c)).toMap
         val rDoms = Seq("r_regionkey").map(c => c -> leR.domainOf(c)).toMap
-        graft.plans.GraftRuntime.registerWithDomain(
+        graft.plans.GraftRuntime.register(
           s"$d/customer.parquet",
           Set("c_nationkey", "c_mktsegment", "c_acctbal"),
-          preds => leC.count(preds), name => cDoms.get(name))
-        graft.plans.GraftRuntime.registerWithDomain(
+          preds => leC.count(preds), domain = name => cDoms.get(name))
+        graft.plans.GraftRuntime.register(
           s"$d/nation.parquet",
           Set("n_nationkey", "n_regionkey", "n_name"),
-          preds => leN.count(preds), name => nDoms.get(name))
-        graft.plans.GraftRuntime.registerWithDomain(
+          preds => leN.count(preds), domain = name => nDoms.get(name))
+        graft.plans.GraftRuntime.register(
           s"$d/region.parquet", Set("r_regionkey", "r_name"),
-          preds => leR.count(preds), name => rDoms.get(name))
+          preds => leR.count(preds), domain = name => rDoms.get(name))
         s.conf.set(graft.plans.GraftRuntime.EnabledKey, "true")
         try {
           cust.createOrReplaceTempView("graft_aqp_exj_customer")
@@ -3401,16 +3401,16 @@ ORDER BY query_id""")),
           Seq("c_nationkey", "c_acctbal", "c_mktsegment"))
         val leN = localExact(s"$d/nation.parquet", nat,
           Seq("n_nationkey", "n_regionkey", "n_name"))
-        graft.plans.GraftRuntime.registerWithDomain(
+        graft.plans.GraftRuntime.register(
           s"$d/customer.parquet",
           Set("c_nationkey", "c_acctbal", "c_mktsegment"),
           preds => leC.count(preds),
-          name => if (name == "c_nationkey") Some(cDom) else None)
-        graft.plans.GraftRuntime.registerWithDomain(
+          domain = name => if (name == "c_nationkey") Some(cDom) else None)
+        graft.plans.GraftRuntime.register(
           s"$d/nation.parquet",
           Set("n_nationkey", "n_regionkey", "n_name"),
           preds => leN.count(preds),
-          name => if (name == "n_nationkey") Some(nDom) else None)
+          domain = name => if (name == "n_nationkey") Some(nDom) else None)
         s.conf.set(graft.plans.GraftRuntime.EnabledKey, "true")
         try {
           cust.createOrReplaceTempView("graft_aqp_oc_customer")
@@ -3490,14 +3490,14 @@ ORDER BY query_id""")),
           .map(c => c -> leC.domainOf(c)).toMap
         val nDoms = Seq("n_nationkey", "n_regionkey")
           .map(c => c -> leN.domainOf(c)).toMap
-        graft.plans.GraftRuntime.registerWithDomain(
+        graft.plans.GraftRuntime.register(
           s"$d/customer.parquet",
           Set("c_nationkey", "c_acctbal", "c_mktsegment"),
-          preds => leC.count(preds), name => cDoms.get(name))
-        graft.plans.GraftRuntime.registerWithDomain(
+          preds => leC.count(preds), domain = name => cDoms.get(name))
+        graft.plans.GraftRuntime.register(
           s"$d/nation.parquet",
           Set("n_nationkey", "n_regionkey", "n_name"),
-          preds => leN.count(preds), name => nDoms.get(name))
+          preds => leN.count(preds), domain = name => nDoms.get(name))
         s.conf.set(graft.plans.GraftRuntime.EnabledKey, "true")
         try {
           cust.createOrReplaceTempView("graft_aqp_og_customer")
@@ -3640,12 +3640,12 @@ ORDER BY query_id, grp, metric""")),
         val leR = localExact(s"$base/r.parquet", dr, Seq("k", "b", "v"))
         val lDoms = Seq("k", "w").map(c => c -> leL.domainOf(c)).toMap
         val rDoms = Seq("k", "v").map(c => c -> leR.domainOf(c)).toMap
-        graft.plans.GraftRuntime.registerWithDomain(s"$base/l.parquet",
+        graft.plans.GraftRuntime.register(s"$base/l.parquet",
           Set("k", "w"), preds => leL.count(preds),
-          name => lDoms.get(name))
-        graft.plans.GraftRuntime.registerWithDomain(s"$base/r.parquet",
+          domain = name => lDoms.get(name))
+        graft.plans.GraftRuntime.register(s"$base/r.parquet",
           Set("k", "b", "v"), preds => leR.count(preds),
-          name => rDoms.get(name))
+          domain = name => rDoms.get(name))
         s.conf.set(graft.plans.GraftRuntime.EnabledKey, "true")
         try {
           dl.createOrReplaceTempView("graft_aqp_oag_l")
@@ -3758,12 +3758,12 @@ ORDER BY query_id""")),
         val leR = localExact(s"$base/r.parquet", dr, Seq("k1", "k2", "b"))
         val lDoms = Seq("k1", "k2", "w").map(c => c -> leL.domainOf(c)).toMap
         val rDoms = Seq("k1", "k2", "b").map(c => c -> leR.domainOf(c)).toMap
-        graft.plans.GraftRuntime.registerWithDomain(s"$base/l.parquet",
+        graft.plans.GraftRuntime.register(s"$base/l.parquet",
           Set("k1", "k2", "w"), preds => leL.count(preds),
-          name => lDoms.get(name))
-        graft.plans.GraftRuntime.registerWithDomain(s"$base/r.parquet",
+          domain = name => lDoms.get(name))
+        graft.plans.GraftRuntime.register(s"$base/r.parquet",
           Set("k1", "k2", "b"), preds => leR.count(preds),
-          name => rDoms.get(name))
+          domain = name => rDoms.get(name))
         s.conf.set(graft.plans.GraftRuntime.EnabledKey, "true")
         try {
           dl.createOrReplaceTempView("graft_aqp_ocp_l")
@@ -3855,17 +3855,17 @@ ORDER BY query_id""")),
           Seq("c_nationkey", "c_acctbal", "c_mktsegment"))
         val leN = localExact(s"$d/nation.parquet", nat,
           Seq("n_nationkey", "n_regionkey", "n_name"))
-        graft.plans.GraftRuntime.registerWithDomain(
+        graft.plans.GraftRuntime.register(
           s"$d/customer.parquet",
           Set("c_nationkey", "c_acctbal", "c_mktsegment"),
           preds => leC.count(preds),
-          name => if (name == "c_nationkey") Some(cDom)
+          domain = name => if (name == "c_nationkey") Some(cDom)
             else if (name == "c_mktsegment") Some(cmDom) else None)
-        graft.plans.GraftRuntime.registerWithDomain(
+        graft.plans.GraftRuntime.register(
           s"$d/nation.parquet",
           Set("n_nationkey", "n_regionkey", "n_name"),
           preds => leN.count(preds),
-          name => if (name == "n_nationkey") Some(nDom) else None)
+          domain = name => if (name == "n_nationkey") Some(nDom) else None)
         s.conf.set(graft.plans.GraftRuntime.EnabledKey, "true")
         try {
           cust.createOrReplaceTempView("graft_aqp_exg_customer")
@@ -3949,15 +3949,15 @@ ORDER BY query_id, grp""")),
         val exact = texts.map { case (qid, sql) =>
           qid -> s.sql(sql).collect()(0).getLong(0)
         }.toMap
-        graft.plans.GraftRuntime.registerWithDomain(
+        graft.plans.GraftRuntime.register(
           s"$d/customer.parquet", Set("c_mktsegment", "c_nationkey"),
           ps.query,
-          name => if (name == "c_nationkey")
+          domain = name => if (name == "c_nationkey")
             Some(meta.column("c_nationkey").domain.toSeq) else None)
-        graft.plans.GraftRuntime.registerWithDomain(
+        graft.plans.GraftRuntime.register(
           s"$d/nation.parquet", Set("n_nationkey", "n_regionkey"),
           preds => leN.count(preds),
-          name => if (name == "n_nationkey") Some(nDom) else None)
+          domain = name => if (name == "n_nationkey") Some(nDom) else None)
         s.conf.set(graft.plans.GraftRuntime.EnabledKey, "true")
         try {
           val rows = texts.map { case (qid, sql) =>
@@ -4033,25 +4033,25 @@ ORDER BY query_id""")),
         val leC = localExact(s"$d/customer.parquet", cust,
           Seq("c_nationkey", "c_acctbal", "c_mktsegment", "c_custkey"))
         val leS = localExact(s"$d/supplier.parquet", supp, Seq("s_nationkey", "s_suppkey"))
-        graft.plans.GraftRuntime.registerWithDomain(
+        graft.plans.GraftRuntime.register(
           s"$d/region.parquet", Set("r_regionkey", "r_name"),
           preds => leR.count(preds),
-          name => if (name == "r_regionkey") Some(rDom) else None)
-        graft.plans.GraftRuntime.registerWithDomain(
+          domain = name => if (name == "r_regionkey") Some(rDom) else None)
+        graft.plans.GraftRuntime.register(
           s"$d/nation.parquet",
           Set("n_nationkey", "n_regionkey", "n_name"),
           preds => leN.count(preds),
-          name => if (name == "n_nationkey") Some(nkDom)
+          domain = name => if (name == "n_nationkey") Some(nkDom)
             else if (name == "n_regionkey") Some(nrDom) else None)
-        graft.plans.GraftRuntime.registerWithDomain(
+        graft.plans.GraftRuntime.register(
           s"$d/customer.parquet",
           Set("c_nationkey", "c_acctbal", "c_mktsegment", "c_custkey"),
           preds => leC.count(preds),
-          name => if (name == "c_nationkey") Some(cDom) else None)
-        graft.plans.GraftRuntime.registerWithDomain(
+          domain = name => if (name == "c_nationkey") Some(cDom) else None)
+        graft.plans.GraftRuntime.register(
           s"$d/supplier.parquet", Set("s_nationkey", "s_suppkey"),
           preds => leS.count(preds),
-          name => if (name == "s_nationkey") Some(sDom) else None)
+          domain = name => if (name == "s_nationkey") Some(sDom) else None)
         s.conf.set(graft.plans.GraftRuntime.EnabledKey, "true")
         try {
           reg.createOrReplaceTempView("graft_aqp_star_region")
@@ -4183,12 +4183,12 @@ ORDER BY query_id""")),
         val leR = localExact(s"$base/r.parquet", dr, Seq("k1", "k2", "b"))
         val dlDoms = Seq("k1", "k2").map(c => c -> leL.domainOf(c)).toMap
         val drDoms = Seq("k1", "k2").map(c => c -> leR.domainOf(c)).toMap
-        graft.plans.GraftRuntime.registerWithDomain(s"$base/l.parquet",
+        graft.plans.GraftRuntime.register(s"$base/l.parquet",
           Set("k1", "k2", "a"), preds => leL.count(preds),
-          name => dlDoms.get(name))
-        graft.plans.GraftRuntime.registerWithDomain(s"$base/r.parquet",
+          domain = name => dlDoms.get(name))
+        graft.plans.GraftRuntime.register(s"$base/r.parquet",
           Set("k1", "k2", "b"), preds => leR.count(preds),
-          name => drDoms.get(name))
+          domain = name => drDoms.get(name))
         s.conf.set(graft.plans.GraftRuntime.EnabledKey, "true")
         try {
           dl.createOrReplaceTempView("graft_aqp_jcomp_l")
@@ -4268,12 +4268,12 @@ ORDER BY query_id""")),
         val leR = localExact(s"$base/r.parquet", dr, Seq("k1", "b"))
         val lDoms = Seq("k1", "w").map(c => c -> leL.domainOf(c)).toMap
         val rDoms = Seq("k1").map(c => c -> leR.domainOf(c)).toMap
-        graft.plans.GraftRuntime.registerWithDomain(s"$base/l.parquet",
+        graft.plans.GraftRuntime.register(s"$base/l.parquet",
           Set("k1", "w"), preds => leL.count(preds),
-          name => lDoms.get(name))
-        graft.plans.GraftRuntime.registerWithDomain(s"$base/r.parquet",
+          domain = name => lDoms.get(name))
+        graft.plans.GraftRuntime.register(s"$base/r.parquet",
           Set("k1", "b"), preds => leR.count(preds),
-          name => rDoms.get(name))
+          domain = name => rDoms.get(name))
         s.conf.set(graft.plans.GraftRuntime.EnabledKey, "true")
         try {
           dl.createOrReplaceTempView("graft_aqp_jva_l")
@@ -4379,12 +4379,12 @@ ORDER BY query_id""")),
         val leR = localExact(s"$base/r.parquet", dr, Seq("k1", "b"))
         val lDoms = Seq("k1", "g", "w").map(c => c -> leL.domainOf(c)).toMap
         val rDoms = Seq("k1", "b").map(c => c -> leR.domainOf(c)).toMap
-        graft.plans.GraftRuntime.registerWithDomain(s"$base/l.parquet",
+        graft.plans.GraftRuntime.register(s"$base/l.parquet",
           Set("k1", "g", "w"), preds => leL.count(preds),
-          name => lDoms.get(name))
-        graft.plans.GraftRuntime.registerWithDomain(s"$base/r.parquet",
+          domain = name => lDoms.get(name))
+        graft.plans.GraftRuntime.register(s"$base/r.parquet",
           Set("k1", "b"), preds => leR.count(preds),
-          name => rDoms.get(name))
+          domain = name => rDoms.get(name))
         s.conf.set(graft.plans.GraftRuntime.EnabledKey, "true")
         try {
           dl.createOrReplaceTempView("graft_aqp_jga_l")
@@ -4493,18 +4493,18 @@ ORDER BY query_id, grp, metric""")),
           Seq("n_nationkey", "n_regionkey", "n_name"))
         val leC = localExact(s"$d/customer.parquet", cust,
           Seq("c_nationkey", "c_acctbal", "c_mktsegment"))
-        graft.plans.GraftRuntime.registerWithDomain(
+        graft.plans.GraftRuntime.register(
           s"$d/nation.parquet",
           Set("n_nationkey", "n_regionkey", "n_name"),
           preds => leN.count(preds),
-          name => if (name == "n_nationkey") Some(nkDom)
+          domain = name => if (name == "n_nationkey") Some(nkDom)
             else if (name == "n_name") Some(nnDom)
             else if (name == "n_regionkey") Some(nrDomJg) else None)
-        graft.plans.GraftRuntime.registerWithDomain(
+        graft.plans.GraftRuntime.register(
           s"$d/customer.parquet",
           Set("c_nationkey", "c_acctbal", "c_mktsegment"),
           preds => leC.count(preds),
-          name => if (name == "c_nationkey") Some(cDom)
+          domain = name => if (name == "c_nationkey") Some(cDom)
             else if (name == "c_mktsegment") Some(cmDom) else None)
         s.conf.set(graft.plans.GraftRuntime.EnabledKey, "true")
         try {
@@ -4617,19 +4617,19 @@ ORDER BY query_id, grp, grp2""")),
         val leO = localExact(s"$d/orders.parquet", ord, Seq("o_orderdate", "o_orderstatus"))
         val leS = localExact(s"$d/supplier.parquet", sup, Seq("s_suppkey"))
         val leN = localExact(s"$d/nation.parquet", nat, Seq("n_name"))
-        graft.plans.GraftRuntime.registerWithDomain(
+        graft.plans.GraftRuntime.register(
           s"$d/orders.parquet", Set("o_orderdate", "o_orderstatus"),
           preds => leO.count(preds),
-          name => if (name == "o_orderdate") Some(odDom)
+          domain = name => if (name == "o_orderdate") Some(odDom)
             else if (name == "o_orderstatus") Some(osDom) else None)
-        graft.plans.GraftRuntime.registerWithDomain(
+        graft.plans.GraftRuntime.register(
           s"$d/supplier.parquet", Set("s_suppkey"),
           preds => leS.count(preds),
-          name => if (name == "s_suppkey") Some(skDom) else None)
-        graft.plans.GraftRuntime.registerWithDomain(
+          domain = name => if (name == "s_suppkey") Some(skDom) else None)
+        graft.plans.GraftRuntime.register(
           s"$d/nation.parquet", Set("n_name"),
           preds => leN.count(preds),
-          name => if (name == "n_name") Some(nnDom) else None)
+          domain = name => if (name == "n_name") Some(nnDom) else None)
         s.conf.set(graft.plans.GraftRuntime.EnabledKey, "true")
         try {
           ord.createOrReplaceTempView("graft_aqp_ge_orders")
@@ -4774,15 +4774,15 @@ ORDER BY query_id, grp""")),
           "ON c.c_nationkey = n.n_nationkey GROUP BY n.n_regionkey"
         val exact: Map[Any, Long] = s.sql(sqlTxt).collect()
           .map(r => r.get(0) -> r.getLong(1)).toMap
-        graft.plans.GraftRuntime.registerWithDomain(
+        graft.plans.GraftRuntime.register(
           s"$d/customer.parquet", Set("c_mktsegment", "c_nationkey"),
           ps.query,
-          name => if (name == "c_nationkey")
+          domain = name => if (name == "c_nationkey")
             Some(meta.column("c_nationkey").domain.toSeq) else None)
-        graft.plans.GraftRuntime.registerWithDomain(
+        graft.plans.GraftRuntime.register(
           s"$d/nation.parquet", Set("n_nationkey", "n_regionkey"),
           preds => leN.count(preds),
-          name => if (name == "n_nationkey") Some(nkDom)
+          domain = name => if (name == "n_nationkey") Some(nkDom)
             else if (name == "n_regionkey") Some(nrDom) else None)
         s.conf.set(graft.plans.GraftRuntime.EnabledKey, "true")
         try {
@@ -4853,15 +4853,15 @@ ORDER BY grp""")),
             "c.c_nationkey AND n.n_regionkey >= 3)"))
         val exact: Map[String, Long] = texts.map { case (qid, sql) =>
           qid -> s.sql(sql).collect()(0).getLong(0) }.toMap
-        graft.plans.GraftRuntime.registerWithDomain(
+        graft.plans.GraftRuntime.register(
           s"$d/customer.parquet", Set("c_mktsegment", "c_nationkey"),
           ps.query,
-          name => if (name == "c_nationkey")
+          domain = name => if (name == "c_nationkey")
             Some(meta.column("c_nationkey").domain.toSeq) else None)
-        graft.plans.GraftRuntime.registerWithDomain(
+        graft.plans.GraftRuntime.register(
           s"$d/nation.parquet", Set("n_nationkey", "n_regionkey"),
           preds => leN.count(preds),
-          name => if (name == "n_nationkey") Some(nkDom) else None)
+          domain = name => if (name == "n_nationkey") Some(nkDom) else None)
         s.conf.set(graft.plans.GraftRuntime.EnabledKey, "true")
         try {
           val rows = texts.map { case (qid, sql) =>
@@ -4930,15 +4930,15 @@ ORDER BY query_id""")),
             "ON c.c_nationkey = n.n_nationkey"))
         val exact: Map[String, Long] = texts.map { case (qid, sql) =>
           qid -> s.sql(sql).collect()(0).getLong(0) }.toMap
-        graft.plans.GraftRuntime.registerWithDomain(
+        graft.plans.GraftRuntime.register(
           s"$d/customer.parquet", Set("c_mktsegment", "c_nationkey"),
           ps.query,
-          name => if (name == "c_nationkey")
+          domain = name => if (name == "c_nationkey")
             Some(meta.column("c_nationkey").domain.toSeq) else None)
-        graft.plans.GraftRuntime.registerWithDomain(
+        graft.plans.GraftRuntime.register(
           s"$d/nation.parquet", Set("n_nationkey", "n_regionkey"),
           preds => leN.count(preds),
-          name => if (name == "n_nationkey") Some(nkDom) else None)
+          domain = name => if (name == "n_nationkey") Some(nkDom) else None)
         s.conf.set(graft.plans.GraftRuntime.EnabledKey, "true")
         try {
           val rows = texts.map { case (qid, sql) =>
@@ -5007,10 +5007,10 @@ ORDER BY query_id""")),
           qid -> s.sql(sql).collect()(0).getLong(0) } :+
           ("ub3_grouped_total" ->
             s.sql(gSql).collect().map(_.getLong(1)).sum)).toMap
-        graft.plans.GraftRuntime.registerWithDomain(
+        graft.plans.GraftRuntime.register(
           s"$d/customer.parquet", Set("c_mktsegment", "c_nationkey"),
           ps.query,
-          name => if (name == "c_nationkey")
+          domain = name => if (name == "c_nationkey")
             Some(meta.column("c_nationkey").domain.toSeq) else None)
         s.conf.set(graft.plans.GraftRuntime.EnabledKey, "true")
         try {
@@ -5101,12 +5101,12 @@ ORDER BY query_id""")),
         val leR = localExact(s"$base/r.parquet", dr, Seq("k1", "a", "s"))
         val lDoms = Seq("dt", "k1", "w").map(c => c -> leL.domainOf(c)).toMap
         val rDoms = Seq("k1", "a", "s").map(c => c -> leR.domainOf(c)).toMap
-        graft.plans.GraftRuntime.registerWithDomain(s"$base/l.parquet",
+        graft.plans.GraftRuntime.register(s"$base/l.parquet",
           Set("dt", "k1", "w"), preds => leL.count(preds),
-          name => lDoms.get(name))
-        graft.plans.GraftRuntime.registerWithDomain(s"$base/r.parquet",
+          domain = name => lDoms.get(name))
+        graft.plans.GraftRuntime.register(s"$base/r.parquet",
           Set("k1", "a", "s"), preds => leR.count(preds),
-          name => rDoms.get(name))
+          domain = name => rDoms.get(name))
         s.conf.set(graft.plans.GraftRuntime.EnabledKey, "true")
         try {
           dl.createOrReplaceTempView("graft_aqp_jge_l")
@@ -5215,10 +5215,10 @@ ORDER BY query_id, grp, metric""")),
           "l_linestatus", "l_quantity").map(c => c ->
           cachedColumnMeta(s"$d/lineitem.parquet", liDf.select(c), c).domain.toSeq).toMap
         val le = localExact(s"$d/lineitem.parquet", liDf, modelCols)
-        graft.plans.GraftRuntime.registerWithDomain(
+        graft.plans.GraftRuntime.register(
           s"$d/lineitem.parquet", modelCols.toSet,
           preds => le.count(preds),
-          name => domains.get(name))
+          domain = name => domains.get(name))
         s.conf.set(graft.plans.GraftRuntime.EnabledKey, "true")
         try {
           liDf.createOrReplaceTempView("graft_aqp_hav_lineitem")
@@ -5286,10 +5286,10 @@ ORDER BY query_id, grp""")),
         // of the entry's time. Semantics unchanged — the cached value
         // is a pure function of the sfDir.
         val (dir, ev, doms, le) = gridWorkloadData(s, d)
-        graft.plans.GraftRuntime.registerWithDomain(dir,
+        graft.plans.GraftRuntime.register(dir,
           Set("g1", "g2", "w", "v"),
           preds => le.count(preds),
-          name => doms.get(name))
+          domain = name => doms.get(name))
         s.conf.set(graft.plans.GraftRuntime.EnabledKey, "true")
         try {
           ev.createOrReplaceTempView("graft_aqp_grid_events")
@@ -5357,9 +5357,9 @@ ORDER BY query_id, grp""")),
           "d1" -> Set("k1", "k2", "a", "s"),
           "d2" -> Set("k2", "b"),
           "d3" -> Set("m1", "c")).foreach { case (t, cols) =>
-          graft.plans.GraftRuntime.registerWithDomain(
+          graft.plans.GraftRuntime.register(
             s"$dir/$t.parquet", cols,
-            preds => les(t).count(preds), name => doms.get((t, name)))
+            preds => les(t).count(preds), domain = name => doms.get((t, name)))
         }
         s.conf.set(graft.plans.GraftRuntime.EnabledKey, "true")
         try {
@@ -12398,10 +12398,10 @@ WHERE l_quantity <= 24.0 AND l_discount >= 0.05 AND l_returnflag = 'R'""")),
         val domains: Map[String, Seq[Any]] = Seq("l_returnflag",
           "l_linestatus").map(c => c ->
           cachedColumnMeta(s"$d/lineitem.parquet", liDf.select(c), c).domain.toSeq).toMap
-        graft.plans.GraftRuntime.registerWithDomain(
+        graft.plans.GraftRuntime.register(
           s"$d/lineitem.parquet", modelCols.toSet,
           preds => liDf.filter(Pred.conj(preds)).count(),
-          name => domains.get(name))
+          domain = name => domains.get(name))
         s.conf.set(graft.plans.GraftRuntime.EnabledKey, "true")
         try {
           liDf.createOrReplaceTempView("graft_aqp_gb_lineitem")
@@ -12468,9 +12468,9 @@ ORDER BY query_id, grp""")),
         val exact = li(s, d).filter(col("l_quantity") <= 24.0)
           .groupBy(col("l_returnflag")).count()
           .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-        graft.plans.GraftRuntime.registerWithDomain(
+        graft.plans.GraftRuntime.register(
           s"$d/lineitem.parquet", modelCols.toSet, ps.query,
-          name => if (name == "l_returnflag")
+          domain = name => if (name == "l_returnflag")
             Some(meta.column("l_returnflag").domain.toSeq) else None)
         s.conf.set(graft.plans.GraftRuntime.EnabledKey, "true")
         try {
@@ -13297,10 +13297,10 @@ ORDER BY mode""")),
           graft.plans.GraftRuntime.restore(savedRegistry)
           val liEst: Seq[Pred] => Long =
             preds => ps.query(preds.filter(p => modelCols.contains(p.col)))
-          graft.plans.GraftRuntime.registerWithNdv(s"$d/lineitem.parquet",
+          graft.plans.GraftRuntime.register(s"$d/lineitem.parquet",
             modelCols.toSet ++ Set("l_suppkey"),
             liEst,
-            (c, preds) =>
+            keyStats = (c, preds) =>
               if (injectNdv && c == "l_suppkey")
                 Some(graft.plans.GraftRuntime.KeyStat(
                   math.min(skNdv, liEst(preds)),
@@ -14952,10 +14952,10 @@ FROM r ORDER BY stratum"""))
           graft.plans.GraftRuntime.restore(savedRegistry)
           val liEst: Seq[Pred] => Long =
             preds => ps.query(preds.filter(p => modelCols.contains(p.col)))
-          graft.plans.GraftRuntime.registerWithNdv(s"$d/lineitem.parquet",
+          graft.plans.GraftRuntime.register(s"$d/lineitem.parquet",
             modelCols.toSet ++ Set("l_orderkey", "l_suppkey"),
             liEst,
-            (c, preds) =>
+            keyStats = (c, preds) =>
               if (!injectNdv) None
               else if (c == "l_orderkey")
                 Some(ks(liOk,
@@ -14964,17 +14964,17 @@ FROM r ORDER BY stratum"""))
                 Some(ks(liSk,
                   math.min(liSk.nonNullDomain.length.toLong, liEst(preds))))
               else None)
-          graft.plans.GraftRuntime.registerWithNdv(s"$d/orders.parquet",
+          graft.plans.GraftRuntime.register(s"$d/orders.parquet",
             Set("o_orderkey"),
-            preds => maskNdv(oOk, preds), // near-unique key: rows = mass
+            preds => maskNdv(oOk, preds), keyStats = // near-unique key: rows = mass
             (c, preds) =>
               if (injectNdv && c == "o_orderkey")
                 Some(ks(oOk, maskNdv(oOk, preds)))
               else None)
-          graft.plans.GraftRuntime.registerWithNdv(s"$d/supplier.parquet",
+          graft.plans.GraftRuntime.register(s"$d/supplier.parquet",
             Set("s_suppkey"),
             preds => maskNdv(sSk, preds),
-            (c, preds) =>
+            keyStats = (c, preds) =>
               if (injectNdv && c == "s_suppkey")
                 Some(ks(sSk, maskNdv(sSk, preds)))
               else None)

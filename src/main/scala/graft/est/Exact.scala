@@ -1,7 +1,6 @@
 package graft.est
 
-import graft.core.{ColumnMeta, TableMeta}
-import graft.query.{Op, Pred}
+import graft.query.Pred
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 

@@ -1,6 +1,6 @@
 package graft.nn
 
-import graft.core.{ColumnMeta, Dictionary, TableMeta}
+import graft.core.{ColumnMeta, Dictionary}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 

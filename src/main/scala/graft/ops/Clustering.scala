@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -66,7 +66,6 @@ object Clustering {
     // skip the scan, and release the blocks before returning.
     val vecs = df.select(col(embCol)).rdd.map(_.getSeq[Float](0))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val k = init.length
     val dim = init(0).length
     var centroids = init.map(_.clone())
     var iter = 0

@@ -66,8 +66,8 @@ class ApproxCountGoldenSpec extends AnyFunSuite with BeforeAndAfterAll {
       val cols = back.columns.toSeq
       val le = new graft.Queries.LocalExact(back, cols)
       val doms = cols.map(c => c -> le.domainOf(c)).toMap
-      GraftRuntime.registerWithDomain(s"/$name.parquet", cols.toSet,
-        p => le.count(p), c => doms.get(c))
+      GraftRuntime.register(s"/$name.parquet", cols.toSet,
+        p => le.count(p), domain = c => doms.get(c))
     }
 
   private def date(s: String) = java.sql.Date.valueOf(s)

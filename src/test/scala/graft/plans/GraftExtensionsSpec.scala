@@ -172,10 +172,10 @@ class GraftExtensionsSpec extends AnyFunSuite with BeforeAndAfterAll {
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     val domain = graft.core.Dictionary
       .columnMeta(li.select("l_returnflag"), "l_returnflag").domain.toSeq
-    GraftRuntime.registerWithDomain("lineitem.parquet",
+    GraftRuntime.register("lineitem.parquet",
       Set("l_quantity", "l_returnflag"),
       preds => li.filter(Pred.conj(preds)).count(),
-      c => if (c == "l_returnflag") Some(domain) else None)
+      domain = c => if (c == "l_returnflag") Some(domain) else None)
     spark.conf.set(GraftRuntime.EnabledKey, "true")
     val df = spark.sql(q)
     val plan = df.queryExecution.optimizedPlan.toString
@@ -206,10 +206,10 @@ class GraftExtensionsSpec extends AnyFunSuite with BeforeAndAfterAll {
     df.createOrReplaceTempView("grouped_nulls")
     val meta = graft.core.Dictionary.columnMeta(df.select("k"), "k")
     assert(meta.hasNull && meta.domain(0) == null)
-    GraftRuntime.registerWithDomain("grouped_nulls.parquet",
+    GraftRuntime.register("grouped_nulls.parquet",
       Set("k", "v"),
       preds => df.filter(Pred.conj(preds)).count(),
-      c => if (c == "k") Some(meta.domain.toSeq) else None)
+      domain = c => if (c == "k") Some(meta.domain.toSeq) else None)
     spark.conf.set(GraftRuntime.EnabledKey, "true")
     val out = spark.sql(
       "SELECT k, count(*) AS n FROM grouped_nulls GROUP BY k")
@@ -237,10 +237,10 @@ class GraftExtensionsSpec extends AnyFunSuite with BeforeAndAfterAll {
     df.createOrReplaceTempView("cnt_nulls")
     val meta = graft.core.Dictionary.columnMeta(df.select("k"), "k")
     assert(meta.hasNull && meta.domain(0) == null)
-    GraftRuntime.registerWithDomain("cnt_nulls.parquet",
+    GraftRuntime.register("cnt_nulls.parquet",
       Set("k", "v"),
       preds => df.filter(Pred.conj(preds)).count(),
-      c => if (c == "k") Some(meta.domain.toSeq) else None)
+      domain = c => if (c == "k") Some(meta.domain.toSeq) else None)
     spark.conf.set(GraftRuntime.EnabledKey, "true")
     def run(q: String): Long = {
       val out = spark.sql(q)
@@ -292,9 +292,9 @@ class GraftExtensionsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val vDom = graft.core.Dictionary.columnMeta(df.select("v"), "v")
       .domain.toSeq
     assert(wDom.head == null) // null slot first, ascending after
-    GraftRuntime.registerWithDomain("vagg.parquet", Set("k", "w", "v"),
+    GraftRuntime.register("vagg.parquet", Set("k", "w", "v"),
       preds => df.filter(Pred.conj(preds)).count(),
-      c => if (c == "w") Some(wDom)
+      domain = c => if (c == "w") Some(wDom)
            else if (c == "v") Some(vDom) else None)
     spark.conf.set(GraftRuntime.EnabledKey, "true")
     def run(q: String): org.apache.spark.sql.Row = {
@@ -359,9 +359,9 @@ class GraftExtensionsSpec extends AnyFunSuite with BeforeAndAfterAll {
     df.createOrReplaceTempView("fres")
     val gDom = graft.core.Dictionary.columnMeta(df.select("g"), "g")
       .domain.toSeq
-    GraftRuntime.registerWithDomain("fres.parquet", Set("g", "x", "w"),
+    GraftRuntime.register("fres.parquet", Set("g", "x", "w"),
       preds => df.filter(Pred.conj(preds)).count(),
-      c => if (c == "g") Some(gDom) else None)
+      domain = c => if (c == "g") Some(gDom) else None)
     spark.conf.set(GraftRuntime.EnabledKey, "true")
     // derived alias shadowing the registered w: abs(x) > 2 holds once
     // per group; probing the registered w would answer (a->0, b->2)
@@ -426,14 +426,14 @@ class GraftExtensionsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val rDoms = Seq("k", "b").map(c => c -> dom(dr, c)).toMap
     // the outer factorization probes the UNFILTERED side (estL(Nil))
     // for the unmatched terms — the closure must accept empty preds
-    GraftRuntime.registerWithDomain("l.parquet", Set("k", "w"),
+    GraftRuntime.register("l.parquet", Set("k", "w"),
       preds => (if (preds.isEmpty) dl
         else dl.filter(Pred.conj(preds))).count(),
-      c => lDoms.get(c))
-    GraftRuntime.registerWithDomain("r.parquet", Set("k", "b"),
+      domain = c => lDoms.get(c))
+    GraftRuntime.register("r.parquet", Set("k", "b"),
       preds => (if (preds.isEmpty) dr
         else dr.filter(Pred.conj(preds))).count(),
-      c => rDoms.get(c))
+      domain = c => rDoms.get(c))
     spark.conf.set(GraftRuntime.EnabledKey, "true")
     def run(q: String): org.apache.spark.sql.DataFrame = {
       val out = spark.sql(q)
@@ -508,15 +508,15 @@ class GraftExtensionsSpec extends AnyFunSuite with BeforeAndAfterAll {
     def dom(df: org.apache.spark.sql.DataFrame, c: String) =
       graft.core.Dictionary.columnMeta(df.select(c), c).domain.toSeq
     def registerAll(): Unit = {
-      GraftRuntime.registerWithDomain("f.parquet", Set("k1", "k2", "w"),
+      GraftRuntime.register("f.parquet", Set("k1", "k2", "w"),
         p => (if (p.isEmpty) fD else fD.filter(Pred.conj(p))).count(),
-        c => Some(dom(fD, c)))
-      GraftRuntime.registerWithDomain("d.parquet", Set("k1", "a"),
+        domain = c => Some(dom(fD, c)))
+      GraftRuntime.register("d.parquet", Set("k1", "a"),
         p => (if (p.isEmpty) dD else dD.filter(Pred.conj(p))).count(),
-        c => Some(dom(dD, c)))
-      GraftRuntime.registerWithDomain("r.parquet", Set("k2", "b"),
+        domain = c => Some(dom(dD, c)))
+      GraftRuntime.register("r.parquet", Set("k2", "b"),
         p => (if (p.isEmpty) rD else rD.filter(Pred.conj(p))).count(),
-        c => Some(dom(rD, c)))
+        domain = c => Some(dom(rD, c)))
     }
     val queries = Seq(
       // EXISTS pushed below the inner join (the semi join becomes f's
@@ -572,9 +572,9 @@ class GraftExtensionsSpec extends AnyFunSuite with BeforeAndAfterAll {
       .trim.startsWith("LocalRelation"))
     GraftRuntime.clear()
     // oversized domain -> fall through
-    GraftRuntime.registerWithDomain("lineitem.parquet",
+    GraftRuntime.register("lineitem.parquet",
       Set("l_quantity", "l_returnflag"),
-      _ => 13L, c => Some((1 to 5000).map(i => s"v$i")))
+      _ => 13L, domain = c => Some((1 to 5000).map(i => s"v$i")))
     assert(!spark.sql(q).queryExecution.optimizedPlan.toString
       .trim.startsWith("LocalRelation"))
     // two grouping columns: the COMBO GRID (5000 x 5000) is over the
@@ -606,10 +606,10 @@ class GraftExtensionsSpec extends AnyFunSuite with BeforeAndAfterAll {
     def dom(c: String) =
       graft.core.Dictionary.columnMeta(df.select(c), c).domain.toSeq
     val doms = Seq("k", "m", "w", "v").map(c => c -> dom(c)).toMap
-    GraftRuntime.registerWithDomain("grid.parquet",
+    GraftRuntime.register("grid.parquet",
       Set("k", "m", "w", "v"),
       preds => df.filter(Pred.conj(preds)).count(),
-      c => doms.get(c))
+      domain = c => doms.get(c))
     def both(q: String): (Seq[org.apache.spark.sql.Row],
         Seq[org.apache.spark.sql.Row]) = {
       spark.conf.set(GraftRuntime.EnabledKey, "true")
@@ -650,9 +650,9 @@ class GraftExtensionsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // Long-sum overflow in a grouped cell -> the WHOLE rewrite falls
     // through (no mixed probe/scan output)
     GraftRuntime.clear()
-    GraftRuntime.registerWithDomain("grid.parquet",
+    GraftRuntime.register("grid.parquet",
       Set("k", "m", "w", "v"),
-      _ => Long.MaxValue / 2, c => doms.get(c))
+      _ => Long.MaxValue / 2, domain = c => doms.get(c))
     spark.conf.set(GraftRuntime.EnabledKey, "true")
     val of = spark.sql("SELECT k, sum(v) AS sv FROM grid GROUP BY k")
     assert(!of.queryExecution.optimizedPlan.toString
@@ -683,12 +683,12 @@ class GraftExtensionsSpec extends AnyFunSuite with BeforeAndAfterAll {
     def dom(df: org.apache.spark.sql.DataFrame, c: String) =
       graft.core.Dictionary.columnMeta(df.select(c), c).domain.toSeq
     val domA = dom(da, "k"); val domB = dom(db, "k")
-    GraftRuntime.registerWithDomain("ja.parquet", Set("k", "x"),
+    GraftRuntime.register("ja.parquet", Set("k", "x"),
       preds => da.filter(Pred.conj(preds)).count(),
-      c => if (c == "k") Some(domA) else None)
-    GraftRuntime.registerWithDomain("jb.parquet", Set("k", "y"),
+      domain = c => if (c == "k") Some(domA) else None)
+    GraftRuntime.register("jb.parquet", Set("k", "y"),
       preds => db.filter(Pred.conj(preds)).count(),
-      c => if (c == "k") Some(domB) else None)
+      domain = c => if (c == "k") Some(domB) else None)
     def both(q: String): (Long, Long) = {
       spark.conf.set(GraftRuntime.EnabledKey, "true")
       val rewritten = spark.sql(q)
@@ -715,14 +715,14 @@ class GraftExtensionsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // terms; the estimator must answer the EMPTY conjunction for the
     // n_side(ALL) term — re-register with that shape)
     GraftRuntime.clear()
-    GraftRuntime.registerWithDomain("ja.parquet", Set("k", "x"),
+    GraftRuntime.register("ja.parquet", Set("k", "x"),
       preds => (if (preds.isEmpty) da
         else da.filter(Pred.conj(preds))).count(),
-      c => if (c == "k") Some(domA) else None)
-    GraftRuntime.registerWithDomain("jb.parquet", Set("k", "y"),
+      domain = c => if (c == "k") Some(domA) else None)
+    GraftRuntime.register("jb.parquet", Set("k", "y"),
       preds => (if (preds.isEmpty) db
         else db.filter(Pred.conj(preds))).count(),
-      c => if (c == "k") Some(domB) else None)
+      domain = c => if (c == "k") Some(domB) else None)
     spark.conf.set(GraftRuntime.EnabledKey, "false")
     val loExact = spark.sql(
       "SELECT count(*) FROM ja LEFT JOIN jb ON ja.k = jb.k")
@@ -750,9 +750,9 @@ class GraftExtensionsSpec extends AnyFunSuite with BeforeAndAfterAll {
       .trim.startsWith("LocalRelation"))
     // one side unregistered -> fall through
     GraftRuntime.clear()
-    GraftRuntime.registerWithDomain("ja.parquet", Set("k", "x"),
+    GraftRuntime.register("ja.parquet", Set("k", "x"),
       preds => da.filter(Pred.conj(preds)).count(),
-      c => if (c == "k") Some(domA) else None)
+      domain = c => if (c == "k") Some(domA) else None)
     val ur = spark.sql("SELECT count(*) FROM ja JOIN jb ON ja.k = jb.k")
     assert(!ur.queryExecution.optimizedPlan.toString
       .trim.startsWith("LocalRelation"))
@@ -780,10 +780,10 @@ class GraftExtensionsSpec extends AnyFunSuite with BeforeAndAfterAll {
     def dom(c: String) =
       graft.core.Dictionary.columnMeta(df.select(c), c).domain.toSeq
     val doms = Seq("d", "t", "k", "x").map(c => c -> dom(c)).toMap
-    GraftRuntime.registerWithDomain("dg.parquet",
+    GraftRuntime.register("dg.parquet",
       Set("d", "t", "k", "x"),
       preds => df.filter(Pred.conj(preds)).count(),
-      c => doms.get(c))
+      domain = c => doms.get(c))
     def both(q: String): (Seq[org.apache.spark.sql.Row],
         Seq[org.apache.spark.sql.Row]) = {
       spark.conf.set(GraftRuntime.EnabledKey, "true")
@@ -868,17 +868,17 @@ class GraftExtensionsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // it only once per DISTINCT incident-edge value (memoized), i.e.
     // <= |k-domain| probes, not once per grid cell.
     var naProbes = 0
-    GraftRuntime.registerWithDomain("na.parquet", Set("k", "x"),
+    GraftRuntime.register("na.parquet", Set("k", "x"),
       preds => { naProbes += 1; da.filter(Pred.conj(preds)).count() },
-      c => if (c == "k") Some(dom(da, "k"))
+      domain = c => if (c == "k") Some(dom(da, "k"))
            else if (c == "x") Some(dom(da, "x")) else None)
-    GraftRuntime.registerWithDomain("nb.parquet", Set("k", "m"),
+    GraftRuntime.register("nb.parquet", Set("k", "m"),
       preds => db.filter(Pred.conj(preds)).count(),
-      c => if (c == "k") Some(dom(db, "k"))
+      domain = c => if (c == "k") Some(dom(db, "k"))
            else if (c == "m") Some(dom(db, "m")) else None)
-    GraftRuntime.registerWithDomain("nc.parquet", Set("m", "z"),
+    GraftRuntime.register("nc.parquet", Set("m", "z"),
       preds => dc.filter(Pred.conj(preds)).count(),
-      c => if (c == "m") Some(dom(dc, "m"))
+      domain = c => if (c == "m") Some(dom(dc, "m"))
            else if (c == "z") Some(dom(dc, "z")) else None)
     def both(q: String): (Seq[org.apache.spark.sql.Row],
         Seq[org.apache.spark.sql.Row]) = {
@@ -1043,10 +1043,10 @@ class GraftExtensionsSpec extends AnyFunSuite with BeforeAndAfterAll {
       def dom(c: String) =
         graft.core.Dictionary.columnMeta(back.select(c), c).domain.toSeq
       val doms = cols.map(c => c -> dom(c)).toMap
-      GraftRuntime.registerWithDomain(s"${prefix}_$name.parquet",
+      GraftRuntime.register(s"${prefix}_$name.parquet",
         cols.toSet,
         p => (if (p.isEmpty) back else back.filter(Pred.conj(p))).count(),
-        c => doms.get(c))
+        domain = c => doms.get(c))
     }
     try body finally {
       spark.conf.set(GraftRuntime.EnabledKey, "false")

@@ -123,16 +123,16 @@ class JoinReorderSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private def withNdvEstimates(ndvA: Long, ndvB: Long)(body: => Unit): Unit = {
     val saved = GraftRuntime.snapshot()
-    GraftRuntime.registerWithNdv("reord_facts", Set("fa"), _ => 20000L,
-      (c, _) => c match {
+    GraftRuntime.register("reord_facts", Set("fa"), _ => 20000L,
+      keyStats = (c, _) => c match {
         case "ka" => ks(50L, 49L)
         case "kb" => ks(40L, 39L)
         case _ => None
       })
-    GraftRuntime.registerWithNdv("reord_dima", Set("da"), _ => 5000L,
-      (c, _) => if (c == "dak") ks(ndvA, 49L) else None)
-    GraftRuntime.registerWithNdv("reord_dimb", Set("db"), _ => 5000L,
-      (c, _) => if (c == "dbk") ks(ndvB, 39L) else None)
+    GraftRuntime.register("reord_dima", Set("da"), _ => 5000L,
+      keyStats = (c, _) => if (c == "dak") ks(ndvA, 49L) else None)
+    GraftRuntime.register("reord_dimb", Set("db"), _ => 5000L,
+      keyStats = (c, _) => if (c == "dbk") ks(ndvB, 39L) else None)
     spark.conf.set(EstimatedStatsRule.EnabledKey, "true")
     try body
     finally {
