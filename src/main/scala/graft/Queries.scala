@@ -2443,10 +2443,10 @@ SELECT * FROM (
 ORDER BY query_id""")),
     // OUTER joins inside N-table join trees (r19, VERDICT r18 #2):
     // `fact LEFT JOIN dim1 JOIN dim2` — the outer join composes as a
-    // TWO-SIDED join-tree leaf (outerLeaf): its modeled columns are
+    // TWO-SIDED join-tree leaf (outerSource's leaf view): its modeled columns are
     // the union of both sides' registrations (shared names excluded —
     // by-name routing must stay unambiguous), its estimator routes
-    // conjuncts per side through outerEstFn, its cost multiplies
+    // conjuncts per side through outerEstimate, its cost multiplies
     // probeCost into every composed budget, and a non-preserved
     // side's domains gain the synthetic null slot so inner edges skip
     // extension rows (NULL never equi-matches) and grouping keys
@@ -3022,10 +3022,10 @@ ORDER BY query_id, grp, metric""")),
     // EXISTS-filtered sides of OUTER joins (r19, VERDICT r18 #4 — the
     // composition PLANS r18 admitted was untested): a WHERE EXISTS on
     // the PRESERVED side pushes below the outer join
-    // (PushDownLeftSemiAntiJoin) and rides outerSpec's registeredLeaf
+    // (PushDownLeftSemiAntiJoin) and rides outerSpec's leaf resolution
     // as a semi leaf; an EXISTS INSIDE the non-preserved side's
     // subselect becomes that side's semi leaf the same way. Grouped
-    // forms compose through rewriteGroupedOuter unchanged. Exact
+    // forms compose through the same aggregate grid. Exact
     // registrations → lossless; scan-free plans require()d; DuckDB
     // runs the identical texts.
     Entry("q_approx_outer_exists",
@@ -3471,7 +3471,7 @@ ORDER BY query_id""")),
     // non-preserved-side grouping key gains the NULL group (synthetic
     // when its domain has no null slot) and right-column counts ignore
     // extension rows — exactly SQL's semantics, realized by the
-    // outerEstFn IS NULL gate. Exact registrations → lossless;
+    // outerEstimate IS NULL gate. Exact registrations → lossless;
     // scan-free plans require()d; DuckDB runs the identical texts.
     Entry("q_approx_outer_groupby",
       (s, d) => {
@@ -3989,7 +3989,7 @@ SELECT 'b2_bare', CAST(count(*) AS BIGINT), true
 FROM customer c JOIN nation n ON c.c_nationkey = n.n_nationkey
 ORDER BY query_id""")),
     // N-table join chains and stars from single-table registrations
-    // (r17; VERDICT r16 #2): rewriteJoinCount generalized from exactly
+    // (r17; VERDICT r16 #2): the join count generalized from exactly
     // two tables to flattened inner equi-join trees — the per-key
     // factorization composes as Σ over edge-value assignments of
     // ∏ per-leaf estimates (each leaf probed with its incident edge
@@ -4978,7 +4978,7 @@ ORDER BY query_id""")),
     // UNION ALL whose branches carry the LEARNED customer estimator —
     // each branch's pushed WHERE estimated by the model, the union
     // answering as the sum of per-branch learned estimates
-    // (rewriteUnionCount), with the exact count inside the oracle hash
+    // (the union source), with the exact count inside the oracle hash
     // and a q-error ≤ 2 band — the q_approx_exists_bounds discipline.
     // The grouped leg sums the per-group learned rows back to a total
     // (per-group bands would gate model variance, not the rewrite).

@@ -274,8 +274,8 @@ case class ApproxCountRule(spark: SparkSession) extends Rule[LogicalPlan] {
     *   - `derivedKeys`: whether derived GROUP BY expressions may probe
     *     it (a union's merged slots map no derived preimages);
     *   - `countNeedsDomain`: a lone ungrouped `count(c)` also needs c's
-    *     domain under the cap, charged per domain value (inner trees —
-    *     kept so those shapes fire exactly where they always did). */
+    *     domain under the cap and is charged per domain value (inner
+    *     trees; `ApproxCountGoldenSpec` pins where that shape fires). */
   private case class Source(
       ownerOf: AttributeReference => Option[Int],
       count: Seq[Cond] => Long,
