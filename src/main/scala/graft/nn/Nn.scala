@@ -24,6 +24,14 @@ package graft.nn
   * after the join, so the trained bits are those of a step that forks
   * layer by layer.
   *
+  * A masked layer (MADE's) visits only the (input, output) pairs its mask
+  * connects, through a [[MaskPlan]] derived from the mask: output groups
+  * with one connected-input set feed the forward and the weight
+  * gradients, input groups with one connected-output set the input
+  * gradients. The skipped terms would each have added x·0 = ±0 to a
+  * partial sum that is never −0, so the bits are those of the dense
+  * kernels; about half of the benchmark ResMADE's multiply-adds go.
+  *
   * Scale posture: the 100 TB path never moves raw data to the driver —
   * only encoded minibatches (bounded) flow in and model weights (MBs)
   * flow out; see graft.nn.Trainer.
@@ -71,7 +79,10 @@ private[nn] object Nn {
     * Only worth forking when there's real work (≥ ~1M MACs) to amortize
     * it; past that, one chunk per core. The chunk-major training steps
     * take their range count from their dense layers' chunks, so their
-    * trained bits depend on this function. */
+    * trained bits depend on this function. A masked layer is counted at
+    * its dense `nIn·nOut` by design, although its plan does about half
+    * that work: the count decides where parameter gradients split, and so
+    * the trained bits. */
   def chunks(batch: Int, workPerRow: Int): Int = {
     val totalWork = batch.toLong * workPerRow
     if (totalWork < (1L << 20) || batch < 64) 1
@@ -233,40 +244,45 @@ private[nn] object Arena {
   *
   * `preserveWeights = true` switches to the reference's TRAINING
   * semantics (`F.linear(x, mask * weight)`, made.py:24-28): the mask is
-  * multiplied in at forward/backward time and the underlying weights are
-  * never zeroed — required for multi-mask cycling (made.py:277-311),
-  * where an entry masked under one connectivity pattern is live under
-  * another and its weight must survive the switch.
+  * applied at forward/backward time and the underlying weights are never
+  * zeroed — required for multi-mask cycling (made.py:277-311), where an
+  * entry masked under one connectivity pattern is live under another and
+  * its weight must survive the switch.
+  *
+  * A masked layer runs on its [[MaskPlan]], built from the mask on first
+  * use after every `setMaskInOut`: its forward and backward visit only
+  * the connected (input, output) pairs, and read the stored weight there
+  * (the effective weight `1·w` is `w`). The skipped terms are exactly the
+  * ones whose effective weight is a mask zero, so each would have added
+  * x·0 = ±0 (finite x) to a partial sum that starts at the +0 bias or
+  * buffer and so is never −0, leaving it unchanged: the plan kernels give
+  * the bits of the dense ones, in the same summation order. Masked
+  * weight-gradient entries read 0 after every backward, as before. The
+  * dense kernels (`mask = null`) are unchanged.
   */
 final class MaskedLinear(val nIn: Int, val nOut: Int,
     val preserveWeights: Boolean = false) extends Layer {
   val weight = new Param(new Array[Float](nIn * nOut))
   val bias = new Param(new Array[Float](nOut))
-  /** null = dense. Layout [nIn, nOut], 1f = connected. */
+  /** null = dense. Layout [nIn, nOut], 1f = connected. Replace it through
+    * `setMaskInOut` rather than editing it in place: the plan follows the
+    * array, not its contents. */
   var mask: Array[Float] = null
-  // Materialized M ⊙ W for the preserveWeights path: refreshed once per
-  // forward/backward CALL (O(nIn·nOut), amortized over the O(batch·
-  // nIn·nOut) loop it feeds) so the hot inner loops stay dense instead
-  // of paying a per-element mask multiply. Weights only change between
-  // calls (optimizer steps), never during one, so per-call refresh is
-  // always current. Derived scratch, so @transient (a broadcast model
-  // must not ship a second copy of every weight matrix). Thread safety:
-  // each call writes through a LOCAL reference and returns it, so the
-  // caller always sees an array it fully wrote itself; concurrent calls
-  // at most allocate redundantly or overwrite with identical values.
-  @transient private var wEff: Array[Float] = null
+  // Derived from `mask` (the plan records the array it was built from),
+  // so @transient and rebuilt lazily: a broadcast model ships no copy.
+  // Concurrent callers at most build identical plans redundantly.
+  @transient private var planCache: MaskPlan = null
 
-  private def effectiveW(): Array[Float] =
-    if (!preserveWeights || mask == null) weight.data
+  /** The plan of the current mask; null for a dense layer. */
+  private[nn] def plan: MaskPlan = {
+    val m = mask
+    if (m == null) null
     else {
-      val w = weight.data
-      var e = wEff
-      if (e == null || e.length != w.length) e = new Array[Float](w.length)
-      var k = 0
-      while (k < e.length) { e(k) = w(k) * mask(k); k += 1 }
-      wEff = e
-      e
+      var p = planCache
+      if (p == null || (p.mask ne m)) { p = MaskPlan(m, nIn, nOut); planCache = p }
+      p
     }
+  }
 
   /** Set connectivity from an [nIn, nOut] boolean matrix (the orientation
     * update_masks builds, made.py:339-340). */
@@ -310,15 +326,15 @@ final class MaskedLinear(val nIn: Int, val nOut: Int,
     applyMask()
   }
 
-  /** Rows `ra` and `rb` (`rb == ra` for an odd last row), register-tiled:
-    * 2 rows × 8 outputs stay in 16 local accumulators for the whole walk
-    * over `i`, so each weight load feeds two MACs and no partial sum
-    * goes back to memory. Every output is still
-    * `b_o + x_0·w_0o + x_1·w_1o + …` added in ascending `i`, the order
-    * of a one-row dot-product loop, so the bits are the same as that
-    * loop's. Zero inputs (one-hot encodings, ReLU outputs, masked
-    * weights) need no skip branch: adding x·w = ±0 leaves a partial sum
-    * unchanged, since one that starts at the bias is never −0. */
+  /** Rows `ra` and `rb` (`rb == ra` for an odd last row) of the dense
+    * forward, register-tiled: 2 rows × 8 outputs stay in 16 local
+    * accumulators for the whole walk over `i`, so each weight load feeds
+    * two MACs and no partial sum goes back to memory. Every output is
+    * still `b_o + x_0·w_0o + x_1·w_1o + …` added in ascending `i`, the
+    * order of a one-row dot-product loop, so the bits are the same as that
+    * loop's. Zero inputs (one-hot encodings, ReLU outputs) need no skip
+    * branch: adding x·w = ±0 leaves a partial sum unchanged, since one
+    * that starts at the bias is never −0. */
   private def forwardRows(x: Array[Float], w: Array[Float], out: Array[Float],
       ra: Int, rb: Int): Unit = {
     val bd = bias.data
@@ -375,38 +391,54 @@ final class MaskedLinear(val nIn: Int, val nOut: Int,
 
   /** [[step]] taking its output and dL/dinput buffers from `arena`. */
   private[nn] def step(x: Array[Float], batch: Int, arena: Arena): RowStep = {
-    val w = effectiveW()
-    new RowStep(arena.floats(batch * nOut)) {
+    val p = plan
+    val w = weight.data
+    val wp = if (p == null || batch < MaskPlan.PackRows) null else p.packForward(w)
+    val out = arena.floats(batch * nOut)
+    def rows(ra: Int, rb: Int): Unit =
+      if (p == null) forwardRows(x, w, out, ra, rb)
+      else if (wp == null) p.forwardRowsInPlace(x, w, bias.data, out, ra, rb)
+      else p.forwardRows(x, wp, bias.data, out, ra, rb)
+    new RowStep(out) {
       def forward(r0: Int, r1: Int): Unit = {
         var r = r0
-        while (r + 1 < r1) { forwardRows(x, w, out, r, r + 1); r += 2 }
-        if (r < r1) forwardRows(x, w, out, r, r)
+        while (r + 1 < r1) { rows(r, r + 1); r += 2 }
+        if (r < r1) rows(r, r)
       }
       // The input gradients `need` leaves out must read 0: a fresh buffer.
       def backward(gOut: Array[Float], chunks: Int, need: Array[Boolean]): RowGrad =
-        backwardStep(x, w, gOut, need, batch, chunks,
+        backwardStep(x, w, p, gOut, need, batch, chunks,
           if (need == null) arena.floats(batch * nIn) else new Array[Float](batch * nIn))
     }
   }
 
   /** The backward of a step over `batch` rows that the caller splits into
     * `chunks` ranges. Parameter gradients keep the summation order of
-    * this layer's own fork (`Nn.chunks` at its size), whatever `chunks`
-    * is: a layer that forks sums each range into its own buffer and
-    * `finish` adds the buffers in range order; one that does not adds
+    * this layer's own fork (`Nn.chunks` at its dense size), whatever
+    * `chunks` is: a layer that forks sums each range into its own buffer
+    * and `finish` adds the buffers in range order; one that does not adds
     * every row in row order, inside its one range or, when the caller
     * splits the rows anyway, in `finish` from the full-batch buffers. */
-  private def backwardStep(x: Array[Float], w: Array[Float], g: Array[Float],
-      need: Array[Boolean], batch: Int, chunks: Int, gxBuf: Array[Float]): RowGrad = {
+  private def backwardStep(x: Array[Float], w: Array[Float], p: MaskPlan,
+      g: Array[Float], need: Array[Boolean], batch: Int, chunks: Int,
+      gxBuf: Array[Float]): RowGrad = {
     val own = Nn.chunks(batch, nIn * nOut)
     require(own == 1 || own == chunks, s"$own row ranges of a layer vs $chunks of its step")
     val gws = if (own > 1) Array.fill(own)(new Array[Float](weight.grad.length)) else null
     val gbs = if (own > 1) Array.fill(own)(new Array[Float](bias.grad.length)) else null
+    val wq = if (p == null) null else p.packInput(w)
+    def range(gx: Array[Float], gw: Array[Float], gb: Array[Float], r0: Int, r1: Int): Unit =
+      if (p == null) backwardRange(x, g, w, gx, need, gw, gb, r0, r1)
+      else {
+        if (gb != null) MaskPlan.biasGrads(g, gb, nOut, r0, r1)
+        if (gw != null) p.weightGrads(x, g, gw, r0, r1)
+        if (gx != null) p.inputGrads(g, wq, gx, need, r0, r1)
+      }
     new RowGrad(gxBuf) {
       def rows(c: Int, r0: Int, r1: Int): Unit =
-        if (own > 1) backwardRange(x, g, w, gx, need, gws(c), gbs(c), r0, r1)
-        else if (chunks == 1) backwardRange(x, g, w, gx, need, weight.grad, bias.grad, r0, r1)
-        else backwardRange(x, g, w, gx, need, null, null, r0, r1)
+        if (own > 1) range(gx, gws(c), gbs(c), r0, r1)
+        else if (chunks == 1) range(gx, weight.grad, bias.grad, r0, r1)
+        else range(gx, null, null, r0, r1)
       override def finish(): Unit = {
         val gw = weight.grad; val gb = bias.grad
         if (own > 1) {
@@ -419,7 +451,7 @@ final class MaskedLinear(val nIn: Int, val nOut: Int,
             while (k < gb.length) { gb(k) += lb(k); k += 1 }
             c += 1
           }
-        } else if (chunks > 1) backwardRange(x, g, w, null, null, gw, gb, 0, batch)
+        } else if (chunks > 1) range(null, gw, gb, 0, batch)
         // Mask the weight gradient so Adam's moments never see masked
         // entries (equivalent to differentiating through W_eff = M ⊙ W).
         if (mask != null) {
@@ -430,13 +462,13 @@ final class MaskedLinear(val nIn: Int, val nOut: Int,
     }
   }
 
-  /** Rows `[r0, r1)`: bias and weight grads accumulate into `gb`/`gw` in
-    * row order; each input grad is `Σ_o g_o·w_io` in ascending `o`.
-    * `gw == null` computes the input grads only, `gx == null` the
-    * parameter grads only, and `need` (null = all) limits the input
-    * grads to its entries. A zero input adds nothing to `gw`: a weight
-    * grad that starts at +0 is never −0, so adding x·g = ±0 (finite g)
-    * leaves its bits as they are. */
+  /** Rows `[r0, r1)` of the dense backward: bias and weight grads
+    * accumulate into `gb`/`gw` in row order; each input grad is
+    * `Σ_o g_o·w_io` in ascending `o`. `gw == null` computes the input
+    * grads only, `gx == null` the parameter grads only, and `need` (null =
+    * all) limits the input grads to its entries. A zero input adds
+    * nothing to `gw`: a weight grad that starts at +0 is never −0, so
+    * adding x·g = ±0 (finite g) leaves its bits as they are. */
   private def backwardRange(x: Array[Float], g: Array[Float], w: Array[Float],
       gx: Array[Float], need: Array[Boolean], gw: Array[Float], gb: Array[Float],
       r0: Int, r1: Int): Unit = {
@@ -469,6 +501,406 @@ final class MaskedLinear(val nIn: Int, val nOut: Int,
   }
 
   def params: Seq[Param] = Seq(weight, bias)
+}
+
+/** Which (input, output) pairs of an [nIn, nOut] mask are connected, laid
+  * out for kernels that visit only those pairs (see [[MaskedLinear]]).
+  *
+  * Outputs that share one set of connected inputs form an output group;
+  * inputs that share one set of connected outputs form an input group.
+  * Each group keeps its members and its connected set in ascending order,
+  * and marks a connected set that is one contiguous run, which the
+  * kernels then walk by index arithmetic. In a MADE, the hidden units of
+  * one degree form a group, and so do a column's one-hot input slice and
+  * its output head; the inputs of the first and the direct-io layer are
+  * column-sorted, so each output group's connected inputs there are a
+  * prefix, and the heads are contiguous, so each input group's connected
+  * outputs in the last two layers are a suffix. Only the cyclic hidden
+  * degrees of a ResMADE need index lists.
+  *
+  * Each kernel adds, per output (forward), weight (weight gradient) or
+  * input (input gradient), the terms of the dense kernel minus the masked
+  * ones, in the dense kernel's order.
+  */
+private[nn] final class MaskPlan private (val mask: Array[Float],
+    nIn: Int, nOut: Int,
+    /** Connected (input, output) pairs: one row's MACs in each kernel
+      * without the padding below. */
+    val pairs: Int,
+    /** Members of each output group, padded to a multiple of 8 by
+      * repeating the last (a repeated output computes and stores its own
+      * value again), and its connected inputs. */
+    outs: Array[Array[Int]], outIns: Array[Array[Int]], outInsRun: Array[Boolean],
+    /** Members of each input group, padded the same way to a multiple of
+      * 4, and its connected outputs. */
+    ins: Array[Array[Int]], inOuts: Array[Array[Int]], inOutsRun: Array[Boolean]) {
+
+  /** The connected weights of `w` in the forward's visiting order: per
+    * output group, each 8-output tile's weights input by input, 8 floats
+    * an input. */
+  def packForward(w: Array[Float]): Array[Float] = {
+    var size = 0
+    var gi = 0
+    while (gi < outs.length) { size += outs(gi).length * outIns(gi).length; gi += 1 }
+    val wp = new Array[Float](size)
+    var p = 0
+    gi = 0
+    while (gi < outs.length) {
+      val os = outs(gi); val ci = outIns(gi)
+      var t = 0
+      while (t < os.length) {
+        var j = 0
+        while (j < ci.length) {
+          val wi = ci(j) * nOut
+          var k = 0
+          while (k < 8) { wp(p) = w(wi + os(t + k)); p += 1; k += 1 }
+          j += 1
+        }
+        t += 8
+      }
+      gi += 1
+    }
+    wp
+  }
+
+  /** Rows `ra` and `rb` (`rb == ra` for an odd last row) of the forward,
+    * from the packed weights `wp` ([[packForward]]). Within an output
+    * group, 2 rows × 8 outputs stay in 16 registers for the walk over the
+    * group's connected inputs, in ascending order. */
+  def forwardRows(x: Array[Float], wp: Array[Float], bd: Array[Float],
+      out: Array[Float], ra: Int, rb: Int): Unit = {
+    val xa = ra * nIn; val xb = rb * nIn
+    val oa = ra * nOut; val ob = rb * nOut
+    var p = 0
+    var gi = 0
+    while (gi < outs.length) {
+      val os = outs(gi); val ci = outIns(gi)
+      val n = ci.length
+      val idx = if (outInsRun(gi)) null else ci
+      val lo = if (n == 0) 0 else ci(0)
+      var t = 0
+      while (t < os.length) {
+        val o0 = os(t); val o1 = os(t + 1); val o2 = os(t + 2); val o3 = os(t + 3)
+        val o4 = os(t + 4); val o5 = os(t + 5); val o6 = os(t + 6); val o7 = os(t + 7)
+        var a0 = bd(o0); var a1 = bd(o1); var a2 = bd(o2); var a3 = bd(o3)
+        var a4 = bd(o4); var a5 = bd(o5); var a6 = bd(o6); var a7 = bd(o7)
+        var c0 = a0; var c1 = a1; var c2 = a2; var c3 = a3
+        var c4 = a4; var c5 = a5; var c6 = a6; var c7 = a7
+        var j = 0
+        while (j < n) {
+          val i = if (idx == null) lo + j else idx(j)
+          val u = x(xa + i); val v = x(xb + i)
+          val w0 = wp(p); val w1 = wp(p + 1); val w2 = wp(p + 2); val w3 = wp(p + 3)
+          val w4 = wp(p + 4); val w5 = wp(p + 5); val w6 = wp(p + 6); val w7 = wp(p + 7)
+          a0 += u * w0; a1 += u * w1; a2 += u * w2; a3 += u * w3
+          a4 += u * w4; a5 += u * w5; a6 += u * w6; a7 += u * w7
+          c0 += v * w0; c1 += v * w1; c2 += v * w2; c3 += v * w3
+          c4 += v * w4; c5 += v * w5; c6 += v * w6; c7 += v * w7
+          p += 8
+          j += 1
+        }
+        out(oa + o0) = a0; out(oa + o1) = a1; out(oa + o2) = a2; out(oa + o3) = a3
+        out(oa + o4) = a4; out(oa + o5) = a5; out(oa + o6) = a6; out(oa + o7) = a7
+        out(ob + o0) = c0; out(ob + o1) = c1; out(ob + o2) = c2; out(ob + o3) = c3
+        out(ob + o4) = c4; out(ob + o5) = c5; out(ob + o6) = c6; out(ob + o7) = c7
+        t += 8
+      }
+      gi += 1
+    }
+  }
+
+  /** [[forwardRows]] reading the connected weights in place, for a step
+    * over fewer rows than repay [[packForward]] (the sampler's forwards
+    * carry a median of 1 row). */
+  def forwardRowsInPlace(x: Array[Float], w: Array[Float], bd: Array[Float],
+      out: Array[Float], ra: Int, rb: Int): Unit = {
+    val xa = ra * nIn; val xb = rb * nIn
+    val oa = ra * nOut; val ob = rb * nOut
+    var gi = 0
+    while (gi < outs.length) {
+      val os = outs(gi); val ci = outIns(gi)
+      var t = 0
+      while (t < os.length) {
+        val o0 = os(t); val o1 = os(t + 1); val o2 = os(t + 2); val o3 = os(t + 3)
+        val o4 = os(t + 4); val o5 = os(t + 5); val o6 = os(t + 6); val o7 = os(t + 7)
+        var a0 = bd(o0); var a1 = bd(o1); var a2 = bd(o2); var a3 = bd(o3)
+        var a4 = bd(o4); var a5 = bd(o5); var a6 = bd(o6); var a7 = bd(o7)
+        var c0 = a0; var c1 = a1; var c2 = a2; var c3 = a3
+        var c4 = a4; var c5 = a5; var c6 = a6; var c7 = a7
+        var j = 0
+        while (j < ci.length) {
+          val i = ci(j)
+          val u = x(xa + i); val v = x(xb + i)
+          val wi = i * nOut
+          val w0 = w(wi + o0); val w1 = w(wi + o1); val w2 = w(wi + o2); val w3 = w(wi + o3)
+          val w4 = w(wi + o4); val w5 = w(wi + o5); val w6 = w(wi + o6); val w7 = w(wi + o7)
+          a0 += u * w0; a1 += u * w1; a2 += u * w2; a3 += u * w3
+          a4 += u * w4; a5 += u * w5; a6 += u * w6; a7 += u * w7
+          c0 += v * w0; c1 += v * w1; c2 += v * w2; c3 += v * w3
+          c4 += v * w4; c5 += v * w5; c6 += v * w6; c7 += v * w7
+          j += 1
+        }
+        out(oa + o0) = a0; out(oa + o1) = a1; out(oa + o2) = a2; out(oa + o3) = a3
+        out(oa + o4) = a4; out(oa + o5) = a5; out(oa + o6) = a6; out(oa + o7) = a7
+        out(ob + o0) = c0; out(ob + o1) = c1; out(ob + o2) = c2; out(ob + o3) = c3
+        out(ob + o4) = c4; out(ob + o5) = c5; out(ob + o6) = c6; out(ob + o7) = c7
+        t += 8
+      }
+      gi += 1
+    }
+  }
+
+  /** Weight gradients of rows `[r0, r1)` added into `gw`, each in row
+    * order. Rows where an input is 0 add nothing (as in the dense
+    * kernel), so each input first lists its nonzero rows; then every
+    * (connected input, 8-output tile) pair adds its rows in 8 registers. */
+  def weightGrads(x: Array[Float], g: Array[Float], gw: Array[Float],
+      r0: Int, r1: Int): Unit = {
+    val nr = r1 - r0
+    // Input i's nonzero rows and their values at [i·nr, i·nr + cnt(i)).
+    val rows = new Array[Int](nIn * nr)
+    val vals = new Array[Float](nIn * nr)
+    val cnt = new Array[Int](nIn)
+    var r = r0
+    while (r < r1) {
+      val xo = r * nIn
+      var i = 0
+      while (i < nIn) {
+        val xv = x(xo + i)
+        if (xv != 0f) {
+          val k = i * nr + cnt(i)
+          rows(k) = r; vals(k) = xv; cnt(i) += 1
+        }
+        i += 1
+      }
+      r += 1
+    }
+    var gi = 0
+    while (gi < outs.length) {
+      val os = outs(gi); val ci = outIns(gi)
+      var t = 0
+      while (t < os.length) {
+        val o0 = os(t); val o1 = os(t + 1); val o2 = os(t + 2); val o3 = os(t + 3)
+        val o4 = os(t + 4); val o5 = os(t + 5); val o6 = os(t + 6); val o7 = os(t + 7)
+        var j = 0
+        while (j < ci.length) {
+          val i = ci(j)
+          val wi = i * nOut
+          var a0 = gw(wi + o0); var a1 = gw(wi + o1); var a2 = gw(wi + o2); var a3 = gw(wi + o3)
+          var a4 = gw(wi + o4); var a5 = gw(wi + o5); var a6 = gw(wi + o6); var a7 = gw(wi + o7)
+          var k = i * nr
+          val end = k + cnt(i)
+          while (k < end) {
+            val go = rows(k) * nOut; val xv = vals(k)
+            a0 += g(go + o0) * xv; a1 += g(go + o1) * xv; a2 += g(go + o2) * xv; a3 += g(go + o3) * xv
+            a4 += g(go + o4) * xv; a5 += g(go + o5) * xv; a6 += g(go + o6) * xv; a7 += g(go + o7) * xv
+            k += 1
+          }
+          gw(wi + o0) = a0; gw(wi + o1) = a1; gw(wi + o2) = a2; gw(wi + o3) = a3
+          gw(wi + o4) = a4; gw(wi + o5) = a5; gw(wi + o6) = a6; gw(wi + o7) = a7
+          j += 1
+        }
+        t += 8
+      }
+      gi += 1
+    }
+  }
+
+  /** The connected weights of `w` in the input gradients' visiting order:
+    * per input group, each 4-input tile's weights output by output, 4
+    * floats an output. */
+  def packInput(w: Array[Float]): Array[Float] = {
+    var size = 0
+    var gi = 0
+    while (gi < ins.length) { size += ins(gi).length * inOuts(gi).length; gi += 1 }
+    val wq = new Array[Float](size)
+    var p = 0
+    gi = 0
+    while (gi < ins.length) {
+      val is = ins(gi); val co = inOuts(gi)
+      var t = 0
+      while (t < is.length) {
+        var j = 0
+        while (j < co.length) {
+          var k = 0
+          while (k < 4) { wq(p) = w(is(t + k) * nOut + co(j)); p += 1; k += 1 }
+          j += 1
+        }
+        t += 4
+      }
+      gi += 1
+    }
+    wq
+  }
+
+  /** Input gradients of rows `[r0, r1)`, from the packed weights `wq`
+    * ([[packInput]]): each is `Σ_o g_o·w_io` over its connected outputs in
+    * ascending `o`, written where `need` (null = all) marks it. Within an
+    * input group, tiles of 4 inputs run 4 rows at a time over the rows
+    * that need any of them (a short last set repeats its last row). */
+  def inputGrads(g: Array[Float], wq: Array[Float], gx: Array[Float],
+      need: Array[Boolean], r0: Int, r1: Int): Unit = {
+    var p = 0
+    var gi = 0
+    while (gi < ins.length) {
+      val is = ins(gi)
+      val n = inOuts(gi).length
+      var t = 0
+      while (t < is.length) {
+        val i0 = is(t); val i1 = is(t + 1); val i2 = is(t + 2); val i3 = is(t + 3)
+        var ra = -1; var rb = -1; var rc = -1
+        var r = r0
+        while (r < r1) {
+          val xo = r * nIn
+          if (need == null || need(xo + i0) || need(xo + i1) || need(xo + i2) || need(xo + i3)) {
+            if (ra < 0) ra = r
+            else if (rb < 0) rb = r
+            else if (rc < 0) rc = r
+            else {
+              inputTile(g, wq, p, gi, gx, need, ra, rb, rc, r, i0, i1, i2, i3)
+              ra = -1; rb = -1; rc = -1
+            }
+          }
+          r += 1
+        }
+        if (rc >= 0) inputTile(g, wq, p, gi, gx, need, ra, rb, rc, rc, i0, i1, i2, i3)
+        else if (rb >= 0) inputTile(g, wq, p, gi, gx, need, ra, rb, rb, rb, i0, i1, i2, i3)
+        else if (ra >= 0) inputTile(g, wq, p, gi, gx, need, ra, ra, ra, ra, i0, i1, i2, i3)
+        p += 4 * n
+        t += 4
+      }
+      gi += 1
+    }
+  }
+
+  /** Rows `ra..rd` × inputs `i0..i3` of input group `gi`, whose packed
+    * weights start at `wq(p)`. */
+  private def inputTile(g: Array[Float], wq: Array[Float], p: Int, gi: Int,
+      gx: Array[Float], need: Array[Boolean], ra: Int, rb: Int, rc: Int, rd: Int,
+      i0: Int, i1: Int, i2: Int, i3: Int): Unit = {
+    val co = inOuts(gi)
+    val n = co.length
+    val idx = if (inOutsRun(gi)) null else co
+    val lo = if (n == 0) 0 else co(0)
+    val ga = ra * nOut; val gb = rb * nOut; val gc = rc * nOut; val gd = rd * nOut
+    var a0 = 0f; var a1 = 0f; var a2 = 0f; var a3 = 0f
+    var b0 = 0f; var b1 = 0f; var b2 = 0f; var b3 = 0f
+    var c0 = 0f; var c1 = 0f; var c2 = 0f; var c3 = 0f
+    var d0 = 0f; var d1 = 0f; var d2 = 0f; var d3 = 0f
+    var k = p
+    var j = 0
+    while (j < n) {
+      val o = if (idx == null) lo + j else idx(j)
+      val ua = g(ga + o); val ub = g(gb + o); val uc = g(gc + o); val ud = g(gd + o)
+      val v0 = wq(k); val v1 = wq(k + 1); val v2 = wq(k + 2); val v3 = wq(k + 3)
+      a0 += ua * v0; a1 += ua * v1; a2 += ua * v2; a3 += ua * v3
+      b0 += ub * v0; b1 += ub * v1; b2 += ub * v2; b3 += ub * v3
+      c0 += uc * v0; c1 += uc * v1; c2 += uc * v2; c3 += uc * v3
+      d0 += ud * v0; d1 += ud * v1; d2 += ud * v2; d3 += ud * v3
+      k += 4
+      j += 1
+    }
+    store(gx, need, ra * nIn, i0, i1, i2, i3, a0, a1, a2, a3)
+    store(gx, need, rb * nIn, i0, i1, i2, i3, b0, b1, b2, b3)
+    store(gx, need, rc * nIn, i0, i1, i2, i3, c0, c1, c2, c3)
+    store(gx, need, rd * nIn, i0, i1, i2, i3, d0, d1, d2, d3)
+  }
+
+  private def store(gx: Array[Float], need: Array[Boolean], xo: Int,
+      i0: Int, i1: Int, i2: Int, i3: Int, v0: Float, v1: Float, v2: Float, v3: Float): Unit = {
+    if (need == null || need(xo + i0)) gx(xo + i0) = v0
+    if (need == null || need(xo + i1)) gx(xo + i1) = v1
+    if (need == null || need(xo + i2)) gx(xo + i2) = v2
+    if (need == null || need(xo + i3)) gx(xo + i3) = v3
+  }
+}
+
+private[nn] object MaskPlan {
+  /** Steps over fewer rows read the forward's weights in place. */
+  val PackRows = 8
+
+  /** The plan of `mask`, in O(nIn·nOut): one pass hashes every output's
+    * and every input's connected set, and members of a group are checked
+    * against its first member, so a hash collision only splits a group. */
+  def apply(mask: Array[Float], nIn: Int, nOut: Int): MaskPlan = {
+    val hOut = new Array[Long](nOut)
+    val hIn = new Array[Long](nIn)
+    var pairs = 0
+    var i = 0
+    while (i < nIn) {
+      var o = 0
+      while (o < nOut) {
+        if (mask(i * nOut + o) != 0f) {
+          pairs += 1
+          hOut(o) = hOut(o) * 0x9E3779B97F4A7C15L + i + 1
+          hIn(i) = hIn(i) * 0x9E3779B97F4A7C15L + o + 1
+        }
+        o += 1
+      }
+      i += 1
+    }
+    def on(i: Int, o: Int): Boolean = mask(i * nOut + o) != 0f
+    val (outs, outIns, outRun) = groups(hOut, nIn, 8,
+      (a, b) => { var i = 0; while (i < nIn && on(i, a) == on(i, b)) i += 1; i == nIn },
+      on(_, _))
+    val (ins, inOuts, inRun) = groups(hIn, nOut, 4,
+      (a, b) => { var o = 0; while (o < nOut && on(a, o) == on(b, o)) o += 1; o == nOut },
+      (i, o) => on(o, i))
+    new MaskPlan(mask, nIn, nOut, pairs, outs, outIns, outRun, ins, inOuts, inRun)
+  }
+
+  /** Groups the units `0 until h.length` by their connected sets over
+    * `0 until other`: `same(a, b)` compares two units' sets and
+    * `conn(k, u)` says whether `k` is in unit `u`'s set. Returns each
+    * group's members, padded to a multiple of `tile` by repeating the
+    * last, its connected set and whether that set is a run. */
+  private def groups(h: Array[Long], other: Int, tile: Int, same: (Int, Int) => Boolean,
+      conn: (Int, Int) => Boolean): (Array[Array[Int]], Array[Array[Int]], Array[Boolean]) = {
+    val n = h.length
+    // Hash in the high half, unit in the low half: sorting puts each
+    // hash's units together, ascending.
+    val keys = new Array[Long](n)
+    var u = 0
+    while (u < n) {
+      var z = h(u)
+      z = (z ^ (z >>> 33)) * 0xFF51AFD7ED558CCDL
+      z = (z ^ (z >>> 33)) * 0xC4CEB9FE1A85EC53L
+      keys(u) = (z & 0xFFFFFFFF00000000L) | u
+      u += 1
+    }
+    java.util.Arrays.sort(keys)
+    val members = scala.collection.mutable.ArrayBuffer[Array[Int]]()
+    var s = 0
+    while (s < n) {
+      val rep = keys(s).toInt
+      var e = s + 1
+      while (e < n && (keys(e) >>> 32) == (keys(s) >>> 32) && same(rep, keys(e).toInt)) e += 1
+      val padded = (e - s + tile - 1) / tile * tile
+      members += Array.tabulate(padded)(k => keys(s + math.min(k, e - s - 1)).toInt)
+      s = e
+    }
+    val sets = members.map { m =>
+      val rep = m(0)
+      val buf = new Array[Int](other)
+      var c = 0
+      var k = 0
+      while (k < other) { if (conn(k, rep)) { buf(c) = k; c += 1 }; k += 1 }
+      java.util.Arrays.copyOf(buf, c)
+    }.toArray
+    val runs = sets.map(c => c.isEmpty || c(c.length - 1) - c(0) == c.length - 1)
+    (members.toArray, sets, runs)
+  }
+
+  /** Bias gradients of rows `[r0, r1)`, each added in row order. */
+  def biasGrads(g: Array[Float], gb: Array[Float], nOut: Int, r0: Int, r1: Int): Unit = {
+    var r = r0
+    while (r < r1) {
+      val oo = r * nOut
+      var o = 0
+      while (o < nOut) { gb(o) += g(oo + o); o += 1 }
+      r += 1
+    }
+  }
 }
 
 final class ReLU(val dim: Int) extends Layer {

@@ -187,7 +187,7 @@ object ApproxCountRule {
     * redundant pattern-matching. */
   def attachIfMissing(spark: SparkSession): Unit = {
     val present =
-      spark.conf.getOption(GraftRuntime.AttachedKey).contains("true") ||
+      spark.conf.get(GraftRuntime.AttachedKey, "false") == "true" ||
         spark.experimental.extraOptimizations
           .exists(_.isInstanceOf[ApproxCountRule])
     if (!present) {
@@ -212,7 +212,7 @@ case class ApproxCountRule(spark: SparkSession) extends Rule[LogicalPlan] {
   private val maxTotalProbes = 4096L
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (!spark.conf.getOption(GraftRuntime.EnabledKey).contains("true") ||
+    if (spark.conf.get(GraftRuntime.EnabledKey, "false") != "true" ||
         ApproxCountRule.inEstimate.get()) plan
     else plan.transformUp {
       case agg: Aggregate => rewrite(agg).getOrElse(agg)
@@ -1296,7 +1296,7 @@ object EstimatedStatsRule {
     * placement contract holds on this path too. */
   def attachIfMissing(spark: SparkSession): Unit = {
     val present =
-      spark.conf.getOption(AttachedKey).contains("true") ||
+      spark.conf.get(AttachedKey, "false") == "true" ||
         spark.experimental.extraOptimizations
           .exists(_.isInstanceOf[EstimatedStatsRule])
     if (!present) {
@@ -1351,7 +1351,7 @@ case class EstimatedStatsRule(spark: SparkSession) extends Rule[LogicalPlan] {
   import org.apache.spark.sql.graft.StatsAnnotated
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (!spark.conf.getOption(EstimatedStatsRule.EnabledKey).contains("true") ||
+    if (spark.conf.get(EstimatedStatsRule.EnabledKey, "false") != "true" ||
         ApproxCountRule.inEstimate.get()) plan
     else plan.transformUp {
       // Collapse a stale annotation around a freshly re-wrapped filter
