@@ -12120,16 +12120,9 @@ ORDER BY query_id, grp, metric"""
           s"SELECT count(*) FROM lineitem WHERE ${Pred.whereSql(q)}")
         // r18 (VERDICT r17 #8): the 200 front-end parses are
         // independent driver-side pure functions (SparkSqlParser is
-        // stateless per call) — fan them across the default pool;
-        // sequential they were a third of this gate's wall-clock.
-        val parsed = {
-          import scala.concurrent.{Await, Future}
-          import scala.concurrent.ExecutionContext.Implicits.global
-          Await.result(
-            Future.traverse(sqlTexts.toList)(t =>
-              Future(graft.query.SqlFront.parse(s, t))),
-            scala.concurrent.duration.Duration.Inf)
-        }
+        // stateless per call) — fan them out; sequential they were a
+        // third of this gate's wall-clock.
+        val parsed = Fanout.map(sqlTexts)(t => graft.query.SqlFront.parse(s, t))
         val nParse = corpus.zip(parsed).count { case (q, (t, ps)) =>
           t == "lineitem" && ps == q }
         val df = li(s, d)
@@ -13500,15 +13493,11 @@ ORDER BY mode""")),
         // scan's straggler tail with the next scan's tasks (results
         // merged by alias name, values unchanged).
         val sel: Map[String, Long] = trace("flatAgg") {
-          import scala.concurrent.{Await, Future}
-          import scala.concurrent.ExecutionContext.Implicits.global
-          Await.result(
-            Future.traverse(flat.grouped(64).toList) { chunk => Future {
-              val row = df.agg(chunk.head, chunk.tail: _*).collect()(0)
-              chunk.indices.map(i =>
-                row.schema.fieldNames(i) -> row.getLong(i))
-            }},
-            scala.concurrent.duration.Duration.Inf).flatten.toMap
+          Fanout.map(flat.grouped(64).toSeq) { chunk =>
+            val row = df.agg(chunk.head, chunk.tail: _*).collect()(0)
+            chunk.indices.map(i =>
+              row.schema.fieldNames(i) -> row.getLong(i))
+          }.flatten.toMap
         }
         val ns = sel("ns").toDouble
         val truths = qs.indices.map(qi => sel(s"q${qi}_t"))

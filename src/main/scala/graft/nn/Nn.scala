@@ -24,13 +24,18 @@ package graft.nn
   * after the join, so the trained bits are those of a step that forks
   * layer by layer.
   *
-  * A masked layer (MADE's) visits only the (input, output) pairs its mask
-  * connects, through a [[MaskPlan]] derived from the mask: output groups
-  * with one connected-input set feed the forward and the weight
-  * gradients, input groups with one connected-output set the input
-  * gradients. The skipped terms would each have added x·0 = ±0 to a
-  * partial sum that is never −0, so the bits are those of the dense
-  * kernels; about half of the benchmark ResMADE's multiply-adds go.
+  * Every kernel is register-tiled and keeps a one-row loop's summation
+  * order, so its bits are that loop's. A dense layer (the Transformer's)
+  * runs 2-row × 8-output forward tiles, (input pair × 8-output) weight-
+  * gradient tiles over its rows, and 2-row × 8-input input-gradient tiles
+  * over a transposed copy of the weights. A masked layer (MADE's) visits
+  * only the (input, output) pairs its mask connects, through a
+  * [[MaskPlan]] derived from the mask: output groups with one
+  * connected-input set feed the forward and the weight gradients, input
+  * groups with one connected-output set the input gradients. The skipped
+  * terms would each have added x·0 = ±0 to a partial sum that is never
+  * −0, so the bits are those of the dense kernels; about half of the
+  * benchmark ResMADE's multiply-adds go.
   *
   * Scale posture: the 100 TB path never moves raw data to the driver —
   * only encoded minibatches (bounded) flow in and model weights (MBs)
@@ -257,8 +262,9 @@ private[nn] object Arena {
   * x·0 = ±0 (finite x) to a partial sum that starts at the +0 bias or
   * buffer and so is never −0, leaving it unchanged: the plan kernels give
   * the bits of the dense ones, in the same summation order. Masked
-  * weight-gradient entries read 0 after every backward, as before. The
-  * dense kernels (`mask = null`) are unchanged.
+  * weight-gradient entries read 0 after every backward, as before. A
+  * dense layer (`mask = null`) runs [[forwardRows]], [[weightGrads]] and
+  * [[inputGrads]].
   */
 final class MaskedLinear(val nIn: Int, val nOut: Int,
     val preserveWeights: Boolean = false) extends Layer {
@@ -426,14 +432,16 @@ final class MaskedLinear(val nIn: Int, val nOut: Int,
     require(own == 1 || own == chunks, s"$own row ranges of a layer vs $chunks of its step")
     val gws = if (own > 1) Array.fill(own)(new Array[Float](weight.grad.length)) else null
     val gbs = if (own > 1) Array.fill(own)(new Array[Float](bias.grad.length)) else null
-    val wq = if (p == null) null else p.packInput(w)
-    def range(gx: Array[Float], gw: Array[Float], gb: Array[Float], r0: Int, r1: Int): Unit =
-      if (p == null) backwardRange(x, g, w, gx, need, gw, gb, r0, r1)
-      else {
-        if (gb != null) MaskPlan.biasGrads(g, gb, nOut, r0, r1)
-        if (gw != null) p.weightGrads(x, g, gw, r0, r1)
-        if (gx != null) p.inputGrads(g, wq, gx, need, r0, r1)
+    val wq = if (p == null) transposed(w) else p.packInput(w)
+    def range(gx: Array[Float], gw: Array[Float], gb: Array[Float], r0: Int, r1: Int): Unit = {
+      if (gb != null) MaskPlan.biasGrads(g, gb, nOut, r0, r1)
+      if (gw != null) {
+        if (p == null) weightGrads(x, g, gw, r0, r1) else p.weightGrads(x, g, gw, r0, r1)
       }
+      if (gx != null) {
+        if (p == null) inputGrads(g, wq, gx, need, r0, r1) else p.inputGrads(g, wq, gx, need, r0, r1)
+      }
+    }
     new RowGrad(gxBuf) {
       def rows(c: Int, r0: Int, r1: Int): Unit =
         if (own > 1) range(gx, gws(c), gbs(c), r0, r1)
@@ -462,43 +470,144 @@ final class MaskedLinear(val nIn: Int, val nOut: Int,
     }
   }
 
-  /** Rows `[r0, r1)` of the dense backward: bias and weight grads
-    * accumulate into `gb`/`gw` in row order; each input grad is
-    * `Σ_o g_o·w_io` in ascending `o`. `gw == null` computes the input
-    * grads only, `gx == null` the parameter grads only, and `need` (null =
-    * all) limits the input grads to its entries. A zero input adds
-    * nothing to `gw`: a weight grad that starts at +0 is never −0, so
-    * adding x·g = ±0 (finite g) leaves its bits as they are. */
-  private def backwardRange(x: Array[Float], g: Array[Float], w: Array[Float],
-      gx: Array[Float], need: Array[Boolean], gw: Array[Float], gb: Array[Float],
+  /** Weight gradients of rows `[r0, r1)` of the dense backward, added
+    * into `gw`: each (input pair, 8-output tile) keeps its 16 entries in
+    * registers over the rows ([[weightTile]]), an odd last input pairs
+    * with itself, and outputs past the last full tile take 2 inputs × 1
+    * output. Every entry adds its rows' x·g in row order, as a one-row
+    * loop does. That loop skipped a zero input, and these tiles add its
+    * x·g = ±0 instead: an entry that starts at +0 (or at a finite partial
+    * sum) is never −0, so for finite `g` the bits are the same. */
+  private def weightGrads(x: Array[Float], g: Array[Float], gw: Array[Float],
       r0: Int, r1: Int): Unit = {
-    var r = r0
-    while (r < r1) {
-      val xo = r * nIn; val oo = r * nOut
+    var i = 0
+    while (i < nIn) {
+      val j = if (i + 1 < nIn) i + 1 else i
       var o = 0
-      if (gb != null) while (o < nOut) { gb(o) += g(oo + o); o += 1 }
-      var i = 0
-      while (i < nIn) {
-        val wo = i * nOut
-        val xv = x(xo + i)
-        val toX = gx != null && (need == null || need(xo + i))
-        val toW = gw != null && xv != 0f
-        o = 0
-        if (toX) {
-          var acc = 0f
-          if (toW) while (o < nOut) {
-            val gv = g(oo + o)
-            gw(wo + o) += gv * xv
-            acc += gv * w(wo + o)
-            o += 1
-          } else while (o < nOut) { acc += g(oo + o) * w(wo + o); o += 1 }
-          gx(xo + i) = acc
-        } else if (toW) while (o < nOut) { gw(wo + o) += g(oo + o) * xv; o += 1 }
-        i += 1
+      while (o + 8 <= nOut) { weightTile(x, g, gw, i, j, o, r0, r1); o += 8 }
+      while (o < nOut) { // output tail: 2 inputs × 1 output
+        var a = gw(i * nOut + o); var c = gw(j * nOut + o)
+        var r = r0
+        while (r < r1) {
+          val gv = g(r * nOut + o)
+          a += gv * x(r * nIn + i); c += gv * x(r * nIn + j)
+          r += 1
+        }
+        gw(i * nOut + o) = a; gw(j * nOut + o) = c
+        o += 1
       }
-      r += 1
+      i += 2
     }
   }
+
+  /** Weight-gradient entries of inputs `i` and `j` (`j == i` for an odd
+    * last input) × outputs `[o, o + 8)`, over rows `[r0, r1)`. */
+  private def weightTile(x: Array[Float], g: Array[Float], gw: Array[Float],
+      i: Int, j: Int, o: Int, r0: Int, r1: Int): Unit = {
+    val wa = i * nOut + o; val wb = j * nOut + o
+    var a0 = gw(wa); var a1 = gw(wa + 1); var a2 = gw(wa + 2); var a3 = gw(wa + 3)
+    var a4 = gw(wa + 4); var a5 = gw(wa + 5); var a6 = gw(wa + 6); var a7 = gw(wa + 7)
+    var c0 = gw(wb); var c1 = gw(wb + 1); var c2 = gw(wb + 2); var c3 = gw(wb + 3)
+    var c4 = gw(wb + 4); var c5 = gw(wb + 5); var c6 = gw(wb + 6); var c7 = gw(wb + 7)
+    var xo = r0 * nIn
+    var go = r0 * nOut + o
+    var r = r0
+    while (r < r1) {
+      val u = x(xo + i); val v = x(xo + j)
+      val g0 = g(go); val g1 = g(go + 1); val g2 = g(go + 2); val g3 = g(go + 3)
+      val g4 = g(go + 4); val g5 = g(go + 5); val g6 = g(go + 6); val g7 = g(go + 7)
+      a0 += g0 * u; a1 += g1 * u; a2 += g2 * u; a3 += g3 * u
+      a4 += g4 * u; a5 += g5 * u; a6 += g6 * u; a7 += g7 * u
+      c0 += g0 * v; c1 += g1 * v; c2 += g2 * v; c3 += g3 * v
+      c4 += g4 * v; c5 += g5 * v; c6 += g6 * v; c7 += g7 * v
+      xo += nIn
+      go += nOut
+      r += 1
+    }
+    gw(wa) = a0; gw(wa + 1) = a1; gw(wa + 2) = a2; gw(wa + 3) = a3
+    gw(wa + 4) = a4; gw(wa + 5) = a5; gw(wa + 6) = a6; gw(wa + 7) = a7
+    gw(wb) = c0; gw(wb + 1) = c1; gw(wb + 2) = c2; gw(wb + 3) = c3
+    gw(wb + 4) = c4; gw(wb + 5) = c5; gw(wb + 6) = c6; gw(wb + 7) = c7
+  }
+
+  /** `w` transposed to [nOut, nIn], the dense input gradients' reading
+    * order: output `o`'s weights from every input are contiguous. */
+  private def transposed(w: Array[Float]): Array[Float] = {
+    val wt = new Array[Float](w.length)
+    var i = 0
+    while (i < nIn) {
+      var o = 0
+      while (o < nOut) { wt(o * nIn + i) = w(i * nOut + o); o += 1 }
+      i += 1
+    }
+    wt
+  }
+
+  /** Input gradients of rows `[r0, r1)` of the dense backward, from the
+    * transposed weights `wt`, a row pair at a time ([[inputRows]]; an odd
+    * last row pairs with itself). `need` (null = all) marks the entries
+    * to write; the others keep the buffer's 0. */
+  private def inputGrads(g: Array[Float], wt: Array[Float], gx: Array[Float],
+      need: Array[Boolean], r0: Int, r1: Int): Unit = {
+    var r = r0
+    while (r + 1 < r1) { inputRows(g, wt, gx, need, r, r + 1); r += 2 }
+    if (r < r1) inputRows(g, wt, gx, need, r, r)
+  }
+
+  /** Input gradients of rows `ra` and `rb`: 2 rows × 8 inputs stay in 16
+    * registers over the outputs, then a 2-row × 1-input tail. Each is
+    * `Σ_o g_o·w_io` from +0 in ascending `o`, a one-row dot product's
+    * order. */
+  private def inputRows(g: Array[Float], wt: Array[Float], gx: Array[Float],
+      need: Array[Boolean], ra: Int, rb: Int): Unit = {
+    val ga = ra * nOut; val gb = rb * nOut
+    val xa = ra * nIn; val xb = rb * nIn
+    var i = 0
+    while (i + 8 <= nIn) {
+      var a0 = 0f; var a1 = 0f; var a2 = 0f; var a3 = 0f
+      var a4 = 0f; var a5 = 0f; var a6 = 0f; var a7 = 0f
+      var c0 = 0f; var c1 = 0f; var c2 = 0f; var c3 = 0f
+      var c4 = 0f; var c5 = 0f; var c6 = 0f; var c7 = 0f
+      var o = 0
+      var wi = i
+      while (o < nOut) {
+        val u = g(ga + o); val v = g(gb + o)
+        val w0 = wt(wi); val w1 = wt(wi + 1); val w2 = wt(wi + 2); val w3 = wt(wi + 3)
+        val w4 = wt(wi + 4); val w5 = wt(wi + 5); val w6 = wt(wi + 6); val w7 = wt(wi + 7)
+        a0 += u * w0; a1 += u * w1; a2 += u * w2; a3 += u * w3
+        a4 += u * w4; a5 += u * w5; a6 += u * w6; a7 += u * w7
+        c0 += v * w0; c1 += v * w1; c2 += v * w2; c3 += v * w3
+        c4 += v * w4; c5 += v * w5; c6 += v * w6; c7 += v * w7
+        wi += nIn
+        o += 1
+      }
+      put(gx, need, xa + i, a0); put(gx, need, xa + i + 1, a1)
+      put(gx, need, xa + i + 2, a2); put(gx, need, xa + i + 3, a3)
+      put(gx, need, xa + i + 4, a4); put(gx, need, xa + i + 5, a5)
+      put(gx, need, xa + i + 6, a6); put(gx, need, xa + i + 7, a7)
+      put(gx, need, xb + i, c0); put(gx, need, xb + i + 1, c1)
+      put(gx, need, xb + i + 2, c2); put(gx, need, xb + i + 3, c3)
+      put(gx, need, xb + i + 4, c4); put(gx, need, xb + i + 5, c5)
+      put(gx, need, xb + i + 6, c6); put(gx, need, xb + i + 7, c7)
+      i += 8
+    }
+    while (i < nIn) { // input tail: 2 rows × 1 input
+      var a = 0f; var c = 0f
+      var o = 0
+      var wi = i
+      while (o < nOut) {
+        val wv = wt(wi)
+        a += g(ga + o) * wv; c += g(gb + o) * wv
+        wi += nIn
+        o += 1
+      }
+      put(gx, need, xa + i, a); put(gx, need, xb + i, c)
+      i += 1
+    }
+  }
+
+  private def put(gx: Array[Float], need: Array[Boolean], k: Int, v: Float): Unit =
+    if (need == null || need(k)) gx(k) = v
 
   def params: Seq[Param] = Seq(weight, bias)
 }

@@ -136,19 +136,14 @@ object Workload {
   def trueCards(df: DataFrame, queries: Seq[Seq[Pred]]): Array[Long] = {
     require(queries.nonEmpty)
     if (queries.size > maxCountIfWidth) {
-      // r21 (guide §2.6 — overlap independent jobs): the per-chunk
-      // scans are independent actions; submitting them from driver
-      // threads lets chunk n+1's tasks back-fill the executor slots
-      // chunk n's straggler tail leaves idle. Result order is
-      // preserved by Future.traverse; values are unchanged (each chunk
-      // computes exactly what it did sequentially — the snapshot
-      // caveat above is no worse concurrent than chunked-sequential).
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      Await.result(
-        Future.traverse(queries.grouped(maxCountIfWidth).toList)(g =>
-          Future(trueCards(df, g))),
-        scala.concurrent.duration.Duration.Inf).flatten.toArray
+      // The per-chunk scans are independent actions; submitting them
+      // from driver threads lets chunk n+1's tasks back-fill the
+      // executor slots chunk n's straggler tail leaves idle. Results
+      // keep chunk order and each chunk computes exactly what it does
+      // sequentially (the snapshot caveat above is no worse concurrent
+      // than chunked-sequential).
+      graft.Fanout.map(queries.grouped(maxCountIfWidth).toSeq)(trueCards(df, _))
+        .flatten.toArray
     } else {
       val aggs = queries.zipWithIndex.map { case (q, i) =>
         sum(when(Pred.conj(q), 1L).otherwise(0L)).as(s"q$i")

@@ -15,7 +15,15 @@ it, the caller's samples inside the method are split into
 
 and every group is broken down by its innermost `graft` method (the
 first frame, from the top of the stack, whose class is in `--package`).
-The samples of the common pool's workers in the window follow. Record
+The samples of the common pool's workers in the window follow.
+
+Execution samples leave out a thread that is inside a JNI call, so a
+native method's time is missing from the tables above (JDK 17's
+`Math.tanh`, say, is the native `StrictMath.tanh`). The last table
+counts the window's `jdk.NativeMethodSample` events of the caller and
+the pool workers by innermost `graft` method and the native method on
+top. The two event kinds are sampled on different schedules: compare
+counts within a kind, not across. Record
 with enough stack depth to reach the method, e.g.
 `-XX:FlightRecorderOptions:stackdepth=128
 -XX:StartFlightRecording=settings=profile,filename=r.jfr`.
@@ -47,19 +55,21 @@ def instant(ts):
 
 
 def load(path, depth):
+    """(execution samples, native method samples), each a list of
+    (instant, thread name, frames from the top of the stack)."""
     out = subprocess.run(
         ["jfr", "print", "--json", "--stack-depth", str(depth),
-         "--events", "jdk.ExecutionSample", path],
+         "--events", "jdk.ExecutionSample,jdk.NativeMethodSample", path],
         check=True, capture_output=True, text=True).stdout
-    samples = []
+    samples = {"jdk.ExecutionSample": [], "jdk.NativeMethodSample": []}
     for e in json.loads(out)["recording"]["events"]:
         v = e["values"]
         thread = v.get("sampledThread") or {}
         name = thread.get("javaName") or thread.get("osName") or "?"
         trace = v.get("stackTrace") or {"frames": []}
         frames = [frame_name(f) for f in trace["frames"]]
-        samples.append((instant(v["startTime"]), name, frames))
-    return samples
+        samples[e["type"]].append((instant(v["startTime"]), name, frames))
+    return samples["jdk.ExecutionSample"], samples["jdk.NativeMethodSample"]
 
 
 def innermost(frames, package):
@@ -90,7 +100,7 @@ def main():
     ap.add_argument("--stack-depth", type=int, default=256)
     a = ap.parse_args()
 
-    samples = load(a.recording, a.stack_depth)
+    samples, natives = load(a.recording, a.stack_depth)
     inside = [s for s in samples if a.within in s[2]]
     if not inside:
         sys.exit(f"no sample has {a.within} on its stack")
@@ -120,6 +130,15 @@ def main():
     n_workers = len({s[1] for s in window if s[1].startswith(POOL_PREFIX)})
     print(f"pool workers ({n_workers} threads): {sum(workers.values())} samples")
     for name, k in workers.most_common(a.top):
+        print(f"  {k:6d}  {name}")
+
+    native = Counter(
+        f"{innermost(frames, a.package)} -> {frames[0] if frames else '?'}"
+        for t, name, frames in natives
+        if t0 <= t <= t1 and (name == caller or name.startswith(POOL_PREFIX)))
+    print(f"native method samples of these threads: {sum(native.values())} "
+          "(a thread in a JNI call, which execution samples leave out)")
+    for name, k in native.most_common(a.top):
         print(f"  {k:6d}  {name}")
 
 
